@@ -23,12 +23,6 @@ def sanitize_filename(col: Column) -> Column:
     return F.regexp_replace(col, r'[\\/:*?"<>|\x00-\x1f]', "")
 
 
-def filename_parts(*cols: Column) -> Column:
-    """`concat_ws('_')` with null-skipping (G8; reference builds
-    filenames from optional parts, src/lib/gtfs-to-geojson.ts:203-225)."""
-    return F.concat_ws("_", *cols)
-
-
 def yyyymmdd(ts: Column) -> Column:
     """Timestamp → fixed-width YYYYMMDD string; lexicographic compare is
     then order-equivalent to date compare (G12; reference compares

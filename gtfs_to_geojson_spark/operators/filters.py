@@ -5,15 +5,23 @@ direction_id, shape_id}`` through every table read
 (src/lib/gtfs-to-geojson.ts:122-127,149-151,192-196). Here that is a
 small composition of ``filter`` + broadcast left-semi joins built once
 and reused — Catalyst pushes the equality predicates into the scans.
+
+Route and shape output write one file per group. A group is a row of a
+small group table: ``GROUP`` (its index) plus the equality keys of its
+``BaseQuery.with_eq``. ``query_trips`` joins trips to that table by the
+same rule, and every operator that takes ``groups`` carries ``GROUP``
+through its keys, so one plan computes every group at once.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -59,27 +67,82 @@ def apply_query(df: DataFrame, q: BaseQuery) -> DataFrame:
     return out
 
 
-def used_stop_ids(stop_times: DataFrame, trips: DataFrame, q: BaseQuery) -> DataFrame:
+GROUP = "_group"
+
+
+def group_table(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A group table from driver-side rows. Built from pandas so that it
+    is a local relation: the planner knows its size, and broadcasting
+    it runs no Spark job."""
+    st = StructType.fromDDL(schema)
+    return spark.createDataFrame(pd.DataFrame(rows, columns=st.names, dtype=object), st)
+
+
+def one_group(spark: SparkSession) -> DataFrame:
+    """The group table of a run without per-group keys: one group, 0."""
+    return group_table(spark, [(0,)], f"{GROUP} int")
+
+
+def group_keys(groups: DataFrame | None) -> list[str]:
+    """Key columns that operators add when called with ``groups``."""
+    return [] if groups is None else [GROUP]
+
+
+def query_trips(trips: DataFrame, q: BaseQuery, groups: DataFrame | None = None) -> DataFrame:
+    """``apply_query`` on trips, then each trip tagged with the ``GROUP``
+    of every group it belongs to. A group's null key matches every
+    value, as ``with_eq`` drops None keys, so a trip with a null
+    ``direction_id`` and a trip of direction 0 both belong to the
+    route's null-direction group. Non-nullable keys stay equi-join keys."""
+    t = apply_query(trips, q)
+    if groups is None:
+        return t
+    keys = [f for f in groups.schema.fields if f.name != GROUP]
+    g = broadcast(groups.select(GROUP, *[F.col(f.name).alias("_g_" + f.name) for f in keys]))
+    if not keys:
+        return t.crossJoin(g)
+    cond = None
+    for f in keys:
+        c = t[f.name] == g["_g_" + f.name]
+        if f.nullable:
+            c = g["_g_" + f.name].isNull() | c
+        cond = c if cond is None else cond & c
+    return t.join(g, cond).drop(*["_g_" + f.name for f in keys])
+
+
+def used_stop_ids(
+    stop_times: DataFrame, trips: DataFrame, q: BaseQuery, groups: DataFrame | None = None
+) -> DataFrame:
     """F4 — "Only stops which are used in one or more routes will be
     output" (README.md:231; CHANGELOG v3.4.0). Distinct stop_ids of
-    stop_times whose trips survive the query."""
-    t = apply_query(trips, q).select("trip_id", "route_id", "direction_id")
-    return (
-        stop_times.join(t.select("trip_id"), "trip_id", "left_semi")
-        .select("stop_id")
-        .distinct()
-    )
+    stop_times whose trips survive the query, per group when grouped."""
+    keys = group_keys(groups)
+    t = query_trips(trips, q, groups).select("trip_id", *keys)
+    return stop_times.join(t, "trip_id").select(*keys, "stop_id").distinct()
 
 
-def filter_used_stops(stops: DataFrame, stop_times: DataFrame, trips: DataFrame, q: BaseQuery) -> DataFrame:
+def filter_used_stops(
+    stops: DataFrame,
+    stop_times: DataFrame,
+    trips: DataFrame,
+    q: BaseQuery,
+    groups: DataFrame | None = None,
+) -> DataFrame:
     """Stops restricted to used ones (F4), keeping parent stations whose
     children are used (observed in examples/stops.geojson: parent
-    stations appear with empty routes)."""
-    used = used_stop_ids(stop_times, trips, q)
-    direct = stops.join(used, "stop_id", "left_semi")
-    parents = stops.join(
-        direct.select(F.col("parent_station").alias("stop_id")).where(F.col("stop_id").isNotNull()).distinct(),
-        "stop_id",
-        "left_semi",
-    ).filter(F.col("location_type") == 1)
-    return direct.unionByName(parents).dropDuplicates(["stop_id"])
+    stations appear with empty routes). Grouped: per group, with
+    ``GROUP`` appended to the stop columns."""
+    keys = group_keys(groups)
+    cols = [*stops.columns, *keys]
+    direct = stops.join(used_stop_ids(stop_times, trips, q, groups), "stop_id").select(*cols)
+    parents = (
+        stops.join(
+            direct.select(*keys, F.col("parent_station").alias("stop_id"))
+            .where(F.col("stop_id").isNotNull())
+            .distinct(),
+            "stop_id",
+        )
+        .filter(F.col("location_type") == 1)
+        .select(*cols)
+    )
+    return direct.unionByName(parents).dropDuplicates([*keys, "stop_id"])

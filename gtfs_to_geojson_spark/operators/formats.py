@@ -1,21 +1,34 @@
 """The nine output formats (reference ``src/formats/*.ts``), each a
-pure function ``(feed, config, query) → DataFrame[feature_json, …]``.
+pure function ``(feed, config, query, groups) → DataFrame[GROUP,
+feature_json]`` that builds a plan. The only Spark jobs a format call
+runs are the agency-name read when no ``groups`` are given and, for the
+dissolved formats, ``geoagg.dissolve_polygons``' bbox aggregation.
+
+``groups`` says which files the features are for: its table has one
+row per file — ``GROUP`` plus the ``with_eq`` keys that select the
+file's trips (``filters.query_trips``). Without it, the call is the
+one-group case: every trip under ``q`` belongs to group 0, the same
+code with a one-row table.
 
 Dispatch mirrors the reference's static format table
 (src/lib/gtfs-to-geojson.ts:73-113). Every format returns features as
 JSON strings (``to_json`` drops null properties — F5, the reference's
-``omitBy(props, isNil)`` at geojson-utils.ts:34) plus grouping columns
-for the sink.
+``omitBy(props, isNil)`` at geojson-utils.ts:34) with the ``GROUP`` of
+the file they go to; ``sinks.ORDER``, where present, orders features
+within a file.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import sinks
 from ..functions import geo
 from . import geoagg, relational
-from .filters import BaseQuery, apply_query, filter_used_stops
+from .filters import GROUP, BaseQuery, filter_used_stops, one_group, query_trips
 
 
 def feature_json(props: Column, geom_type: str, coords: Column) -> Column:
@@ -27,7 +40,7 @@ def feature_json(props: Column, geom_type: str, coords: Column) -> Column:
                 F.lit(geom_type).alias("type"), coords.alias("coordinates")
             ).alias("geometry"),
         )
-    )
+    ).alias("feature_json")
 
 
 STOP_PROP_COLS = [
@@ -36,248 +49,242 @@ STOP_PROP_COLS = [
 ROUTE_PROP_COLS = relational.ROUTE_STRUCT_COLS + ["category", "subcategory", "running_way"]
 
 
-def _agency_name(feed) -> str | None:
+def agency_name(feed) -> str | None:
     """First agency's name (reference falls back to agencies[0],
     src/lib/gtfs-to-geojson.ts:297-308)."""
     row = feed["agency"].orderBy("agency_id").limit(1).collect()
     return row[0]["agency_name"] if row else None
 
 
-def _stop_features(feed, cfg, q: BaseQuery, agency_name: str | None) -> DataFrame:
+@dataclass(frozen=True)
+class Groups:
+    """The files one format call emits features for: ``table`` (GROUP
+    + with_eq keys, one row per file) and the feed's ``agency_name``,
+    read once per run."""
+
+    table: DataFrame
+    agency_name: str | None
+
+    @classmethod
+    def single(cls, feed) -> "Groups":
+        return cls(one_group(feed["trips"].sparkSession), agency_name(feed))
+
+
+def _agency(g: Groups) -> Column:
+    return F.lit(g.agency_name).alias("agency_name")
+
+
+def _stop_features(feed, cfg, q: BaseQuery, g: Groups) -> DataFrame:
     sw = relational.stops_with_routes(
-        feed["stops"], feed["stop_times"], feed["trips"], feed["routes"], q
-    ).withColumn("agency_name", F.lit(agency_name))
+        feed["stops"], feed["stop_times"], feed["trips"], feed["routes"], q, g.table
+    )
     coords = geo.round_coords_point(
         F.array("stop_lon", "stop_lat"), cfg.coordinate_precision
     )
-    props = F.struct(
-        *[F.col(c) for c in STOP_PROP_COLS], F.col("routes"), F.col("agency_name")
-    )
-    return sw.select(
-        feature_json(props, "Point", coords).alias("feature_json"),
-        F.lit("Point").alias("geom_type"),
-        "stop_id",
-    )
+    props = F.struct(*[F.col(c) for c in STOP_PROP_COLS], F.col("routes"), _agency(g))
+    return sw.select(GROUP, feature_json(props, "Point", coords))
 
 
-def _shapes_exist(feed, q: BaseQuery) -> bool:
-    """Early-exit probe (reference geojson-utils.ts:212-215: if the
-    shapes query yields anything, stop-derived lines are skipped).
-    Probes the shapes TABLE, not just trips.shape_id — a feed whose
+def _unshaped(feed, q: BaseQuery, groups: DataFrame) -> DataFrame:
+    """The groups that get stop-derived lines: those whose trips reach
+    no shape in the shapes table — the reference's early exit
+    (geojson-utils.ts:212-215: if the shapes query yields anything,
+    stop-derived lines are skipped), decided per group inside the plan.
+    It probes the shapes TABLE, not just trips.shape_id — a feed whose
     shapes file is missing or excluded at import (README.md:161-169)
     still carries shape_ids on trips, and must fall back."""
-    pairs = relational.route_shape_pairs(feed["trips"], q)
-    return not pairs.join(feed["shapes"], "shape_id", "left_semi").limit(1).isEmpty()
+    shaped = (
+        relational.route_shape_pairs(feed["trips"], q, groups)
+        .join(feed["shapes"], "shape_id", "left_semi")
+        .select(GROUP)
+    )
+    return groups.join(shaped, GROUP, "left_anti")
 
 
-def _line_features(feed, cfg, q: BaseQuery, agency_name: str | None) -> DataFrame:
-    """Lines: MultiLineString per route from shapes; global fallback to
-    stop-derived LineStrings when the feed/query has no shapes."""
-    simp = geoagg.simplify_lines_udf(cfg.coordinate_precision)
-    if _shapes_exist(feed, q):
-        ml = relational.route_multilinestrings(
-            feed["shapes"], feed["trips"], feed["routes"], feed.get("route_attributes"), q
-        ).withColumn("agency_name", F.lit(agency_name))
-        if simp is not None:
-            # simplify each member line (pandas UDF is per-LineString):
-            # posexplode → RDP → re-collect in position order
-            ml = (
-                ml.select(
-                    *[c for c in ml.columns if c != "coordinates"],
-                    F.posexplode("coordinates").alias("_pos", "_line"),
-                )
-                .withColumn("_line", simp(F.col("_line")))
-                .groupBy(*[c for c in ml.columns if c != "coordinates"])
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct(F.col("_pos"), F.col("_line").alias("l")))),
-                        lambda x: x["l"],
-                    ).alias("coordinates")
-                )
-            )
-        out_coords = geo.round_coords_multiline(F.col("coordinates"), cfg.coordinate_precision)
-        props = F.struct(*[F.col(c) for c in ROUTE_PROP_COLS], F.col("agency_name"))
-        return ml.select(
-            feature_json(props, "MultiLineString", out_coords).alias("feature_json"),
-            F.lit("MultiLineString").alias("geom_type"),
-            "route_id",
-        )
+def _route_lines(feed, q: BaseQuery, groups: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Route geometry per group: MultiLineStrings from shapes, and
+    stop-derived LineStrings per (route, direction) for the groups
+    without shapes."""
+    ml = relational.route_multilinestrings(
+        feed["shapes"], feed["trips"], feed["routes"], feed.get("route_attributes"), q, groups
+    )
     sd = relational.stop_derived_linestrings(
         feed["stops"], feed["stop_times"], feed["trips"], feed["routes"],
-        feed.get("route_attributes"), q,
-    ).withColumn("agency_name", F.lit(agency_name))
+        feed.get("route_attributes"), q, _unshaped(feed, q, groups),
+    )
+    return ml, sd
+
+
+def _route_points(feed, q: BaseQuery, groups: DataFrame) -> DataFrame:
+    """(GROUP, lon, lat) of every vertex of the groups' route lines —
+    the point set of ``_route_lines`` without assembling the lines:
+    the shape points of the route's shapes, or the stops the
+    stop-derived lines pass through. As there, only routes present in
+    the routes table count."""
+    routes = feed["routes"].select("route_id")
+    pairs = relational.route_shape_pairs(feed["trips"], q, groups).join(routes, "route_id", "left_semi")
+    shape_pts = feed["shapes"].join(pairs, "shape_id").select(
+        GROUP, F.col("shape_pt_lon").alias("lon"), F.col("shape_pt_lat").alias("lat")
+    )
+    trips = (
+        query_trips(feed["trips"], q, _unshaped(feed, q, groups))
+        .filter(F.col("shape_id").isNull())
+        .join(routes, "route_id", "left_semi")
+        .select("trip_id", GROUP)
+    )
+    stop_pts = feed["stop_times"].join(trips, "trip_id").join(feed["stops"], "stop_id").select(
+        GROUP, F.col("stop_lon").alias("lon"), F.col("stop_lat").alias("lat")
+    )
+    return shape_pts.unionByName(stop_pts)
+
+
+def route_line_rows(feed, q: BaseQuery, groups: DataFrame) -> DataFrame:
+    """Per-route LineString rows of every group (shape MultiLineStrings
+    exploded, or stop-derived) — input to lines-buffer /
+    lines-dissolved."""
+    ml, sd = _route_lines(feed, q, groups)
+    exploded = ml.select(
+        *[c for c in ml.columns if c != "coordinates"],
+        F.explode("coordinates").alias("coordinates"),
+    )
+    return exploded.unionByName(sd, allowMissingColumns=True)
+
+
+def _line_features(feed, cfg, q: BaseQuery, g: Groups) -> DataFrame:
+    """Lines: MultiLineString per route from shapes; per-group fallback
+    to stop-derived LineStrings when the group's trips have no shapes."""
+    simp = geoagg.simplify_lines_udf(cfg.coordinate_precision)
+    ml, sd = _route_lines(feed, q, g.table)
     if simp is not None:
+        # simplify each member line (pandas UDF is per-LineString):
+        # posexplode → RDP → re-collect in position order
+        ml = (
+            ml.select(
+                *[c for c in ml.columns if c != "coordinates"],
+                F.posexplode("coordinates").alias("_pos", "_line"),
+            )
+            .withColumn("_line", simp(F.col("_line")))
+            .groupBy(*[c for c in ml.columns if c != "coordinates"])
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct(F.col("_pos"), F.col("_line").alias("l")))),
+                    lambda x: x["l"],
+                ).alias("coordinates")
+            )
+        )
         sd = sd.withColumn("coordinates", simp(F.col("coordinates")))
-    out_coords = geo.round_coords_line(F.col("coordinates"), cfg.coordinate_precision)
-    props = F.struct(*[F.col(c) for c in ROUTE_PROP_COLS], F.col("agency_name"))
-    return sd.select(
-        feature_json(props, "LineString", out_coords).alias("feature_json"),
-        F.lit("LineString").alias("geom_type"),
-        "route_id",
+    props = F.struct(*[F.col(c) for c in ROUTE_PROP_COLS], _agency(g))
+    p = cfg.coordinate_precision
+    return ml.select(
+        GROUP, feature_json(props, "MultiLineString", geo.round_coords_multiline(F.col("coordinates"), p))
+    ).unionByName(
+        sd.select(GROUP, feature_json(props, "LineString", geo.round_coords_line(F.col("coordinates"), p)))
     )
 
 
-def _route_lines_coords(feed, cfg, q: BaseQuery) -> DataFrame:
-    """Per-route LineString rows (exploded from shapes, or
-    stop-derived) — input to envelope / lines-buffer / lines-dissolved."""
-    if _shapes_exist(feed, q):
-        ml = relational.route_multilinestrings(
-            feed["shapes"], feed["trips"], feed["routes"], feed.get("route_attributes"), q
-        )
-        return ml.select(
-            *[c for c in ml.columns if c != "coordinates"],
-            F.explode("coordinates").alias("coordinates"),
-        )
-    return relational.stop_derived_linestrings(
-        feed["stops"], feed["stop_times"], feed["trips"], feed["routes"],
-        feed.get("route_attributes"), q,
-    )
+def fmt_stops(feed, cfg, q: BaseQuery, groups: Groups | None = None) -> DataFrame:
+    return _stop_features(feed, cfg, q, groups or Groups.single(feed))
 
 
-def fmt_stops(feed, cfg, q: BaseQuery) -> DataFrame:
-    return _stop_features(feed, cfg, q, _agency_name(feed))
+def fmt_lines(feed, cfg, q: BaseQuery, groups: Groups | None = None) -> DataFrame:
+    return _line_features(feed, cfg, q, groups or Groups.single(feed))
 
 
-def fmt_lines(feed, cfg, q: BaseQuery) -> DataFrame:
-    return _line_features(feed, cfg, q, _agency_name(feed))
-
-
-def fmt_lines_and_stops(feed, cfg, q: BaseQuery) -> DataFrame:
+def fmt_lines_and_stops(feed, cfg, q: BaseQuery, groups: Groups | None = None) -> DataFrame:
     """A12 — merged FeatureCollections (reference
     formats/lines-and-stops.ts:16-17 via mergeGeojson,
-    geojson-utils.ts:112-114): union-all of line + stop features."""
-    an = _agency_name(feed)
-    lines = _line_features(feed, cfg, q, an).select("feature_json", "geom_type")
-    stops = _stop_features(feed, cfg, q, an).select("feature_json", "geom_type")
+    geojson-utils.ts:112-114): union-all of line + stop features, lines
+    first in each file."""
+    g = groups or Groups.single(feed)
+    lines = _line_features(feed, cfg, q, g).withColumn(sinks.ORDER, F.lit(0))
+    stops = _stop_features(feed, cfg, q, g).withColumn(sinks.ORDER, F.lit(1))
     return lines.unionByName(stops)
 
 
-def fmt_envelope(feed, cfg, q: BaseQuery) -> DataFrame:
+def fmt_envelope(feed, cfg, q: BaseQuery, groups: Groups | None = None) -> DataFrame:
     """A1/G4 — single Polygon Feature = bbox of all route lines, props
     ``{agency_name}`` only (reference formats/envelope.ts;
-    examples/envelope.geojson)."""
-    lines = _route_lines_coords(feed, cfg, q)
-    b = geoagg.envelope_bounds(lines)
+    examples/envelope.geojson). The bbox is taken over the lines'
+    vertices directly."""
+    g = groups or Groups.single(feed)
+    b = geoagg.envelope_bounds(_route_points(feed, q, g.table), keys=[GROUP])
     p = cfg.coordinate_precision
     rnd = (lambda c: F.round(c, p)) if p is not None else (lambda c: c)
     coords = geoagg.bbox_polygon_col(
         rnd(F.col("min_lon")), rnd(F.col("min_lat")), rnd(F.col("max_lon")), rnd(F.col("max_lat"))
     )
-    props = F.struct(F.lit(_agency_name(feed)).alias("agency_name"))
     return b.where(F.col("min_lon").isNotNull()).select(
-        feature_json(props, "Polygon", coords).alias("feature_json"),
-        F.lit("Polygon").alias("geom_type"),
+        GROUP, feature_json(F.struct(_agency(g)), "Polygon", coords)
     )
 
 
-def fmt_convex(feed, cfg, q: BaseQuery) -> DataFrame:
-    """A2 — convex hull Polygon over used stops; empty result when
+def fmt_convex(feed, cfg, q: BaseQuery, groups: Groups | None = None) -> DataFrame:
+    """A2 — convex hull Polygon over used stops; no feature when
     degenerate (<3 distinct points — reference warns and emits null,
     formats/convex.ts:13-22)."""
-    spark = feed["stops"].sparkSession
-    used = filter_used_stops(feed["stops"], feed["stop_times"], feed["trips"], q)
-    ring = geoagg.convex_hull_agg(used)
-    if ring is None:
-        return spark.createDataFrame([], "feature_json string, geom_type string")
-    if cfg.coordinate_precision is not None:
-        import numpy as np
-
-        ring = np.round(np.asarray(ring), cfg.coordinate_precision).tolist()
-    import json
-
-    fj = json.dumps(
-        {
-            "type": "Feature",
-            "properties": {"agency_name": _agency_name(feed)},
-            "geometry": {"type": "Polygon", "coordinates": [ring]},
-        },
-        separators=(",", ":"),
-    )
-    return spark.createDataFrame([(fj, "Polygon")], "feature_json string, geom_type string")
+    g = groups or Groups.single(feed)
+    used = filter_used_stops(feed["stops"], feed["stop_times"], feed["trips"], q, g.table)
+    hulls = geoagg.convex_hulls(used, keys=[GROUP])
+    coords = geo.round_coords_polygon(F.array("ring"), cfg.coordinate_precision)
+    return hulls.select(GROUP, feature_json(F.struct(_agency(g)), "Polygon", coords))
 
 
-def fmt_stops_buffer(feed, cfg, q: BaseQuery) -> DataFrame:
+def fmt_stops_buffer(feed, cfg, q: BaseQuery, groups: Groups | None = None) -> DataFrame:
     """G3 — Polygon per used stop, radius bufferSizeMeters (default 400,
     reference src/lib/gtfs-to-geojson.ts:34; formats/stops-buffer.ts:9).
     Ring construction is a pure Column expression — stays in codegen."""
-    an = _agency_name(feed)
+    g = groups or Groups.single(feed)
     sw = relational.stops_with_routes(
-        feed["stops"], feed["stop_times"], feed["trips"], feed["routes"], q
-    ).withColumn("agency_name", F.lit(an))
+        feed["stops"], feed["stop_times"], feed["trips"], feed["routes"], q, g.table
+    )
     ring = geoagg.stop_buffer_ring_col(
         F.col("stop_lat"), F.col("stop_lon"), cfg.buffer_size_meters
     )
     coords = geo.round_coords_polygon(F.array(ring), cfg.coordinate_precision)
-    props = F.struct(*[F.col(c) for c in STOP_PROP_COLS], F.col("routes"), F.col("agency_name"))
-    return sw.select(
-        feature_json(props, "Polygon", coords).alias("feature_json"),
-        F.lit("Polygon").alias("geom_type"),
-        "stop_id",
-    )
+    props = F.struct(*[F.col(c) for c in STOP_PROP_COLS], F.col("routes"), _agency(g))
+    return sw.select(GROUP, feature_json(props, "Polygon", coords))
 
 
-def fmt_lines_buffer(feed, cfg, q: BaseQuery) -> DataFrame:
+def _line_buffers(feed, cfg, q: BaseQuery, g: Groups) -> DataFrame:
+    lines = route_line_rows(feed, q, g.table)
+    keys = [c for c in lines.columns if c != "coordinates"]
+    return geoagg.line_buffer_polygons(lines, cfg.buffer_size_meters, keys)
+
+
+def fmt_lines_buffer(feed, cfg, q: BaseQuery, groups: Groups | None = None) -> DataFrame:
     """G3 — Polygon per route buffering its line
     (reference formats/lines-buffer.ts:12)."""
-    lines = _route_lines_coords(feed, cfg, q)
-    keys = [c for c in lines.columns if c != "coordinates"]
-    buf = geoagg.line_buffer_polygons(lines, cfg.buffer_size_meters, keys)
+    g = groups or Groups.single(feed)
+    buf = _line_buffers(feed, cfg, q, g)
     coords = geo.round_coords_polygon(F.col("polygon"), cfg.coordinate_precision)
     prop_cols = [c for c in ROUTE_PROP_COLS if c in buf.columns]
-    props = F.struct(*[F.col(c) for c in prop_cols], F.lit(_agency_name(feed)).alias("agency_name"))
-    return buf.select(
-        feature_json(props, "Polygon", coords).alias("feature_json"),
-        F.lit("Polygon").alias("geom_type"),
-        "route_id",
-    )
+    props = F.struct(*[F.col(c) for c in prop_cols], _agency(g))
+    return buf.select(GROUP, feature_json(props, "Polygon", coords))
 
 
-def _dissolved_features(feed, cfg, polys: DataFrame) -> DataFrame:
-    """Shared tail of the two dissolved formats: A3 union → one Feature
-    per resulting polygon, props ``{agency_name}`` (row-set semantics
-    contract, SURVEY.md §5)."""
-    spark = polys.sparkSession
-    parts = geoagg.dissolve_polygons(polys)
-    import json
-
-    import numpy as np
-
-    an = _agency_name(feed)
-    rows = []
-    for poly in parts:
-        coords = poly
-        if cfg.coordinate_precision is not None:
-            coords = [np.round(np.asarray(r), cfg.coordinate_precision).tolist() for r in poly]
-        fj = json.dumps(
-            {
-                "type": "Feature",
-                "properties": {"agency_name": an},
-                "geometry": {"type": "Polygon", "coordinates": coords},
-            },
-            separators=(",", ":"),
-        )
-        rows.append((fj, "Polygon"))
-    if not rows:
-        return spark.createDataFrame([], "feature_json string, geom_type string")
-    return spark.createDataFrame(rows, "feature_json string, geom_type string")
+def _dissolved_features(cfg, polys: DataFrame, g: Groups) -> DataFrame:
+    """Shared tail of the two dissolved formats: A3 union per group →
+    one Feature per resulting polygon, props ``{agency_name}`` (row-set
+    semantics contract, SURVEY.md §5)."""
+    parts = geoagg.dissolve_polygons(polys, keys=[GROUP])
+    coords = geo.round_coords_polygon(F.col("polygon"), cfg.coordinate_precision)
+    return parts.select(GROUP, feature_json(F.struct(_agency(g)), "Polygon", coords))
 
 
-def fmt_stops_dissolved(feed, cfg, q: BaseQuery) -> DataFrame:
+def fmt_stops_dissolved(feed, cfg, q: BaseQuery, groups: Groups | None = None) -> DataFrame:
     """A3 — union of all stop buffers (reference
     formats/stops-dissolved.ts:12-14 via unionGeojson)."""
-    used = filter_used_stops(feed["stops"], feed["stop_times"], feed["trips"], q)
+    g = groups or Groups.single(feed)
+    used = filter_used_stops(feed["stops"], feed["stop_times"], feed["trips"], q, g.table)
     ring = geoagg.stop_buffer_ring_col(F.col("stop_lat"), F.col("stop_lon"), cfg.buffer_size_meters)
-    polys = used.select(F.array(ring).alias("polygon"))
-    return _dissolved_features(feed, cfg, polys)
+    return _dissolved_features(cfg, used.select(GROUP, F.array(ring).alias("polygon")), g)
 
 
-def fmt_lines_dissolved(feed, cfg, q: BaseQuery) -> DataFrame:
+def fmt_lines_dissolved(feed, cfg, q: BaseQuery, groups: Groups | None = None) -> DataFrame:
     """A3 — union of all route-line buffers (reference
     formats/lines-dissolved.ts:16-22: buffer → simplify → union)."""
-    lines = _route_lines_coords(feed, cfg, q)
-    keys = [c for c in lines.columns if c != "coordinates"]
-    buf = geoagg.line_buffer_polygons(lines, cfg.buffer_size_meters, keys)
-    return _dissolved_features(feed, cfg, buf.select("polygon"))
+    g = groups or Groups.single(feed)
+    return _dissolved_features(cfg, _line_buffers(feed, cfg, q, g).select(GROUP, "polygon"), g)
 
 
 FORMATS = {

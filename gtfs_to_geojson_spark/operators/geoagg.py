@@ -1,19 +1,22 @@
 """Distributed geometry aggregations A1–A3 + G2/G3 kernels.
 
 * A1 envelope  — pure DataFrame min/max (map-side partial agg, no UDF)
-* A2 convex    — two-phase mergeable hull: per-partition partial
-  (mapInPandas, shrinks each partition to ≤ its hull) → single tiny
-  final merge. Associativity proven in geometry.convex_hull.
+* A2 convex    — two-phase mergeable hull: per-batch partial
+  (mapInPandas, shrinks each batch to ≤ its hull) → one tiny final
+  merge per group. Associativity proven in geometry.convex_hull.
 * G3 buffers   — stop buffers are a pure Column expression (n-gon with
   cos(lat) lon-scaling — stays in codegen); line buffers are per-route
   capsule kernels (grouped map).
 * A3 dissolve  — per-cell polygon union (grouped map) + final merge of
-  the per-cell results; single-feature short-circuit and
+  the per-cell results (grouped map per key); single-feature short-circuit and
   union-failure fallback both mirror the reference
   (src/lib/geojson-utils.ts:159-170).
 * G2 simplify  — RDP in an Arrow-batched pandas UDF; skips MultiPolygon
   and is skipped entirely when precision is unset
   (geojson-utils.ts:119-147).
+
+The aggregations take ``keys``: columns the result is grouped by (the
+pipeline's ``GROUP``). No keys aggregates the whole input as one group.
 """
 
 from __future__ import annotations
@@ -35,22 +38,15 @@ from .. import geometry as geom
 # ---------------------------------------------------------------------------
 
 
-def envelope_bounds(lines: DataFrame, coord_col: str = "coordinates") -> DataFrame:
-    """Global bbox over every coordinate of LineString rows
-    (array<array<double>>) — explode-free: per-row array min/max first
-    (JVM-side), then one global agg. Returns 1 row
-    (min_lon, min_lat, max_lon, max_lat)."""
-    per_row = lines.select(
-        F.array_min(F.transform(F.col(coord_col), lambda c: c[0])).alias("mnx"),
-        F.array_max(F.transform(F.col(coord_col), lambda c: c[0])).alias("mxx"),
-        F.array_min(F.transform(F.col(coord_col), lambda c: c[1])).alias("mny"),
-        F.array_max(F.transform(F.col(coord_col), lambda c: c[1])).alias("mxy"),
-    )
-    return per_row.agg(
-        F.min("mnx").alias("min_lon"),
-        F.min("mny").alias("min_lat"),
-        F.max("mxx").alias("max_lon"),
-        F.max("mxy").alias("max_lat"),
+def envelope_bounds(points: DataFrame, lon_col: str = "lon", lat_col: str = "lat", keys=()) -> DataFrame:
+    """Bbox of point rows — one map-side partial agg. Returns keys +
+    (min_lon, min_lat, max_lon, max_lat): one row per key, or one row
+    without keys."""
+    return points.groupBy(*keys).agg(
+        F.min(lon_col).alias("min_lon"),
+        F.min(lat_col).alias("min_lat"),
+        F.max(lon_col).alias("max_lon"),
+        F.max(lat_col).alias("max_lat"),
     )
 
 
@@ -73,31 +69,49 @@ def bbox_polygon_col(min_lon, min_lat, max_lon, max_lat):
 # ---------------------------------------------------------------------------
 
 
-def convex_hull_agg(points: DataFrame, lon_col: str = "stop_lon", lat_col: str = "stop_lat") -> list[list[float]] | None:
-    """Distributed convex hull: partial hull per Arrow batch
-    (mapInPandas — output ≤ hull of batch), final merge over the tiny
-    union of partials. Returns the closed CCW ring as plain lists, or
-    None for <3 distinct points (reference warns + emits nothing,
-    formats/convex.ts:13-22)."""
+def convex_hulls(
+    points: DataFrame, lon_col: str = "stop_lon", lat_col: str = "stop_lat", keys=()
+) -> DataFrame:
+    """Distributed convex hull per key: partial hull per Arrow batch
+    and key (mapInPandas — output ≤ hull of the batch), final merge over
+    each key's partials (grouped map). Returns keys + ``ring``, the
+    closed CCW ring; a key with <3 distinct points gets no row
+    (reference warns + emits nothing, formats/convex.ts:13-22)."""
+    keys = list(keys)
+    key_types = _ddl(points, keys)
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pts = np.column_stack([pdf[lon_col].to_numpy(), pdf[lat_col].to_numpy()])
-            hull = geom.convex_hull(pts)
-            keep = pts if hull is None else hull[:-1]
-            yield pd.DataFrame({lon_col: keep[:, 0], lat_col: keep[:, 1]})
+            for key, part in pdf.groupby(keys, sort=False) if keys else [((), pdf)]:
+                pts = np.column_stack([part[lon_col].to_numpy(), part[lat_col].to_numpy()])
+                hull = geom.convex_hull(pts)
+                keep = pts if hull is None else hull[:-1]
+                out = pd.DataFrame({lon_col: keep[:, 0], lat_col: keep[:, 1]})
+                for k, v in zip(keys, key):
+                    out[k] = v
+                yield out
 
-    partials = points.select(lon_col, lat_col).dropna().mapInPandas(
-        partial, schema=f"{lon_col} double, {lat_col} double"
+    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        hull = geom.convex_hull(np.column_stack([pdf[lon_col].to_numpy(), pdf[lat_col].to_numpy()]))
+        rings = [] if hull is None else [hull.tolist()]
+        return pd.DataFrame(
+            {**{k: [v] * len(rings) for k, v in zip(keys, key)}, "ring": pd.Series(rings, dtype=object)}
+        )
+
+    coords = f"{lon_col} double, {lat_col} double"
+    partials = points.select(*keys, lon_col, lat_col).dropna().mapInPandas(
+        partial, schema=", ".join(filter(None, [key_types, coords]))
     )
-    rows = partials.collect()  # ≤ (hull size per partition) · partitions — tiny
-    if not rows:
-        return None
-    pts = np.asarray([[r[lon_col], r[lat_col]] for r in rows])
-    hull = geom.convex_hull(pts)
-    return None if hull is None else [[float(x), float(y)] for x, y in hull]
+    return partials.groupBy(*keys).applyInPandas(
+        final, ", ".join(filter(None, [key_types, "ring array<array<double>>"]))
+    )
+
+
+def convex_hull_agg(points: DataFrame, lon_col: str = "stop_lon", lat_col: str = "stop_lat") -> list[list[float]] | None:
+    """The hull of all points as plain lists (the one-group case of
+    :func:`convex_hulls`), or None for <3 distinct points."""
+    rows = convex_hulls(points, lon_col, lat_col).collect()
+    return [[float(x), float(y)] for x, y in rows[0]["ring"]] if rows else None
 
 
 # ---------------------------------------------------------------------------
@@ -154,13 +168,14 @@ def line_buffer_polygons(lines: DataFrame, meters: float, key_cols: list[str]) -
             res["polygon"] = out_rings
             yield res
 
-    fields = ", ".join(f"{c} {_spark_type_of(lines, c)}" for c in key_cols)
-    schema = f"{fields}, polygon array<array<array<double>>>"
+    schema = f"{_ddl(lines, key_cols)}, polygon array<array<array<double>>>"
     return lines.select(*in_cols).mapInPandas(kernel, schema)
 
 
-def _spark_type_of(df: DataFrame, col: str) -> str:
-    return dict(df.dtypes)[col]
+def _ddl(df: DataFrame, cols) -> str:
+    """``"c1 type1, c2 type2"`` for columns of ``df`` (one schema fetch)."""
+    types = dict(df.dtypes)
+    return ", ".join(f"{c} {types[c]}" for c in cols)
 
 
 # ---------------------------------------------------------------------------
@@ -173,51 +188,75 @@ def dissolve_polygons(
     poly_col: str = "polygon",
     cell_res: int | None = None,
     salt_target_rows: int | None = 5000,
-) -> list[list[list[list[float]]]]:
-    """Union all Polygon rows into MultiPolygon parts.
+    keys=(),
+) -> DataFrame:
+    """Union the Polygon rows of each key into MultiPolygon parts.
+    Returns keys + ``poly_col``, one row per output Polygon (outer ring
+    CCW first, its holes after); no keys unions the whole input.
 
     Scale path (SURVEY.md A3): group rings by the grid cell of their
-    bbox center at a resolution where cells ≫ polygon size, union each
-    cell's rings in a grouped-map kernel (map-side shrink), then run a
-    final merge over the (few) cell results. Mirrors the reference's
-    two behaviors: single-feature short-circuit (geojson-utils.ts:
-    160-162) and fallback-to-parts on union failure (:135-146).
+    first ring's centroid at a resolution where cells ≫ polygon size,
+    union each (key, cell)'s rings in a grouped-map kernel (map-side
+    shrink), then merge each key's cell results in a second grouped
+    map. Mirrors the reference's two behaviors: single-feature
+    short-circuit (geojson-utils.ts:160-162) and fallback-to-parts on
+    union failure (:135-146). Kernels sort their input, so the parts
+    do not depend on row order.
 
-    Returns python-list MultiPolygon coordinates: list of polygons,
-    each a list of rings (outer CCW first, holes after).
-
-    ``salt_target_rows``: when any cell holds more polygons than this,
-    that cell's union runs as salted partials first (per (cell, salt))
-    before the per-cell merge — grouped-map skew handling; None
-    disables. Union associativity keeps the result exact.
+    One action runs here: a per-key count and bbox in one aggregation,
+    which picks each key's cell resolution (unless ``cell_res`` is
+    given); the returned plan evaluates the input a second time. When
+    some key
+    holds more than ``salt_target_rows`` polygons, a cell histogram
+    follows, and a hot cell's union runs as salted partials first (per
+    (key, cell, salt)) before the per-cell merge — grouped-map skew
+    handling; None disables. Union associativity keeps the result exact.
     """
-    n = polys.count()
-    if n == 0:
-        return []
+    keys = list(keys)
+    key_types = [_ddl(polys, keys)] if keys else []
+    poly_t = f"{poly_col} array<array<array<double>>>"
 
-    # pick a cell resolution from the global bbox so one cell covers
-    # many buffers (few groups, the final merge handles borders)
-    stats = polys.select(
-        F.min(F.expr(f"aggregate({poly_col}[0], cast(180.0 as double), (a, c) -> least(a, c[0]))")).alias("mnx"),
-        F.max(F.expr(f"aggregate({poly_col}[0], cast(-180.0 as double), (a, c) -> greatest(a, c[0]))")).alias("mxx"),
-        F.min(F.expr(f"aggregate({poly_col}[0], cast(90.0 as double), (a, c) -> least(a, c[1]))")).alias("mny"),
-        F.max(F.expr(f"aggregate({poly_col}[0], cast(-90.0 as double), (a, c) -> greatest(a, c[1]))")).alias("mxy"),
-    ).collect()[0]
-    if cell_res is None:
-        cell_res = cells.cover_res_for_bbox(
-            stats.mnx, stats.mny, stats.mxx, stats.mxy, target_cells=16
-        )
+    def ring0(init: str, fn: str, i: int):
+        return F.expr(f"aggregate({poly_col}[0], cast({init} as double), (a, c) -> {fn}(a, c[{i}]))")
 
-    # centroid-of-first-ring cell assignment (JVM-side)
+    stats = polys.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min(ring0("180.0", "least", 0)).alias("mnx"),
+        F.max(ring0("-180.0", "greatest", 0)).alias("mxx"),
+        F.min(ring0("90.0", "least", 1)).alias("mny"),
+        F.max(ring0("-90.0", "greatest", 1)).alias("mxy"),
+    ).collect()
+    stats = [r for r in stats if r.n]  # no keys: one row, even for no input
+    if not stats:
+        return polys.select(*keys, poly_col).limit(0)
+
+    # centroid-of-first-ring cell assignment (JVM-side), at a
+    # resolution picked from each key's bbox so one cell covers many
+    # buffers (few groups, the final merge handles borders)
     cx = F.expr(f"aggregate({poly_col}[0], cast(0.0 as double), (a, c) -> a + c[0]) / size({poly_col}[0])")
     cy = F.expr(f"aggregate({poly_col}[0], cast(0.0 as double), (a, c) -> a + c[1]) / size({poly_col}[0])")
-    with_cell = polys.select(poly_col).withColumn("cell", cells.cell_col(cy, cx, cell_res))
+    res_of = {
+        tuple(r[k] for k in keys): cell_res if cell_res is not None
+        else cells.cover_res_for_bbox(r.mnx, r.mny, r.mxx, r.mxy, target_cells=16)
+        for r in stats
+    }
+    if len(set(res_of.values())) == 1:
+        cell = cells.cell_col(cy, cx, next(iter(res_of.values())))
+    else:
+        res_table = polys.sparkSession.createDataFrame(
+            [(*k, v) for k, v in res_of.items()], ", ".join([*key_types, "_res int"])
+        )
+        polys = polys.join(F.broadcast(res_table), keys)
+        cell = None
+        for res in sorted(set(res_of.values())):
+            c = cells.cell_col(cy, cx, res)
+            cell = F.when(F.col("_res") == res, c) if cell is None else cell.when(F.col("_res") == res, c)
+    with_cell = polys.select(*keys, poly_col, cell.alias("cell"))
 
     def _union_pdf(pdf: pd.DataFrame) -> list:
         rings: list[np.ndarray] = []
-        for poly in pdf[poly_col]:
-            for ring in poly:
-                rings.append(np.asarray([[p[0], p[1]] for p in ring], dtype=np.float64))
+        for poly in sorted(pdf[poly_col], key=_poly_order):
+            rings.extend(_ring_array(ring) for ring in poly)
         # pre-union simplify (reference v2.0.4: shrink before union)
         rings = [geom.simplify_ring(r, 1e-7) for r in rings]
         merged: list[np.ndarray] = []
@@ -226,60 +265,65 @@ def dissolve_polygons(
             merged.extend(part)
         return [r.tolist() for r in merged]
 
-    def union_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame({poly_col: [_union_pdf(pdf)]})
+    def cell_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        return pd.DataFrame({**{k: [v] for k, v in zip(keys, key)}, "cell": [key[len(keys)]],
+                             poly_col: [_union_pdf(pdf)]})
 
-    def union_kernel_keyed(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        # keeps the cell key for the second (per-cell) merge level
-        return pd.DataFrame({"cell": [key[0]], poly_col: [_union_pdf(pdf)]})
-
+    cell_schema = ", ".join([*key_types, "cell long", poly_t])
     # grouped-map skew (SURVEY §7 hard part 4): the union kernel is
     # superlinear in rings-per-group, so one mega-city cell dominates
     # the stage. When any cell exceeds the salt target, partial unions
-    # run per (cell, salt) first — union is associative, so salted
-    # partials + per-cell merge + driver final is exact.
-    if salt_target_rows is not None:
+    # run per (key, cell, salt) first — union is associative, so salted
+    # partials + per-cell merge + final merge is exact.
+    hot = False
+    if salt_target_rows is not None and max(r.n for r in stats) > salt_target_rows:
+        hist = with_cell.groupBy(*keys, "cell").count()
+        hot = hist.filter(F.col("count") > salt_target_rows).limit(1).count() > 0
+    if hot:
         from .spatial import salted_adaptive
 
-        hist = with_cell.groupBy("cell").count()
-        hot = hist.filter(F.col("count") > salt_target_rows).limit(1).count() > 0
-        if hot:
-            salted = salted_adaptive(
-                with_cell.withColumn("_rid", F.monotonically_increasing_id()),
-                "cell",
-                id_col="_rid",
-                target_rows_per_group=salt_target_rows,
-            )
-            partials = salted.groupBy("cell", "_salt").applyInPandas(
-                union_kernel_keyed, f"cell long, {poly_col} array<array<array<double>>>"
-            )
-            cell_results = partials.groupBy("cell").applyInPandas(
-                union_kernel, f"{poly_col} array<array<array<double>>>"
-            ).collect()
-        else:
-            cell_results = with_cell.groupBy("cell").applyInPandas(
-                union_kernel, f"{poly_col} array<array<array<double>>>"
-            ).collect()
+        salted = salted_adaptive(
+            with_cell.withColumn("_rid", F.monotonically_increasing_id())
+            .withColumn("_kcell", F.struct(*keys, "cell")),
+            "_kcell",
+            id_col="_rid",
+            target_rows_per_group=salt_target_rows,
+        )
+        cell_results = (
+            salted.groupBy(*keys, "cell", "_salt").applyInPandas(cell_kernel, cell_schema)
+            .groupBy(*keys, "cell").applyInPandas(cell_kernel, cell_schema)
+        )
     else:
-        cell_results = with_cell.groupBy("cell").applyInPandas(
-            union_kernel, f"{poly_col} array<array<array<double>>>"
-        ).collect()
+        cell_results = with_cell.groupBy(*keys, "cell").applyInPandas(cell_kernel, cell_schema)
 
-    # final merge on the driver — one entry per cell, tiny
-    all_rings = [
-        np.asarray(ring, dtype=np.float64)
-        for row in cell_results
-        for ring in row[poly_col]
-    ]
-    outers = [r for r in all_rings if geom.signed_area(r) >= 0]
-    holes = [r for r in all_rings if geom.signed_area(r) < 0]
-    merged: list[np.ndarray] = []
-    for comp in geom.connected_components(outers):
-        part, _ok = geom.union_or_parts([outers[i] for i in comp])
-        merged.extend(part)
-    outs = [r for r in merged if geom.signed_area(r) >= 0] or merged
-    new_holes = [r for r in merged if geom.signed_area(r) < 0] + holes
-    return _group_holes(outs, new_holes)
+    def final_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        # one entry per cell, tiny; cell order makes the merge deterministic
+        all_rings = [_ring_array(ring) for poly in pdf.sort_values("cell")[poly_col] for ring in poly]
+        outers = [r for r in all_rings if geom.signed_area(r) >= 0]
+        holes = [r for r in all_rings if geom.signed_area(r) < 0]
+        merged: list[np.ndarray] = []
+        for comp in geom.connected_components(outers):
+            part, _ok = geom.union_or_parts([outers[i] for i in comp])
+            merged.extend(part)
+        outs = [r for r in merged if geom.signed_area(r) >= 0] or merged
+        new_holes = [r for r in merged if geom.signed_area(r) < 0] + holes
+        parts = _group_holes(outs, new_holes)
+        return pd.DataFrame(
+            {**{k: [v] * len(parts) for k, v in zip(keys, key)}, poly_col: pd.Series(parts, dtype=object)}
+        )
+
+    return cell_results.groupBy(*keys).applyInPandas(final_kernel, ", ".join([*key_types, poly_t]))
+
+
+def _ring_array(ring) -> np.ndarray:
+    """A ring as Arrow hands it to pandas (nested object arrays) → Nx2."""
+    return np.asarray([[p[0], p[1]] for p in ring], dtype=np.float64)
+
+
+def _poly_order(poly) -> list:
+    """Sort key of a Polygon (rings of [lon, lat] points): its
+    coordinates, so kernels see their rows in one fixed order."""
+    return [tuple(p) for ring in poly for p in ring]
 
 
 def _group_holes(outers: list[np.ndarray], holes: list[np.ndarray]) -> list[list[list[list[float]]]]:
@@ -385,6 +429,5 @@ def clip_polygons(
             res["clip_status"] = pd.Series(status, dtype=object)
             yield res
 
-    fields = ", ".join(f"{c} {_spark_type_of(polys, c)}" for c in key_cols)
-    schema = f"{fields}, polygon array<array<array<double>>>, clip_status string"
+    schema = f"{_ddl(polys, key_cols)}, polygon array<array<array<double>>>, clip_status string"
     return polys.select(*(key_cols + [poly_col])).mapInPandas(kernel, schema)

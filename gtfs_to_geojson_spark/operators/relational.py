@@ -4,6 +4,10 @@ These produce the intermediate DataFrames every output format consumes.
 All ordering-sensitive reference semantics (uniqBy first-wins, maxBy,
 stoptimes order, toposort fallback) are made explicitly deterministic —
 never dependent on Spark row order (SURVEY.md §7 hard part 2).
+
+The trip-driven operators take an optional group table (see
+``filters.query_trips``); with it, ``GROUP`` joins every key they
+group, join or deduplicate on.
 """
 
 from __future__ import annotations
@@ -13,7 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from .filters import BaseQuery, apply_query, filter_used_stops
+from .filters import BaseQuery, apply_query, filter_used_stops, group_keys, query_trips
 
 
 def route_props(routes: DataFrame, route_attributes: DataFrame | None) -> DataFrame:
@@ -43,12 +47,15 @@ ROUTE_STRUCT_COLS = [
 ]
 
 
-def stop_route_links(stop_times: DataFrame, trips: DataFrame, q: BaseQuery) -> DataFrame:
+def stop_route_links(
+    stop_times: DataFrame, trips: DataFrame, q: BaseQuery, groups: DataFrame | None = None
+) -> DataFrame:
     """Distinct (stop_id, route_id) pairs under the query (the J1 core)."""
-    t = apply_query(trips, q).select("trip_id", "route_id")
+    keys = group_keys(groups)
+    t = query_trips(trips, q, groups).select("trip_id", "route_id", *keys)
     return (
         stop_times.join(t, "trip_id")
-        .select("stop_id", "route_id")
+        .select(*keys, "stop_id", "route_id")
         .distinct()
     )
 
@@ -59,19 +66,21 @@ def stops_with_routes(
     trips: DataFrame,
     routes: DataFrame,
     q: BaseQuery,
+    groups: DataFrame | None = None,
 ) -> DataFrame:
     """J1 + A10 — used stops, each with a sorted array of serving-route
     structs (examples/stops.geojson: per-stop ``routes`` array; parent
     stations carry an empty one). Route dimension is broadcast."""
-    links = stop_route_links(stop_times, trips, q)
+    keys = group_keys(groups)
+    links = stop_route_links(stop_times, trips, q, groups)
     rp = route_props(routes, None).select(*ROUTE_STRUCT_COLS)
     stop_routes = (
         links.join(broadcast(rp), "route_id")
-        .groupBy("stop_id")
+        .groupBy(*keys, "stop_id")
         .agg(F.sort_array(F.collect_set(F.struct(*ROUTE_STRUCT_COLS))).alias("routes"))
     )
-    used = filter_used_stops(stops, stop_times, trips, q)
-    return used.join(stop_routes, "stop_id", "left").withColumn(
+    used = filter_used_stops(stops, stop_times, trips, q, groups)
+    return used.join(stop_routes, [*keys, "stop_id"], "left").withColumn(
         "routes", F.coalesce(F.col("routes"), F.array().cast(stop_routes.schema["routes"].dataType))
     )
 
@@ -101,12 +110,12 @@ def shape_linestrings(shapes: DataFrame) -> DataFrame:
     )
 
 
-def route_shape_pairs(trips: DataFrame, q: BaseQuery) -> DataFrame:
+def route_shape_pairs(trips: DataFrame, q: BaseQuery, groups: DataFrame | None = None) -> DataFrame:
     """J2 — distinct shape→route pairs under the query (A4 DISTINCT)."""
     return (
-        apply_query(trips, q)
+        query_trips(trips, q, groups)
         .where(F.col("shape_id").isNotNull())
-        .select("shape_id", "route_id")
+        .select(*group_keys(groups), "shape_id", "route_id")
         .distinct()
     )
 
@@ -117,15 +126,17 @@ def route_multilinestrings(
     routes: DataFrame,
     route_attributes: DataFrame | None,
     q: BaseQuery,
+    groups: DataFrame | None = None,
 ) -> DataFrame:
     """J2 + A9 — one MultiLineString per route: every shape LineString
     of the route collected (sorted by shape_id for determinism), route
-    props + optional attributes attached (examples/lines.geojson)."""
-    pairs = route_shape_pairs(trips, q)
+    props + optional attributes attached (examples/lines.geojson).
+    Each shape is assembled once, however many groups use it."""
+    pairs = route_shape_pairs(trips, q, groups)
     ls = shape_linestrings(shapes.join(pairs.select("shape_id").distinct(), "shape_id", "left_semi"))
     per_route = (
         ls.join(pairs, "shape_id")
-        .groupBy("route_id")
+        .groupBy(*group_keys(groups), "route_id")
         .agg(
             F.transform(
                 F.array_sort(
@@ -239,19 +250,19 @@ def stop_derived_linestrings(
     routes: DataFrame,
     route_attributes: DataFrame | None,
     q: BaseQuery,
+    groups: DataFrame | None = None,
 ) -> DataFrame:
     """Stop-derived LineString per (route_id, direction_id) for routes
     without shapes (reference geojson-utils.ts:209-253: toposorted stop
     graph, cycle → longest trip, then position-preserving stop lookup
     J4). Grouped-map kernel per route — each group's graph is tiny, so
     imperative logic is appropriate here and nowhere else."""
-    t = apply_query(trips, q).filter(F.col("shape_id").isNull()).select(
-        "trip_id", "route_id", "direction_id"
-    )
+    keys = [*group_keys(groups), "route_id", "direction_id"]
+    t = query_trips(trips, q, groups).filter(F.col("shape_id").isNull()).select("trip_id", *keys)
     st = (
         stop_times.join(t, "trip_id")
         .join(stops.select("stop_id", "stop_lat", "stop_lon"), "stop_id")
-        .select("route_id", "direction_id", "trip_id", "stop_sequence", "stop_id", "stop_lat", "stop_lon")
+        .select(*keys, "trip_id", "stop_sequence", "stop_id", "stop_lat", "stop_lon")
     )
 
     def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -260,18 +271,11 @@ def stop_derived_linestrings(
         coords = [[None, None]] * len(order)
         for sid, lat, lon in zip(pdf["stop_id"], pdf["stop_lat"], pdf["stop_lon"]):
             coords[pos[sid]] = [float(lon), float(lat)]
-        return pd.DataFrame(
-            {
-                "route_id": [key[0]],
-                "direction_id": [key[1]],
-                "coordinates": [coords],
-            }
-        )
+        return pd.DataFrame({**{k: [v] for k, v in zip(keys, key)}, "coordinates": [coords]})
 
-    out_schema = (
-        "route_id string, direction_id int, coordinates array<array<double>>"
-    )
-    lines = st.groupBy("route_id", "direction_id").applyInPandas(kernel, out_schema)
+    types = dict(st.dtypes)
+    out_schema = ", ".join(f"{k} {types[k]}" for k in keys) + ", coordinates array<array<double>>"
+    lines = st.groupBy(*keys).applyInPandas(kernel, out_schema)
     return lines.join(broadcast(route_props(routes, route_attributes)), "route_id")
 
 

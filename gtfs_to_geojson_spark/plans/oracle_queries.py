@@ -2447,7 +2447,7 @@ def a3_dissolve(spark, sf_dir):
     s = supplier_points(spark, sf_dir).filter(F.col("s_suppkey") <= 40)
     ring = geoagg.stop_buffer_ring_col(F.col("t_lat"), F.col("t_lon"), 400.0, steps=16)
     polys = s.select(F.array(ring).alias("polygon"))
-    parts = geoagg.dissolve_polygons(polys, poly_col="polygon", cell_res=10)
+    parts = [r["polygon"] for r in geoagg.dissolve_polygons(polys, poly_col="polygon", cell_res=10).collect()]
     centers = s.select("s_suppkey", "t_lon", "t_lat").collect()  # bounded <=40
     schema = "s_suppkey long, component long, n_members long"
     if not centers:

@@ -2,26 +2,25 @@
 
 The reference writes ``JSON.stringify(featureCollection)`` to one file
 per group — per agency, per (route, direction), or per shape
-(src/lib/gtfs-to-geojson.ts:160-162,225-228,239-243). The distributed
-equivalent of strict one-file-per-group is a grouped-map sink: each
-group's features land in one task which writes its file and returns a
-manifest row — the write itself is the parallel unit, no driver
-collect of feature payloads.
+(src/lib/gtfs-to-geojson.ts:160-162,225-228,239-243). Here one features
+DataFrame carries every group's features with its ``GROUP`` index; the
+driver streams it once, clustered by group, and writes the files one
+after another, holding at most two partitions of features at a time.
 """
 
 from __future__ import annotations
 
+import itertools
 import os
 import shutil
 import zipfile
+from typing import Iterable
 
-import pandas as pd
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from .functions.geo import filename_parts, sanitize_filename
+from .operators.filters import GROUP
 
-MANIFEST_SCHEMA = "filename string, n_features long, bytes long"
+ORDER = "_order"  # optional features column: order within a group's file
 
 
 def prep_directory(path: str, overwrite: bool = True) -> None:
@@ -34,68 +33,47 @@ def prep_directory(path: str, overwrite: bool = True) -> None:
     os.makedirs(path, exist_ok=True)
 
 
-def with_group_filename(df: DataFrame, part_cols: list, suffix: str = ".geojson") -> DataFrame:
-    """S7 — sanitized ``_``-joined filename with duplicate-uniquifying
-    index (reference appends an index when two routes collide after
-    sanitizing, src/lib/gtfs-to-geojson.ts:203-227)."""
-    name = sanitize_filename(filename_parts(*[F.col(c).cast("string") for c in part_cols]))
-    out = df.withColumn("_base", name)
-    w = Window.partitionBy("_base").orderBy(*[F.col(c).cast("string").asc_nulls_first() for c in part_cols])
-    dup = Window.partitionBy("_base")
-    out = out.withColumn("_n", F.count(F.lit(1)).over(dup)).withColumn(
-        "_i", F.dense_rank().over(w)
-    )
-    return out.withColumn(
-        "filename",
-        F.when(F.col("_n") > 1, F.concat(F.col("_base"), F.lit("_"), F.col("_i").cast("string")))
-        .otherwise(F.col("_base")),
-    ).withColumn("filename", F.concat(F.col("filename"), F.lit(suffix))).drop("_base", "_n", "_i")
+def write_geojson_groups(features: DataFrame, paths: list[str]) -> list[dict]:
+    """S6 — one ``FeatureCollection`` per group: the features of group
+    ``i`` (``GROUP`` = i) go to ``paths[i]``, in ``ORDER`` when the
+    frame has that column; a group without features gets an empty
+    collection. Returns the manifests (filename, n_features, bytes) in
+    group order.
+
+    One pass: ``toLocalIterator`` hands the driver one partition at a
+    time and computes the next one meanwhile. With several groups, a
+    hash repartition on ``GROUP`` plus a sort within partitions makes
+    each group one contiguous run, its features in a fixed order; a
+    single group streams in plan order (a union's children in turn)."""
+    if not paths:
+        return []
+    order = [GROUP] + ([ORDER] if ORDER in features.columns else [])
+    rows = features.select(*order, "feature_json")
+    if len(paths) > 1:
+        rows = rows.repartition(GROUP).sortWithinPartitions(*order, "feature_json")
+    done: dict[int, dict] = {}
+    stream = rows.toLocalIterator(prefetchPartitions=True)
+    for g, run in itertools.groupby(stream, key=lambda r: r[GROUP]):
+        if g in done:
+            raise RuntimeError(f"group {g} is not contiguous in the features stream")
+        done[g] = write_single_geojson((r["feature_json"] for r in run), paths[g])
+    for g, path in enumerate(paths):
+        if g not in done:
+            done[g] = write_single_geojson((), path)
+    return [done[g] for g in range(len(paths))]
 
 
-def write_geojson_grouped(features: DataFrame, out_dir: str, filename_col: str = "filename") -> pd.DataFrame:
-    """S6 — one ``FeatureCollection`` file per distinct filename.
-    Grouped-map: each group serializes + writes inside its task.
-    Returns the manifest (filename, n_features, bytes) as pandas."""
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        fname = key[0]
-        payload = (
-            '{"type":"FeatureCollection","features":['
-            + ",".join(pdf["feature_json"].tolist())
-            + "]}"
-        )
-        path = os.path.join(out_dir, fname)
-        with open(path, "w") as f:
-            f.write(payload)
-        return pd.DataFrame(
-            {"filename": [fname], "n_features": [len(pdf)], "bytes": [len(payload)]}
-        )
-
-    manifest = (
-        features.select(filename_col, "feature_json")
-        .groupBy(filename_col)
-        .applyInPandas(write_group, MANIFEST_SCHEMA)
-    )
-    return manifest.toPandas()
-
-
-def write_single_geojson(features: DataFrame, path: str) -> dict:
-    """S6 agency-level: one file for the whole run.
-
-    Streams via ``toLocalIterator`` — the driver holds ONE partition of
-    feature JSON at a time, never the whole collection (VERDICT r1: the
-    previous ``collect()`` was an unbounded driver buffer on the
-    agency-output hot path). Byte-identical output: same row order
-    (partition order), same separators."""
+def write_single_geojson(features: Iterable[str], path: str) -> dict:
+    """One FeatureCollection file from feature JSON strings, written as
+    they arrive (same separators as ``JSON.stringify``)."""
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     n = 0
     with open(path, "w") as f:
         f.write('{"type":"FeatureCollection","features":[')
-        for r in features.select("feature_json").toLocalIterator():
+        for fj in features:
             if n:
                 f.write(",")
-            f.write(r["feature_json"])
+            f.write(fj)
             n += 1
         f.write("]}")
     return {

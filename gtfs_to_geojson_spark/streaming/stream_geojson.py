@@ -22,7 +22,7 @@ from pyspark.sql import SparkSession
 from ..operators.filters import BaseQuery
 from ..operators.formats import fmt_stops
 from ..plans.run_spec import RunSpec
-from ..sinks import write_single_geojson
+from ..sinks import write_geojson_groups
 
 
 def stream_stops(spark: SparkSession, input_dir: str, stops_schema):
@@ -55,8 +55,8 @@ def run_stream_stops_geojson(
         batch_feed = dict(feed)
         batch_feed["stops"] = batch_df
         feats = fmt_stops(batch_feed, cfg, BaseQuery())
-        write_single_geojson(
-            feats, os.path.join(out_dir, f"stops_batch_{batch_id:06d}.geojson")
+        write_geojson_groups(
+            feats, [os.path.join(out_dir, f"stops_batch_{batch_id:06d}.geojson")]
         )
 
     q = (

@@ -209,46 +209,123 @@ def test_date_window_filters_services(spark, feed):
     assert 0 < n_win <= n_all
 
 
-def test_run_groups_feed_cached_single_scan(spark, feed, tmp_path, monkeypatch):
-    """VERDICT r2 item 3: the route/shape fan-out must see CACHED feed
-    tables (materialized InMemoryRelation — one source scan total, not
-    one per concurrent group job), and the caches must be released when
-    the run finishes."""
+def _pipeline_jobs(spark, feed, out_dir):
+    """Spark jobs one ``route``-output run submits, counted on this
+    thread's job group."""
     from gtfs_to_geojson_spark.plans import pipeline
 
-    checks = []
-    orig = pipeline._run_groups
+    sc = spark.sparkContext
+    group = f"route-jobs-{os.path.basename(out_dir)}"
+    sc.setJobGroup(group, "route output job count")
+    try:
+        stats = pipeline.run(spark, feed, RunSpec(output_format="lines", output_type="route",
+                                                  coordinate_precision=5, out_dir=out_dir))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return stats, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    def spy(feed_c, cfg, fmt, out_dir, tasks):
-        for name, df in feed_c.items():
-            if df is None:
-                continue
-            checks.append((name + ":level", df.storageLevel.useMemory))
-            plan = df._jdf.queryExecution().optimizedPlan().toString()
-            checks.append((name + ":inmem", "InMemoryRelation" in plan))
-        return orig(feed_c, cfg, fmt, out_dir, tasks)
 
-    monkeypatch.setattr(pipeline, "_run_groups", spy)
-    s = pipeline.run(
-        spark, feed,
-        RunSpec(output_format="lines", output_type="route",
-                coordinate_precision=5, out_dir=str(tmp_path / "cached")),
-    )
-    assert s["files"] > 1
-    assert checks and all(ok for _name, ok in checks), [
-        n for n, ok in checks if not ok
-    ]
-    # unpersisted afterwards: persist() registers the shared logical
-    # plan, so the fixture's own frames would stay hot if the finally
-    # block didn't release them
-    assert not feed["trips"].storageLevel.useMemory
-    assert not feed["stops"].storageLevel.useMemory
+def test_route_output_jobs_do_not_grow_with_groups(spark, tmp_path):
+    """Route output is one plan per run: a feed with 3× the routes (and
+    files) runs the same number of Spark jobs, up to AQE's timing (a
+    stage that another stage's empty result would have pruned may
+    already have started; one such job came and went between runs),
+    and the run leaves no feed table persisted. The per-group fan-out
+    this replaced ran more than ten jobs per extra file."""
+    from gtfs_to_geojson_spark import synth
+    from gtfs_to_geojson_spark.sources.gtfs import feed_from_pandas
+
+    small = feed_from_pandas(spark, synth.make_gtfs_feed(n_routes=4))
+    large = feed_from_pandas(spark, synth.make_gtfs_feed(n_routes=12))
+    s_small, jobs_small = _pipeline_jobs(spark, small, str(tmp_path / "small"))
+    s_large, jobs_large = _pipeline_jobs(spark, large, str(tmp_path / "large"))
+    assert s_large["files"] > 2 * s_small["files"] > 2
+    assert jobs_small > 0
+    assert abs(jobs_large - jobs_small) <= 2, (jobs_small, jobs_large)
+    for feed in (small, large):
+        assert not any(df.storageLevel.useMemory or df.storageLevel.useDisk
+                       for df in feed.values() if df is not None)
+
+
+@pytest.fixture(scope="module")
+def group_feed(spark):
+    """Small feed for per-group equivalence, trips on three routes:
+    R003 has no shapes (the stop-derived fallback); R002 mixes a null
+    and non-null direction_id, so its null-direction group shares trips
+    with its direction-0 group; R004 has one trip over 2 stops (convex
+    writes an empty file for it)."""
+    import pandas as pd
+
+    from gtfs_to_geojson_spark import synth
+    from gtfs_to_geojson_spark.sources.gtfs import feed_from_pandas
+
+    f = synth.make_gtfs_feed(n_routes=4, n_stops=30, trips_per_route=3, stops_per_trip=5, shape_pts=8)
+    f["trips"] = f["trips"][f["trips"].route_id.isin(["R002", "R003"])]
+    f["stop_times"] = f["stop_times"][f["stop_times"].trip_id.isin(f["trips"].trip_id)]
+    r = f["routes"].iloc[[0]].assign(route_id="R004", route_short_name="9")
+    f["routes"] = pd.concat([f["routes"], r], ignore_index=True)
+    t = f["trips"].iloc[[0]].assign(trip_id="T004_0", route_id="R004", direction_id=0,
+                                     trip_headsign="Shuttle", shape_id="SH004_0")
+    f["trips"] = pd.concat([f["trips"], t], ignore_index=True)
+    st = pd.DataFrame({"trip_id": ["T004_0"] * 2, "stop_id": ["S0001", "S0002"],
+                       "stop_sequence": [1, 2]})
+    f["stop_times"] = pd.concat([f["stop_times"], st], ignore_index=True)
+    stops = f["stops"].set_index("stop_id")
+    sh = pd.DataFrame({
+        "shape_id": ["SH004_0"] * 2,
+        "shape_pt_lat": stops.loc[["S0001", "S0002"], "stop_lat"].to_numpy(),
+        "shape_pt_lon": stops.loc[["S0001", "S0002"], "stop_lon"].to_numpy(),
+        "shape_pt_sequence": [0, 1],
+        "shape_dist_traveled": [0.0, 1.0],
+    })
+    f["shapes"] = pd.concat([f["shapes"], sh], ignore_index=True)
+    return feed_from_pandas(spark, f)
+
+
+def _canon(features) -> list[str]:
+    return sorted(json.dumps(f, sort_keys=True) for f in features)
+
+
+@pytest.mark.parametrize("name", sorted(fmt.FORMATS))
+def test_grouped_files_match_one_group_calls(spark, group_feed, tmp_path, name):
+    """Every file of a route/shape run holds exactly the features of
+    the one-group call ``fmt(feed, cfg, q.with_eq(...))`` for its group."""
+    from gtfs_to_geojson_spark.plans import pipeline
+
+    trips = group_feed["trips"].toPandas()
+    for otype in ("route", "shape"):
+        cfg = RunSpec(output_format=name, output_type=otype, coordinate_precision=5,
+                      out_dir=str(tmp_path / otype))
+        q = pipeline.build_base_query(group_feed, cfg)
+        names, table = pipeline._groups(spark, group_feed, cfg, q, "x")
+        stats = pipeline.run(spark, group_feed, cfg)
+        assert [o["filename"] for o in stats["outputs"]] == names
+        keys = [c for c in table.columns if c != "_group"]
+        groups = {r["_group"]: {k: r[k] for k in keys} for r in table.collect()}
+        if otype == "route":
+            assert {"route_id": "R002", "direction_id": None} in groups.values()
+            assert {"route_id": "R002", "direction_id": 0} in groups.values()
+            assert {"route_id": "R003", "direction_id": 0} in groups.values()
+            assert {"route_id": "R004", "direction_id": 0} in groups.values()
+            assert not trips[trips.route_id == "R003"].shape_id.notna().any()
+        empty = 0
+        for g, eq in groups.items():
+            with open(tmp_path / otype / names[g]) as fh:
+                got = json.load(fh)["features"]
+            want = _features(fmt.FORMATS[name](group_feed, cfg, q.with_eq(**eq)))
+            assert _canon(got) == _canon(want), (otype, names[g])
+            empty += not got
+            if name == "lines-and-stops":
+                kinds = [f["geometry"]["type"] == "Point" for f in got]
+                assert kinds == sorted(kinds), names[g]  # lines before stops
+        if name == "convex":
+            assert empty >= 1  # R004 / SH004_0: 2 distinct stops
 
 
 def test_route_output_type_concurrent_deterministic(spark, feed, tmp_path):
-    """Route output fans per-(route, direction) jobs out on the thread
-    pool; two runs must produce identical filename sets and identical
-    bytes (deterministic naming + per-group content)."""
+    """Route output writes one file per (route, direction); two runs
+    must produce identical filename sets and identical bytes
+    (deterministic naming + per-group content)."""
     from gtfs_to_geojson_spark.plans import pipeline
 
     spec = lambda d: RunSpec(output_format="lines", output_type="route",

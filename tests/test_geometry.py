@@ -172,8 +172,8 @@ def test_dissolve_salted_matches_unsalted(spark):
         pd.DataFrame({"polygon": polys_list}),
         schema="polygon array<array<array<double>>>",
     )
-    unsalted = geoagg.dissolve_polygons(polys, cell_res=8, salt_target_rows=None)
-    salted = geoagg.dissolve_polygons(polys, cell_res=8, salt_target_rows=30)
+    unsalted = [r["polygon"] for r in geoagg.dissolve_polygons(polys, cell_res=8, salt_target_rows=None).collect()]
+    salted = [r["polygon"] for r in geoagg.dissolve_polygons(polys, cell_res=8, salt_target_rows=30).collect()]
     assert unsalted and salted
 
     gx, gy = np.meshgrid(

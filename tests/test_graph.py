@@ -120,7 +120,7 @@ def test_geoagg_dissolve_components(spark):
 
     ring = geoagg.stop_buffer_ring_col(F.col("t_lat"), F.col("t_lon"), r, steps=16)
     polys = s.select(F.array(ring).alias("polygon"))
-    parts = geoagg.dissolve_polygons(polys, poly_col="polygon", cell_res=10)
+    parts = [r["polygon"] for r in geoagg.dissolve_polygons(polys, poly_col="polygon", cell_res=10).collect()]
 
     comp = OQ.a3b_dissolve_components(spark, sf)
     n_components = comp.select("component").distinct().count()

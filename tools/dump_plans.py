@@ -1,8 +1,10 @@
 """Dump formatted physical plans for the key operators to BENCH/plans/
 plus a summary of plan-quality facts (broadcast joins, pushed filters,
-WholeStageCodegen spans, zero Python in JVM-only paths).
+WholeStageCodegen spans, zero Python in JVM-only paths), and the
+grouped ``route`` output plans of the GTFS envelope and lines-and-stops
+formats.
 
-Pure .explain() — no jobs are executed. Usage: python tools/dump_plans.py
+Pure .explain() — no jobs are executed. Usage: python tools/dump_plans.py [sf_dir]
 """
 
 from __future__ import annotations
@@ -20,6 +22,35 @@ def fmt(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def gtfs_route_plans(spark) -> dict:
+    """``route`` output of two GTFS formats on the synth feed: ONE
+    grouped features plan covers every (route, direction) file. The
+    group table is built from the pandas feed, as ``pipeline._groups``
+    would build it, so that no Spark job runs."""
+    import pandas as pd
+
+    from gtfs_to_geojson_spark import synth
+    from gtfs_to_geojson_spark.operators import formats
+    from gtfs_to_geojson_spark.operators.filters import GROUP, BaseQuery
+    from gtfs_to_geojson_spark.plans.run_spec import RunSpec
+    from gtfs_to_geojson_spark.sources.gtfs import feed_from_pandas
+
+    feed_pd = synth.make_gtfs_feed()
+    keys = feed_pd["trips"][["route_id", "direction_id"]].drop_duplicates()
+    rows = [
+        (i, r, None if pd.isna(d) else int(d))
+        for i, (r, d) in enumerate(sorted(keys.itertuples(index=False), key=str))
+    ]
+    table = spark.createDataFrame(rows, f"{GROUP} int, route_id string not null, direction_id int")
+    groups = formats.Groups(table, feed_pd["agency"].sort_values("agency_id").iloc[0]["agency_name"])
+    feed = feed_from_pandas(spark, feed_pd)
+    cfg = RunSpec(coordinate_precision=5)
+    return {
+        f"gtfs_{name}_route": formats.FORMATS[name](feed, cfg, BaseQuery(), groups)
+        for name in ("envelope", "lines-and-stops")
+    }
 
 
 def main():
@@ -129,6 +160,8 @@ def main():
     plans["kmv_distinct"] = dedup.kmv_distinct(
         li, group_cols=["_g"], value_col="l_partkey", k=64
     )
+
+    plans.update(gtfs_route_plans(spark))
 
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH", "plans")
     os.makedirs(out_dir, exist_ok=True)
