@@ -5,7 +5,7 @@ reuse (src/lib/gtfs-to-geojson.ts:287). The engine generalizes it to
 partition granularity: work is bucketed by a stable key (cell bucket),
 each completed bucket appends a manifest row
 ``(bucket, status, rows, ms, attempt)`` to a parquet manifest, and a
-restart anti-joins the input buckets against the manifest so only
+restart skips every bucket the manifest records as done, so only
 missing buckets recompute (SURVEY.md §4 resume/lineage).
 
 No Structured Streaming is needed — the reference is strictly batch —
@@ -15,12 +15,12 @@ but the manifest directory is exactly the shape a
 
 from __future__ import annotations
 
-import os
 import time
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gtfs_to_geojson_spark.stages import mkdirs
 
 MANIFEST_SCHEMA = "bucket long, status string, rows long, ms double, attempt int"
 
@@ -29,62 +29,28 @@ class LineageManifest:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        os.makedirs(path, exist_ok=True)
+        mkdirs(spark, path)
 
     def completed_buckets(self) -> DataFrame:
-        """Buckets already done (idempotent re-reads tolerated)."""
-        files = [f for f in os.listdir(self.path) if f.endswith(".parquet")]
-        if not files:
-            return self.spark.createDataFrame([], MANIFEST_SCHEMA).select("bucket")
+        """Buckets already done (idempotent re-reads tolerated). The
+        schema-typed read returns no rows for an empty manifest."""
         return (
-            self.spark.read.parquet(self.path)
+            self.spark.read.schema(MANIFEST_SCHEMA)
+            .parquet(self.path)
             .filter(F.col("status") == "done")
             .select("bucket")
             .distinct()
         )
 
-    def pending(self, work: DataFrame, bucket_col: str = "bucket") -> DataFrame:
-        """Anti-join resume: only buckets with no 'done' manifest row."""
-        done = self.completed_buckets().withColumnRenamed("bucket", bucket_col)
-        return work.join(done, bucket_col, "left_anti")
-
     def mark_done(self, rows: list[tuple[int, int, float]], attempt: int = 1) -> None:
-        """Append manifest rows (bucket, n_rows, ms). Parquet append —
-        one small file per commit batch, mergeable."""
-        pdf = pd.DataFrame(
-            [(b, "done", n, ms, attempt) for b, n, ms in rows],
-            columns=["bucket", "status", "rows", "ms", "attempt"],
-        )
-        fname = os.path.join(self.path, f"manifest_{int(time.time() * 1e6)}_{attempt}.parquet")
-        # write-then-rename: a kill mid-write must not leave a truncated
-        # .parquet that breaks the resume read (rename is atomic on one
-        # filesystem; the dot-prefix marks the temp file hidden so
-        # Spark's directory reader never globs a partial file)
-        tmp = os.path.join(self.path, "." + os.path.basename(fname) + ".tmp")
-        pdf.to_parquet(tmp, index=False)
-        os.rename(tmp, fname)
-
-
-def run_bucketed(
-    spark: SparkSession,
-    inputs: DataFrame,
-    bucket_col: str,
-    process_bucket,
-    manifest: LineageManifest,
-) -> tuple[int, int]:
-    """Process each pending bucket through ``process_bucket(df) → row
-    count``; returns (n_processed, n_skipped). The per-bucket kernel
-    runs as a normal Spark job over only that bucket's rows — a killed
-    run resumes with completed buckets untouched (tested in
-    tests/test_lineage.py)."""
-    all_buckets = [r[0] for r in inputs.select(bucket_col).distinct().collect()]
-    done = {r[0] for r in manifest.completed_buckets().collect()}
-    todo = sorted(b for b in all_buckets if b not in done)
-    for b in todo:
-        t0 = time.time()
-        n = process_bucket(inputs.filter(F.col(bucket_col) == F.lit(b)))
-        manifest.mark_done([(int(b), int(n), (time.time() - t0) * 1000.0)])
-    return len(todo), len(all_buckets) - len(todo)
+        """Append manifest rows (bucket, n_rows, ms): one small parquet
+        file per commit batch. Spark's commit protocol keeps a killed
+        append's partial file in hidden ``_temporary`` staging, so the
+        resume read never sees it."""
+        self.spark.createDataFrame(
+            [(int(b), "done", int(n), float(ms), attempt) for b, n, ms in rows],
+            MANIFEST_SCHEMA,
+        ).coalesce(1).write.mode("append").parquet(self.path)
 
 
 def run_bucketed_waves(
@@ -96,13 +62,13 @@ def run_bucketed_waves(
     wave_size: int = 64,
     select_cols: list | None = None,
 ) -> tuple[int, int]:
-    """Scale variant of run_bucketed: pending buckets are processed in
-    WAVES — one partitioned write per wave_size buckets instead of one
-    driver-loop job per bucket (thousands of buckets ⇒ thousands of
-    tiny jobs is a driver bottleneck). Dynamic partition overwrite
-    means a killed wave re-runs cleanly: only its own bucket
-    directories are replaced, completed waves' manifest rows keep them
-    out of the pending set. Returns (n_buckets_processed, n_skipped).
+    """Process every bucket with no 'done' manifest row, in WAVES: one
+    partitioned write per wave_size buckets instead of one driver-loop
+    job per bucket (thousands of buckets ⇒ thousands of tiny jobs is a
+    driver bottleneck). Dynamic partition overwrite means a killed wave
+    re-runs cleanly: only its own bucket directories are replaced, and
+    completed waves' manifest rows keep them out of the pending set.
+    Returns (n_buckets_processed, n_skipped).
     """
     all_buckets = [r[0] for r in inputs.select(bucket_col).distinct().collect()]
     done = {r[0] for r in manifest.completed_buckets().collect()}

@@ -20,15 +20,9 @@ composed as ONE resumable ``spark-submit`` entry point:
 
 Input: parquet with (doc_id:long, text:string[, <sample-col>]).
 
-Resume model: each stage writes its survivor frame to
-``<out>/<stage>`` parquet; a stage is complete iff its ``_SUCCESS``
-marker exists (Spark only commits the marker after all task commits,
-so a killed run leaves no half-visible stage). ``--resume`` reads
-completed stages instead of recomputing — a killed 6-stage run
-restarts at the stage it died in, not from scratch. Bucket-level
-(finer) resume for a single giant stage is `run_bucketed_waves`
-(jobs/tile_assign_job.py); stage-level is the right granularity here
-because every stage is a different shuffle shape.
+Resume model: one checkpoint per stage, ``<out>/<stage>`` parquet, as
+described in gtfs_to_geojson_spark/stages.py. Stage-level is the right
+granularity here because every stage is a different shuffle shape.
 
 Scale notes (each inherited from the operator's own contract):
 exact dedup is one groupBy on a digest; LSH shuffles ids+longs only
@@ -44,26 +38,7 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
-import shutil
 import time
-
-
-def _stage(spark, out: str, name: str, resume: bool, build, metrics: list):
-    """Write-once stage checkpoint: build() → parquet(<out>/<name>),
-    skipped under --resume when the _SUCCESS marker exists."""
-    path = f"{out}/{name}"
-    t0 = time.time()
-    if resume and os.path.exists(f"{path}/_SUCCESS"):
-        df = spark.read.parquet(path)
-        metrics.append({"stage": name, "rows": df.count(), "sec": 0.0, "resumed": True})
-        return df
-    build().write.mode("overwrite").parquet(path)
-    df = spark.read.parquet(path)
-    metrics.append(
-        {"stage": name, "rows": df.count(), "sec": round(time.time() - t0, 2), "resumed": False}
-    )
-    return df
 
 
 def main():
@@ -86,24 +61,14 @@ def main():
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    b = SparkSession.builder.appName("curate-corpus")
-    b = b.config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    b = b.config("spark.sql.adaptive.enabled", "true")
-    b = b.config("spark.sql.adaptive.skewJoin.enabled", "true")
-    if args.shuffle_partitions:
-        b = b.config("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
-    spark = b.getOrCreate()
-
     from gtfs_to_geojson_spark.operators import dedup, graph, scan, text
+    from gtfs_to_geojson_spark.stages import JobOutput, job_session
 
-    if not args.resume:
-        shutil.rmtree(args.out, ignore_errors=True)
-    os.makedirs(args.out, exist_ok=True)
+    spark = job_session("curate-corpus", args.shuffle_partitions)
+    job = JobOutput(spark, args.out, args.resume)
 
-    metrics: list = []
     t0 = time.time()
     docs = spark.read.parquet(args.docs)
 
@@ -112,7 +77,7 @@ def main():
         keep = dedup.exact_dedup(docs).select(F.col("keep_id").alias("doc_id"))
         return docs.join(keep, "doc_id", "left_semi")
 
-    exact = _stage(spark, args.out, "s1_exact", args.resume, s1, metrics)
+    exact = job.stage("s1_exact", s1)
 
     # 2. near-dup: LSH candidate pairs → connected components → keep
     # the canonical (min-id) member per cluster. Docs in no pair are
@@ -131,7 +96,7 @@ def main():
         )
         return exact.join(non_canonical, "doc_id", "left_anti")
 
-    near = _stage(spark, args.out, "s2_neardup", args.resume, s2, metrics)
+    near = job.stage("s2_neardup", s2)
 
     # 3. quality + repetition filters — ONE map stage (append chain);
     # .drop("n_words"): quality_score and repetition_stats both emit it
@@ -145,7 +110,7 @@ def main():
         )
         return kept.select(*near.columns)
 
-    clean = _stage(spark, args.out, "s3_quality", args.resume, s3, metrics)
+    clean = job.stage("s3_quality", s3)
 
     # 4. decontamination vs the benchmark set (optional)
     if args.eval:
@@ -154,7 +119,7 @@ def main():
             hits = dedup.decontaminate(clean, ev, n=args.decontam_n).select("doc_id")
             return clean.join(hits, "doc_id", "left_anti")
 
-        clean = _stage(spark, args.out, "s4_decontam", args.resume, s4, metrics)
+        clean = job.stage("s4_decontam", s4)
 
     # 5. deterministic stratified sampling (optional)
     if args.sample_col and args.sample_rates:
@@ -168,7 +133,7 @@ def main():
                 clean, args.sample_col, "doc_id", rates_per_million=rates
             )
 
-        clean = _stage(spark, args.out, "s5_sample", args.resume, s5, metrics)
+        clean = job.stage("s5_sample", s5)
 
     # 6. token counting + shard packing → final training shards
     def s6():
@@ -178,7 +143,7 @@ def main():
             shard_size=args.shard_tokens,
         ).drop("running_total")
 
-    final = _stage(spark, args.out, "shards", args.resume, s6, metrics)
+    final = job.stage("shards", s6)
 
     n_docs_in = docs.count()
     n_shards = final.select("shard_id").distinct().count()
@@ -187,9 +152,9 @@ def main():
             {
                 "job": "curate_corpus",
                 "docs_in": n_docs_in,
-                "docs_out": metrics[-1]["rows"],
+                "docs_out": job.stages[-1]["rows"],
                 "n_shards": n_shards,
-                "stages": metrics,
+                "stages": job.stages,
                 "sec": round(time.time() - t0, 2),
                 "docs_per_sec": round(n_docs_in / max(time.time() - t0, 1e-9), 1),
             }

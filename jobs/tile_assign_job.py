@@ -26,6 +26,9 @@ The image table has the BASELINE.json ``input_hint`` schema
 
 A killed run is resumed with the identical command + ``--resume``;
 tests/test_lineage.py proves completed buckets are not recomputed.
+Without ``--resume`` the whole ``<out>`` is cleared first (the shared
+rule in gtfs_to_geojson_spark/stages.py), so no bucket of an earlier
+run survives into the new one.
 """
 
 from __future__ import annotations
@@ -35,55 +38,36 @@ import json
 import time
 
 
-def main():
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--images", required=True)
-    ap.add_argument("--out", required=True)
-    ap.add_argument("--boxes-from-suppliers", default=None)
-    ap.add_argument("--res", type=int, default=14)
-    ap.add_argument("--bucket-res", type=int, default=4)
-    ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--wave-size", type=int, default=64,
-                    help="buckets per write job (wave-mode lineage)")
-    ap.add_argument("--shuffle-partitions", type=int, default=None)
-    args = ap.parse_args()
-
-    from pyspark.sql import SparkSession
+def run(spark, images_path: str, out: str, boxes_from_suppliers: str | None = None,
+        res: int = 14, bucket_res: int = 4, wave_size: int = 64,
+        resume: bool = False) -> dict:
+    """Assign every image to its tile (and envelope) into
+    ``<out>/assignments``; returns the job's metrics. Importable for
+    tests; spark-submit enters via main()."""
     from pyspark.sql import functions as F
-
-    # spark-submit owns the session config (master/executors); only
-    # engine-required confs are set here
-    b = SparkSession.builder.appName("tile-assign")
-    b = b.config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    b = b.config("spark.sql.adaptive.enabled", "true")
-    b = b.config("spark.sql.adaptive.skewJoin.enabled", "true")
-    if args.shuffle_partitions:
-        b = b.config("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
-    spark = b.getOrCreate()
 
     from gtfs_to_geojson_spark import cells
     from gtfs_to_geojson_spark.operators import spatial
+    from gtfs_to_geojson_spark.sources.images import read_images
+    from gtfs_to_geojson_spark.stages import JobOutput
     from gtfs_to_geojson_spark.streaming.lineage import (
         LineageManifest,
         run_bucketed_waves,
     )
 
-    from gtfs_to_geojson_spark.sources.images import read_images
-
     t0 = time.time()
+    job = JobOutput(spark, out, resume)
     try:
         # input_hint schema contract (Iceberg table name or parquet path)
-        images = read_images(spark, args.images)
+        images = read_images(spark, images_path)
     except ValueError:
         # tolerate pre-projected tables (e.g. phash-only benches)
-        images = spark.read.parquet(args.images)
-    tagged = spatial.assign_images_to_tiles(images, res=args.res)
-    work = tagged.withColumn(
-        "bucket", cells.parent_col(F.col("tile"), args.res, args.bucket_res)
-    )
+        images = spark.read.parquet(images_path)
+    tagged = spatial.assign_images_to_tiles(images, res=res)
+    work = tagged.withColumn("bucket", cells.parent_col(F.col("tile"), res, bucket_res))
 
-    if args.boxes_from_suppliers:
-        s = spark.read.parquet(args.boxes_from_suppliers)
+    if boxes_from_suppliers:
+        s = spark.read.parquet(boxes_from_suppliers)
         # supplier-derived envelope boxes (same derivation as bench)
         from gtfs_to_geojson_spark.plans import oracle_queries as OQ
 
@@ -99,44 +83,51 @@ def main():
             (cy + hh).alias("max_lat"),
         )
         work = spatial.point_in_envelope_join(
-            work, boxes, res=args.res
+            work, boxes, res=res
         ).withColumnRenamed("s_suppkey", "envelope_id")
-
-    manifest = LineageManifest(spark, f"{args.out}/_lineage")
-    if not args.resume:
-        # fresh run: manifest dir may hold a prior run's rows — the
-        # caller chose not to resume, so process everything
-        import os
-        import shutil
-
-        shutil.rmtree(f"{args.out}/_lineage", ignore_errors=True)
-        os.makedirs(f"{args.out}/_lineage", exist_ok=True)
-
-    out_cols = [c for c in work.columns if c != "bytes"]
 
     n_done, n_skipped = run_bucketed_waves(
         spark,
         work,
         "bucket",
-        f"{args.out}/assignments",
-        manifest,
-        wave_size=args.wave_size,
-        select_cols=out_cols,
+        job.path("assignments"),
+        LineageManifest(spark, job.path("_lineage")),
+        wave_size=wave_size,
+        select_cols=[c for c in work.columns if c != "bytes"],
     )
     dt = time.time() - t0
-    total_rows = spark.read.parquet(f"{args.out}/assignments").count()
-    print(
-        json.dumps(
-            {
-                "job": "tile_assign",
-                "buckets_processed": n_done,
-                "buckets_skipped_resume": n_skipped,
-                "rows": total_rows,
-                "sec": round(dt, 3),
-                "rows_per_sec": round(total_rows / dt, 1),
-            }
-        )
+    total_rows = spark.read.parquet(job.path("assignments")).count()
+    return {
+        "job": "tile_assign",
+        "buckets_processed": n_done,
+        "buckets_skipped_resume": n_skipped,
+        "rows": total_rows,
+        "sec": round(dt, 3),
+        "rows_per_sec": round(total_rows / dt, 1),
+    }
+
+
+def main():
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--images", required=True)
+    ap.add_argument("--out", required=True)
+    ap.add_argument("--boxes-from-suppliers", default=None)
+    ap.add_argument("--res", type=int, default=14)
+    ap.add_argument("--bucket-res", type=int, default=4)
+    ap.add_argument("--resume", action="store_true")
+    ap.add_argument("--wave-size", type=int, default=64,
+                    help="buckets per write job (wave-mode lineage)")
+    ap.add_argument("--shuffle-partitions", type=int, default=None)
+    args = ap.parse_args()
+
+    from gtfs_to_geojson_spark.stages import job_session
+
+    spark = job_session("tile-assign", args.shuffle_partitions)
+    metrics = run(
+        spark, args.images, args.out, args.boxes_from_suppliers, args.res,
+        args.bucket_res, args.wave_size, args.resume,
     )
+    print(json.dumps(metrics))
     spark.stop()
 
 

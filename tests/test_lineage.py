@@ -1,77 +1,23 @@
 """Checkpoint/lineage resume: a killed run must not recompute
 completed buckets (SURVEY.md §7 step 10)."""
 
-import pandas as pd
-import pytest
-from pyspark.sql import functions as F
-
-from gtfs_to_geojson_spark.streaming.lineage import LineageManifest, run_bucketed
+from gtfs_to_geojson_spark.streaming.lineage import LineageManifest
 
 
-@pytest.fixture()
-def work(spark):
-    pdf = pd.DataFrame({"bucket": [i % 5 for i in range(100)], "v": range(100)})
-    return spark.createDataFrame(pdf)
-
-
-def test_resume_skips_completed(spark, work, tmp_path):
-    manifest = LineageManifest(spark, str(tmp_path / "m"))
-    processed = []
-
-    def proc(df):
-        n = df.count()
-        processed.append(n)
-        return n
-
-    # simulate a run killed after 2 buckets
-    class Killed(Exception):
-        pass
-
-    calls = {"n": 0}
-
-    def proc_killing(df):
-        if calls["n"] >= 2:
-            raise Killed()
-        calls["n"] += 1
-        return proc(df)
-
-    with pytest.raises(Killed):
-        run_bucketed(spark, work, "bucket", proc_killing, manifest)
-    assert len(processed) == 2
-    done_before = {r[0] for r in manifest.completed_buckets().collect()}
-    assert len(done_before) == 2
-
-    # resume: only the remaining 3 buckets run
-    n_proc, n_skip = run_bucketed(spark, work, "bucket", proc, manifest)
-    assert n_proc == 3 and n_skip == 2
-    assert len(processed) == 5
-    assert sum(processed) == 100  # every row processed exactly once
-
-    # idempotent second resume: nothing to do
-    n_proc2, n_skip2 = run_bucketed(spark, work, "bucket", proc, manifest)
-    assert n_proc2 == 0 and n_skip2 == 5
-
-
-def test_pending_anti_join(spark, work, tmp_path):
-    manifest = LineageManifest(spark, str(tmp_path / "m2"))
-    manifest.mark_done([(0, 20, 1.0), (3, 20, 1.0)])
-    pending = manifest.pending(work, "bucket")
-    assert {r["bucket"] for r in pending.select("bucket").distinct().collect()} == {1, 2, 4}
-
-
-def test_truncated_tmp_manifest_ignored(spark, work, tmp_path):
-    """mark_done is write-then-rename: a kill mid-write leaves only a
-    dot-prefixed ``.tmp`` file, which the resume read must ignore —
-    even if the kill truncated it to garbage bytes."""
+def test_truncated_tmp_manifest_ignored(spark, tmp_path):
+    """A kill mid-append leaves only hidden partial files — dot-prefixed
+    or under Spark's ``_temporary`` staging — which the resume read must
+    ignore, even if the kill truncated them to garbage bytes."""
     man_dir = tmp_path / "m3"
     manifest = LineageManifest(spark, str(man_dir))
+    assert manifest.completed_buckets().count() == 0
     manifest.mark_done([(0, 20, 1.0), (3, 20, 1.0)])
-    # a kill mid-to_parquet: half-written temp file, never renamed
     (man_dir / ".manifest_999_1.parquet.tmp").write_bytes(b"PAR1\x00trunc")
+    staged = man_dir / "_temporary" / "0" / "_temporary" / "attempt_0"
+    staged.mkdir(parents=True)
+    (staged / "part-00000.snappy.parquet").write_bytes(b"PAR1\x00trunc")
     done = {r[0] for r in manifest.completed_buckets().collect()}
     assert done == {0, 3}
-    pending = manifest.pending(work, "bucket")
-    assert {r["bucket"] for r in pending.select("bucket").distinct().collect()} == {1, 2, 4}
 
 
 def test_run_bucketed_waves_resume(spark, tmp_path):
@@ -115,3 +61,45 @@ def test_run_bucketed_waves_resume(spark, tmp_path):
     back = spark.read.parquet(out)
     assert back.count() == 1000
     assert back.select("id").distinct().count() == 1000
+
+    # run 3: idempotent — nothing pending, nothing rewritten, and the
+    # manifest records every bucket once with its committed row count
+    m3 = LineageManifest(spark, man_dir)
+    assert run_bucketed_waves(spark, df, "bucket", out, m3, wave_size=4) == (0, 10)
+    assert spark.read.parquet(out).count() == 1000
+    rows = spark.read.parquet(man_dir).groupBy("bucket").agg(
+        F.count("*").alias("n"), F.sum("rows").alias("rows")
+    ).collect()
+    assert len(rows) == 10
+    assert all(r["n"] == 1 and r["rows"] == 100 for r in rows)
+
+
+def test_tile_assign_job_fresh_run_replaces_output(spark, tmp_path):
+    """A fresh run (no --resume) clears all of --out: a smaller second
+    input must not inherit buckets the first run wrote."""
+    import pathlib
+    import sys
+
+    from pyspark.sql import functions as F
+
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
+    from jobs import tile_assign_job
+
+    # phash-only table (the job tolerates pre-projected input); the
+    # geotags cover one city, so buckets must be fine (res 13, as in
+    # tools/resume_bench.py) to split it
+    def images(n, path):
+        spark.range(n).select(
+            F.col("id").cast("string").alias("image_id"), F.xxhash64("id").alias("phash")
+        ).write.parquet(path)
+        return path
+
+    big = images(2000, str(tmp_path / "big.parquet"))
+    small = images(10, str(tmp_path / "small.parquet"))
+    out = str(tmp_path / "assign")
+
+    first = tile_assign_job.run(spark, big, out, bucket_res=13)
+    assert first["rows"] == 2000 and first["buckets_processed"] > 10
+    second = tile_assign_job.run(spark, small, out, bucket_res=13)
+    assert second["rows"] == 10
+    assert second["buckets_skipped_resume"] == 0

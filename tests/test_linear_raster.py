@@ -665,12 +665,15 @@ def test_locate_position_roundtrip(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_tile_pyramid_job_levels_and_resume(spark, tmp_path):
+@pytest.mark.parametrize("as_uri", [False, True], ids=["path", "file_uri"])
+def test_tile_pyramid_job_levels_and_resume(spark, tmp_path, as_uri):
     """The resumable pyramid job: every committed level must equal
     rasterizing the SAME points directly at that res (write-per-level
     = lineage break + resume unit), counts conserve across levels,
-    --resume skips committed levels, and --render emits decodable
-    tiles."""
+    --resume skips committed levels and rebuilds a level whose write
+    was killed before its _SUCCESS marker, and --render emits
+    decodable tiles. ``out`` is given as a plain path and as a
+    ``file://`` URI (any Hadoop filesystem)."""
     import json as _json
     import sys
 
@@ -683,26 +686,33 @@ def test_tile_pyramid_job_levels_and_resume(spark, tmp_path):
     )
     src = str(tmp_path / "pts.parquet")
     spark.createDataFrame(pts).write.parquet(src)
-    out = str(tmp_path / "pyr")
+    local_out = tmp_path / "pyr"
+    out = local_out.as_uri() if as_uri else str(local_out)
 
     metrics = tile_pyramid_job.run(
         spark, src, out, tile_res=9, px_bits=3, min_res=6, render=True
     )
-    by = {m["level"]: m for m in metrics}
+    by = {m["stage"]: m for m in metrics}
     assert set(by) == {"z9", "z8", "z7", "z6", "tiles_z9", "tiles_z8", "tiles_z7", "tiles_z6"}
     df = spark.createDataFrame(pts)
-    for res in (9, 8, 7, 6):
-        got = (
+
+    def level(res):
+        return (
             spark.read.parquet(f"{out}/z{res}")
             .toPandas().sort_values(["tile", "px_x", "px_y"]).reset_index(drop=True)
         )
-        want = (
+
+    def direct(res):
+        return (
             raster.rasterize_counts(df, res, 3)
             .toPandas().sort_values(["tile", "px_x", "px_y"]).reset_index(drop=True)
         )
-        pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+    for res in (9, 8, 7, 6):
+        got = level(res)
+        pd.testing.assert_frame_equal(got, direct(res), check_dtype=False)
         assert got.n.sum() == 5000
-    meta = _json.load(open(f"{out}/metrics.json"))
+    meta = _json.loads((local_out / "metrics.json").read_text())
     assert meta["total_points"] == 5000
     # a rendered tile decodes to the count grid (spot check one tile)
     tiles = spark.read.parquet(f"{out}/tiles_z9").toPandas()
@@ -710,27 +720,23 @@ def test_tile_pyramid_job_levels_and_resume(spark, tmp_path):
     img = images.decode(bytes(tiles.iloc[0]["image"]), "png")
     assert img.shape == (8, 8, 3)
 
-    # resume: kill levels z7-and-coarser, rerun — z9/z8 must be
-    # skipped (resumed=True) and the rebuilt levels identical
+    # resume: z6 is gone and z7 kept its part files but lost its
+    # _SUCCESS marker (a killed write) — z9/z8 must be skipped
+    # (resumed=True), z7/z6 rebuilt and identical to the direct raster
     import shutil as _shutil
 
-    for name in ("z7", "z6"):
-        _shutil.rmtree(f"{out}/{name}")
+    _shutil.rmtree(local_out / "z6")
+    (local_out / "z7" / "_SUCCESS").unlink()
+    assert list((local_out / "z7").glob("part-*.parquet"))
     m2 = tile_pyramid_job.run(
         spark, src, out, tile_res=9, px_bits=3, min_res=6, render=False, resume=True
     )
-    by2 = {m["level"]: m for m in m2}
+    by2 = {m["stage"]: m for m in m2}
     assert by2["z9"]["resumed"] and by2["z8"]["resumed"]
     assert not by2["z7"]["resumed"] and not by2["z6"]["resumed"]
-    got6 = (
-        spark.read.parquet(f"{out}/z6")
-        .toPandas().sort_values(["tile", "px_x", "px_y"]).reset_index(drop=True)
-    )
-    want6 = (
-        raster.rasterize_counts(df, 6, 3)
-        .toPandas().sort_values(["tile", "px_x", "px_y"]).reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got6, want6, check_dtype=False)
+    assert (local_out / "z7" / "_SUCCESS").exists()
+    for res in (7, 6):
+        pd.testing.assert_frame_equal(level(res), direct(res), check_dtype=False)
 
 
 def _repo_root():
