@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import skew
+
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact dedup via md5 digest: keeps the smallest id per digest
@@ -371,30 +373,20 @@ def _salted_bucket_pairs(
     """Distinct candidate pairs (id_a < id_b) from a (bucket, id) frame
     — the LSH candidate generator shared by MinHash and SimHash.
 
-    Scale guard (VERDICT r1 hot-bucket fix): a naive self-join is
-    quadratic per bucket IN ONE TASK — boilerplate-heavy web corpora
-    routinely put a large share of documents in one band bucket. A
-    bucket histogram splits buckets three ways:
-
-    * normal (≤ target_bucket_rows): plain equi-self-join;
-    * hot: SALTED self-join — each member keeps one deterministic salt
-      in [0, g), the other side is replicated to all g salts,
-      g = ceil(m / target_bucket_rows) per bucket — every pair still
-      matches exactly once (in the left member's salt partition), so
-      the pair set is IDENTICAL, but per-task input drops from m to
-      m/g + m and per-task output from m² to m·target_bucket_rows;
-    * degenerate (> max_bucket_size, opt-in): excluded entirely, with
-      the dropped membership counted and logged — no silent truncation.
-
-    The hot-bucket histogram is broadcast: by construction it holds
-    only buckets above target_bucket_rows, a tiny fraction of buckets.
+    A naive self-join is quadratic per bucket IN ONE TASK, and
+    boilerplate-heavy web corpora routinely put a large share of
+    documents in one band bucket. So the self-join is salted (``skew``):
+    a bucket of m > target_bucket_rows members splits into
+    g = ceil(m / target_bucket_rows) lanes, each member keeps one lane
+    on the left side and is copied to all g lanes on the right, and
+    cold buckets join in lane 0. Every pair still matches exactly once
+    (in the left member's lane), so the pair set is IDENTICAL, but
+    per-task input drops from m to m/g + m and per-task output from m²
+    to m·target_bucket_rows. A bucket larger than ``max_bucket_size``
+    (opt-in) is excluded entirely, with the dropped membership counted
+    and logged — no silent truncation.
     """
-    hot = (
-        buckets.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("_m"))
-        .filter(F.col("_m") > target_bucket_rows)
-    )
-    b2 = buckets.join(F.broadcast(hot), "bucket", "left")
+    hot = skew.hot_keys(buckets, "bucket", target_bucket_rows)
     if max_bucket_size is not None:
         if max_bucket_size < target_bucket_rows:
             raise ValueError(
@@ -403,51 +395,34 @@ def _salted_bucket_pairs(
                 "the two thresholds would silently be neither salted nor "
                 "dropped consistently"
             )
-        # Exact eager accounting. An r2 attempt deferred this via
-        # Observation + a logging thread, but CollectMetrics reflects
-        # only the rows the FIRST action actually scans (a limit()/
-        # isEmpty probe under-counts or reports 0) and an unexecuted
-        # plan leaks a thread blocked in obs.get forever — both break
-        # the "no silent truncation" audit promise. Setting
-        # max_bucket_size is an explicit opt-in to drop auditing, so
-        # the exact count is paid for up front: one aggregation pass
-        # over the bucket histogram (map-side partial agg, collects
-        # two numbers), logged at plan-construction time.
+        # Exact eager accounting. Deferring it via Observation + a
+        # logging thread does not work: CollectMetrics reflects only the
+        # rows the FIRST action actually scans (a limit()/isEmpty probe
+        # under-counts or reports 0) and an unexecuted plan leaks a
+        # thread blocked in obs.get forever — both break the "no silent
+        # truncation" audit promise. Setting max_bucket_size is an
+        # explicit opt-in to drop auditing, so the exact count is paid
+        # for up front: one aggregation pass over the hot-bucket table
+        # (collects two numbers), logged at plan-construction time.
         import logging
 
-        drop_row = (
-            hot.filter(F.col("_m") > max_bucket_size)
-            .agg(
-                F.coalesce(F.sum("_m"), F.lit(0)).alias("memberships"),
-                F.count(F.lit(1)).alias("buckets"),
-            )
-            .first()
-        )
+        dropped = hot.filter(F.col("_n") > max_bucket_size)
+        drop_row = dropped.agg(
+            F.coalesce(F.sum("_n"), F.lit(0)).alias("memberships"),
+            F.count(F.lit(1)).alias("buckets"),
+        ).first()
         if drop_row["memberships"]:
             logging.getLogger(__name__).warning(
                 "LSH: dropping %d bucket memberships across %d buckets "
                 "larger than max_bucket_size=%d",
                 drop_row["memberships"], drop_row["buckets"], max_bucket_size,
             )
-        b2 = b2.filter(F.col("_m").isNull() | (F.col("_m") <= max_bucket_size))
-    normal = b2.filter(F.col("_m").isNull()).select("bucket", "id")
-    pairs_n = normal.alias("l").join(normal.alias("r"), "bucket").select(
-        F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b")
-    )
-    hot_m = b2.filter(F.col("_m").isNotNull()).withColumn(
-        "_g", F.ceil(F.col("_m") / F.lit(target_bucket_rows)).cast("int")
-    )
-    left_h = hot_m.select(
-        "bucket", F.col("id").alias("id_a"),
-        F.pmod(F.xxhash64("id"), F.col("_g")).cast("int").alias("_salt"),
-    )
-    right_h = hot_m.select(
-        "bucket", F.col("id").alias("id_b"),
-        F.explode(F.sequence(F.lit(0), F.col("_g") - 1)).alias("_salt"),
-    )
-    pairs_h = left_h.join(right_h, ["bucket", "_salt"]).select("id_a", "id_b")
+        buckets = buckets.join(F.broadcast(dropped.select("bucket")), "bucket", "left_anti")
+    left = skew.salt(buckets, hot, "bucket", "id").withColumnRenamed("id", "id_a")
+    right = skew.fan_out(buckets, hot, "bucket").withColumnRenamed("id", "id_b")
     return (
-        pairs_n.unionByName(pairs_h)
+        left.join(right, ["bucket", "_salt"])
+        .select("id_a", "id_b")
         .filter(F.col("id_a") < F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -697,18 +672,19 @@ def embedding_near_dup_pairs(
     Scale ceiling: 8 sign bits is 256 buckets TOTAL, so per-bucket
     membership grows linearly with the corpus and the within-bucket
     join quadratically — fine to ~10⁶ rows, wrong past ~10⁷. For
-    large corpora use ``similarity.near_dup_pairs_ivf`` (r4): an EXACT
+    large corpora use ``similarity.near_dup_pairs_ivf``: an EXACT
     Voronoi-partitioned ε-ball join whose codebook grows with the data
     (measured at 10M rows in BENCH/ROBUSTNESS.md).
 
-    Same hot-bucket discipline as the LSH generators (r2): the
-    candidate join carries IDS ONLY (vectors re-attach to deduped
-    pairs), and buckets whose member count exceeds target_bucket_rows
-    are salted — the probe side replicates across g salts, the member
-    side keeps one deterministic salt — so the pair set is identical
-    while the per-task build side stays ≤ target_bucket_rows. The join
-    is asymmetric (probe cells vs home cells), so this salting is local
-    rather than _salted_bucket_pairs."""
+    Same hot-bucket discipline as the LSH generators: the candidate
+    join carries IDS ONLY (vectors re-attach to deduped pairs), and
+    buckets whose member count exceeds target_bucket_rows are salted
+    (``skew``) — the probe side fans out to all g lanes, each member
+    keeps one lane — so the pair set is identical while the per-task
+    build side stays ≤ target_bucket_rows. The join is asymmetric
+    (probe cells vs home cells), so the probe side is the one that
+    fans out, where _salted_bucket_pairs copies members of the same
+    bucket."""
     norm = F.sqrt(F.aggregate(vec_col, F.lit(0.0), lambda a, x: a + x * x))
     nv = emb.select(
         F.col(id_col),
@@ -732,24 +708,9 @@ def embedding_near_dup_pairs(
     right_ids = bucketed.select(
         F.col("_bucket").alias("_bucket2"), F.col(id_col).alias("id_b")
     )
-    hot = (
-        right_ids.groupBy("_bucket2")
-        .agg(F.count(F.lit(1)).alias("_m"))
-        .filter(F.col("_m") > target_bucket_rows)
-        .select(
-            "_bucket2",
-            F.ceil(F.col("_m") / F.lit(target_bucket_rows)).cast("int").alias("_g"),
-        )
-    )
-    l2 = left_ids.join(F.broadcast(hot), "_bucket2", "left").withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.coalesce(F.col("_g"), F.lit(1)) - 1))
-    )
-    r2 = right_ids.join(F.broadcast(hot), "_bucket2", "left").withColumn(
-        "_salt",
-        F.coalesce(
-            F.pmod(F.xxhash64(F.col("id_b")), F.col("_g")).cast("int"), F.lit(0)
-        ),
-    )
+    hot = skew.hot_keys(right_ids, "_bucket2", target_bucket_rows)
+    l2 = skew.fan_out(left_ids, hot, "_bucket2")
+    r2 = skew.salt(right_ids, hot, "_bucket2", "id_b")
     cand = (
         l2.join(r2, ["_bucket2", "_salt"])
         .filter(F.col("id_a") < F.col("id_b"))

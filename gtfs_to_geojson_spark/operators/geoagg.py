@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import cells
+from .. import cells, skew
 from .. import geometry as geom
 
 # ---------------------------------------------------------------------------
@@ -275,44 +275,62 @@ def dissolve_polygons(
     # the stage. When any cell exceeds the salt target, partial unions
     # run per (key, cell, salt) first — union is associative, so salted
     # partials + per-cell merge + final merge is exact.
-    hot = False
+    cell_groups = with_cell.groupBy(*keys, "cell")
     if salt_target_rows is not None and max(r.n for r in stats) > salt_target_rows:
-        hist = with_cell.groupBy(*keys, "cell").count()
-        hot = hist.filter(F.col("count") > salt_target_rows).limit(1).count() > 0
-    if hot:
-        from .spatial import salted_adaptive
-
-        salted = salted_adaptive(
-            with_cell.withColumn("_rid", F.monotonically_increasing_id())
-            .withColumn("_kcell", F.struct(*keys, "cell")),
-            "_kcell",
-            id_col="_rid",
-            target_rows_per_group=salt_target_rows,
-        )
-        cell_results = (
-            salted.groupBy(*keys, "cell", "_salt").applyInPandas(cell_kernel, cell_schema)
-            .groupBy(*keys, "cell").applyInPandas(cell_kernel, cell_schema)
-        )
-    else:
-        cell_results = with_cell.groupBy(*keys, "cell").applyInPandas(cell_kernel, cell_schema)
+        # one struct key, so that null key values still join
+        kcell = with_cell.withColumn("_kcell", F.struct(*keys, "cell"))
+        hot = skew.hot_keys(kcell, "_kcell", salt_target_rows)
+        if hot.limit(1).count():
+            salted = skew.salt(kcell.withColumn("_rid", F.monotonically_increasing_id()), hot, "_kcell", "_rid")
+            cell_groups = (
+                salted.groupBy(*keys, "cell", "_salt").applyInPandas(cell_kernel, cell_schema)
+                .groupBy(*keys, "cell")
+            )
+    cell_results = cell_groups.applyInPandas(cell_kernel, cell_schema)
 
     def final_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
         # one entry per cell, tiny; cell order makes the merge deterministic
-        all_rings = [_ring_array(ring) for poly in pdf.sort_values("cell")[poly_col] for ring in poly]
-        outers = [r for r in all_rings if geom.signed_area(r) >= 0]
-        holes = [r for r in all_rings if geom.signed_area(r) < 0]
+        per_cell = [[_ring_array(ring) for ring in poly] for poly in pdf.sort_values("cell")[poly_col] if len(poly)]
+        outers = [r for rings in per_cell for r in rings if geom.signed_area(r) >= 0]
         merged: list[np.ndarray] = []
         for comp in geom.connected_components(outers):
             part, _ok = geom.union_or_parts([outers[i] for i in comp])
             merged.extend(part)
         outs = [r for r in merged if geom.signed_area(r) >= 0] or merged
-        new_holes = [r for r in merged if geom.signed_area(r) < 0] + holes
-        parts = _group_holes(outs, new_holes)
+        holes = [r for r in merged if geom.signed_area(r) < 0]
+        for r in _open_holes(per_cell):
+            (outs if geom.signed_area(r) >= 0 else holes).append(r)
+        parts = _group_holes(outs, holes)
         return pd.DataFrame(
             {**{k: [v] * len(parts) for k, v in zip(keys, key)}, poly_col: pd.Series(parts, dtype=object)}
         )
 
     return cell_results.groupBy(*keys).applyInPandas(final_kernel, ", ".join([*key_types, poly_t]))
+
+
+def _open_holes(per_cell: list[list[np.ndarray]]) -> list[np.ndarray]:
+    """What stays open of each cell's holes once all cells merge. A
+    cell's union sees only its own rings, so another cell's polygons
+    may cover part or all of a hole it encloses, and the cross-cell
+    union of outer rings cannot see holes at all. Each hole loses what
+    the other cells' polygons cover; the rest comes back as CW hole
+    rings, plus a CCW ring for each island of cover left inside one. A
+    hole whose difference cannot be traced is dropped, so the merge
+    errs toward covering too much, never toward a hole over a buffer."""
+    boxes = [geom.bbox(np.vstack(rings)) for rings in per_cell]
+    out: list[np.ndarray] = []
+    for i, rings in enumerate(per_cell):
+        for hole in (r for r in rings if geom.signed_area(r) < 0):
+            hx0, hy0, hx1, hy1 = geom.bbox(hole)
+            left = [hole[::-1]]
+            try:
+                for j, (x0, y0, x1, y1) in enumerate(boxes):
+                    if left and j != i and x0 <= hx1 and hx0 <= x1 and y0 <= hy1 and hy0 <= y1:
+                        left = geom.polygon_difference(left, per_cell[j])
+            except geom.UnionError:
+                continue
+            out.extend(r[::-1] for r in left)
+    return out
 
 
 def _ring_array(ring) -> np.ndarray:

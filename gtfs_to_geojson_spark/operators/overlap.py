@@ -34,12 +34,12 @@ canonical corner is clamped by the same monotone function, so
 stays inside both covers even for boxes straddling the grid edge.
 
 Skew: a dense cell with n_a × n_b resident boxes does inherent
-candidate work. ``salt_target_rows`` enables histogram-driven salting:
-hot cells (and only hot cells) split into deterministic lanes
-(xxhash64 of the left id) with the right side replicated across that
-cell's lanes — same pair set (each pair meets in exactly one
-(cell, lane) bucket), bounded per-task fan-in. AQE's skew-join split
-handles residual row-size imbalance at runtime.
+candidate work. ``salt_target_rows`` enables hot-cell salting
+(``skew``): hot cells (and only hot cells) split into lanes taken from
+the left id, with the right side copied to that cell's lanes — same
+pair set (each pair meets in exactly one (cell, lane) bucket), bounded
+per-task fan-in. AQE's skew-join split handles residual row-size
+imbalance at runtime.
 
 Resolution choice: pick ``res`` so a typical box covers O(1–10) cells
 (``cells.cover_res_for_bbox``). Too coarse → giant per-cell crosses;
@@ -54,7 +54,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import cells
+from .. import cells, skew
 from .. import geometry as geom
 
 BOX_COLS = ("min_lon", "min_lat", "max_lon", "max_lat")
@@ -98,18 +98,18 @@ def envelope_intersect_join(
     ``_b``. One shuffle (the cell equi-join), no distinct: the
     canonical-cell filter emits each overlapping pair exactly once.
 
-    ``salt_target_rows`` enables histogram-driven hot-cell salting
-    (requires ``left_id``): one cheap pre-count over the exploded left
-    cover sets each cell's lane count to ceil(n_left/target); left rows
-    take a deterministic lane from xxhash64(left_id), right rows
-    replicate across that cell's lanes ONLY. Cold cells keep factor 1 —
-    no replication, no extra rows — so the right side is never globally
-    duplicated (the factor table is tiny: hot cells only, broadcast).
-    The pair set is identical (each pair meets in exactly one
-    (cell, lane) bucket; the canonical-cell filter is lane-oblivious).
-    The pre-count re-executes the left plan once (map + partial agg
-    only) — feed a materialized/cached frame when the left side is an
-    expensive derived plan (same guidance as knn_join's auto probe).
+    ``salt_target_rows`` enables hot-cell salting (``skew``; requires
+    ``left_id``): a cell whose exploded left cover holds more than
+    ``salt_target_rows`` rows splits into ceil(n_left/target) lanes;
+    left rows take a lane from ``left_id`` and right rows are copied to
+    that cell's lanes only, so cold cells cost no extra rows. The lane
+    comes from the id, not the box, because a hot cell may hold many
+    identical boxes. The pair set is identical (each pair meets in
+    exactly one (cell, lane) bucket; the canonical-cell filter is
+    lane-oblivious). The pre-count re-executes the left plan once (map
+    + partial agg only) — feed a materialized/cached frame when the
+    left side is an expensive derived plan (same guidance as
+    knn_join's auto probe).
 
     ``shuffle_hash=True`` (default) hints the right side into a
     shuffled hash join — measured 1.55× over the sort-merge default
@@ -125,33 +125,9 @@ def envelope_intersect_join(
     if salt_target_rows:
         if left_id is None:
             raise ValueError("salt_target_rows requires left_id")
-        factors = (
-            la.groupBy("_cell")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > salt_target_rows)
-            .select(
-                "_cell",
-                F.ceil(F.col("_n") / F.lit(salt_target_rows)).cast("long").alias("_f"),
-            )
-        )
-        la = (
-            la.join(F.broadcast(factors), "_cell", "left")
-            .withColumn(
-                "_salt",
-                F.pmod(F.xxhash64(F.col(left_id + "_a")), F.coalesce(F.col("_f"), F.lit(1))),
-            )
-            .drop("_f")
-        )
-        rb = (
-            rb.join(F.broadcast(factors), "_cell", "left")
-            .withColumn(
-                "_salt",
-                F.explode(
-                    F.sequence(F.lit(0).cast("long"), F.coalesce(F.col("_f"), F.lit(1)) - 1)
-                ),
-            )
-            .drop("_f")
-        )
+        hot = skew.hot_keys(la, "_cell", salt_target_rows)
+        la = skew.salt(la, hot, "_cell", left_id + "_a")
+        rb = skew.fan_out(rb, hot, "_cell")
         keys = ["_cell", "_salt"]
     joined = la.join(rb.hint("shuffle_hash") if shuffle_hash else rb, keys)
     overlap = (

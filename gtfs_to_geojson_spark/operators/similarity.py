@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import broadcast
 
+from .. import skew
+
 
 def _cos_col(a: str, b: str, dim: int | None = None):
     """Cosine between two array<double> columns.
@@ -498,7 +500,7 @@ def near_dup_pairs_ivf(
       applyInPandas kernel — candidates never materialize as rows, so
       there is no |bucket|² shuffle, only the ≥-threshold survivors.
 
-    Scale & skew (same discipline as _salted_bucket_pairs / grid kNN):
+    Scale & skew (the ``skew`` salting every hot-key join shares):
     the only wide shuffle carries each row (1 + probes + replication)
     times; hot buckets are blocked on BOTH sides — home rows split
     into g = ⌈home/max_home_per_task⌉ salt groups, the bucket's full
@@ -662,59 +664,19 @@ def near_dup_pairs_ivf(
                     }
                 )
 
-    # lazy localCheckpoint: assigned feeds the hot histogram AND both
-    # group sides — without it the probe matmul would run three times
+    # lazy localCheckpoint: assigned feeds the hot histograms AND both
+    # group sides — without it the probe matmul would run once for each
     assigned = base.mapInPandas(probe_gen, assigned_schema).localCheckpoint(eager=False)
 
     home = assigned.filter(F.col("_home"))
-    # hot-bucket block factors from ONE tiny histogram over assigned:
-    # g blocks the home side, c blocks the full membership side
-    hot = (
-        assigned.groupBy("_bucket")
-        .agg(
-            F.sum(F.col("_home").cast("int")).alias("_nh"),
-            F.count(F.lit(1)).alias("_nm"),
-        )
-        .filter(
-            (F.col("_nh") > max_home_per_task)
-            | (F.col("_nm") > max_members_per_task)
-        )
-        .select(
-            "_bucket",
-            F.greatest(
-                F.ceil(F.col("_nh") / F.lit(max_home_per_task)).cast("int"),
-                F.lit(1),
-            ).alias("_g"),
-            F.greatest(
-                F.ceil(F.col("_nm") / F.lit(max_members_per_task)).cast("int"),
-                F.lit(1),
-            ).alias("_c"),
-        )
-    )
-    h_side = home.join(F.broadcast(hot), "_bucket", "left").select(
-        "_bucket",
-        F.coalesce(
-            F.pmod(F.xxhash64(F.col("_id")), F.col("_g")).cast("int"), F.lit(0)
-        ).alias("_salt"),
-        F.explode(
-            F.sequence(F.lit(0), F.coalesce(F.col("_c"), F.lit(1)) - 1)
-        ).alias("_chunk"),
-        "_id",
-        "_vec",
-        F.lit(True).alias("_h"),
-    )
-    x_side = assigned.join(F.broadcast(hot), "_bucket", "left").select(
-        "_bucket",
-        F.explode(
-            F.sequence(F.lit(0), F.coalesce(F.col("_g"), F.lit(1)) - 1)
-        ).alias("_salt"),
-        F.coalesce(
-            F.pmod(F.xxhash64(F.col("_id")), F.col("_c")).cast("int"), F.lit(0)
-        ).alias("_chunk"),
-        "_id",
-        "_vec",
-        F.lit(False).alias("_h"),
-    )
+    # g home lanes (_salt) × c member chunks (_chunk) per hot bucket
+    hot_g = skew.hot_keys(home, "_bucket", max_home_per_task)
+    hot_c = skew.hot_keys(assigned, "_bucket", max_members_per_task)
+    h_side = skew.fan_out(skew.salt(home, hot_g, "_bucket", "_id"), hot_c, "_bucket", "_chunk")
+    x_side = skew.salt(skew.fan_out(assigned, hot_g, "_bucket"), hot_c, "_bucket", "_id", "_chunk")
+    cols = ["_bucket", "_salt", "_chunk", "_id", "_vec"]
+    h_side = h_side.select(*cols, F.lit(True).alias("_h"))
+    x_side = x_side.select(*cols, F.lit(False).alias("_h"))
 
     pair_schema = T.StructType(
         [

@@ -8,10 +8,9 @@ hash join Catalyst can shuffle/broadcast like any other, followed by an
 exact answer, so composition is exact (property-tested).
 
 Skew: dense-urban cells are the classic hotspot (FIXTURES.md §2 pins
-~30% of images into one cell). ``salted`` adds a bounded salt to the
-cell key on the build side and explodes the probe side over the salt
-range — the standard replicate-broadcast-side salting pattern — and
-AQE skew-join stays on as the runtime backstop (session.py).
+~30% of images into one cell). Grid kNN salts its hot point cells
+through ``skew`` — one lane per point, the target side copied to every
+lane — and AQE skew-join stays on as the runtime backstop (session.py).
 """
 
 from __future__ import annotations
@@ -23,9 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import broadcast
 
-from .. import cells
+from .. import cells, skew
 from .. import geometry as geom
 
 # ---------------------------------------------------------------------------
@@ -419,12 +417,11 @@ def _knn_grid(
     escalated by the caller to the ring path.
 
     Skew: a dense-metro point cell would make one cogroup task hot, and
-    AQE cannot split grouped-map groups — so a one-pass point-cell
-    histogram (broadcast: only hot cells survive the filter) salts hot
-    cells into ceil(n/max_points_per_task) subgroups, replicating the
-    cell's TARGET side per salt (the same partial-results shape as
-    geoagg.salted_adaptive). Exactness is unaffected: every point sees
-    its full 3×3 target set in exactly one subgroup.
+    AQE cannot split grouped-map groups — so a cell holding more than
+    ``max_points_per_task`` points is salted (``skew``): its points
+    split into ceil(n/max_points_per_task) lanes and its TARGET side
+    fans out to every lane. Exactness is unaffected: every point sees
+    its full 3×3 target set in exactly one lane.
     """
     t_stats = targets.agg(
         F.min(t_lon), F.max(t_lon), F.min(t_lat), F.max(t_lat), F.count(F.lit(1))
@@ -479,25 +476,9 @@ def _knn_grid(
     )
     t_rep = t0.withColumn("_cell", F.explode(cells9)).drop("_tc")
 
-    # point-cell histogram → salt factor for hot cells only (broadcast)
-    hot = (
-        p.groupBy("_cell")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > max_points_per_task)
-        .select(
-            "_cell",
-            F.ceil(F.col("_n") / F.lit(max_points_per_task)).cast("int").alias("_g"),
-        )
-    )
-    p2 = p.join(F.broadcast(hot), "_cell", "left").withColumn(
-        "_salt",
-        F.coalesce(
-            F.pmod(F.xxhash64(F.col(point_key)), F.col("_g")).cast("int"), F.lit(0)
-        ),
-    ).drop("_g")
-    t2 = t_rep.join(F.broadcast(hot), "_cell", "left").withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.coalesce(F.col("_g"), F.lit(1)) - 1))
-    ).drop("_g")
+    hot = skew.hot_keys(p, "_cell", max_points_per_task)
+    p2 = skew.salt(p, hot, "_cell", point_key)
+    t2 = skew.fan_out(t_rep, hot, "_cell")
 
     tgt_field = T.StructField(
         target_key, targets.schema[target_key].dataType, True
@@ -1034,50 +1015,3 @@ def assign_images_to_polygons(
     tagged = assign_images_to_tiles(images, res)
     return point_in_polygon_join(tagged, polygons, res)
 
-
-# ---------------------------------------------------------------------------
-# skew salting (grouped-map / join hotspots)
-# ---------------------------------------------------------------------------
-
-
-def salted(df: DataFrame, key_col: str, salt_factor: int, id_col: str) -> DataFrame:
-    """Add a bounded salt derived from a stable id — use as the extra
-    grouping key for hot cells: ``groupBy(key, _salt)`` partials then
-    ``groupBy(key)`` final (same partial+final shape as A2/A3)."""
-    return df.withColumn("_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_factor)))
-
-
-def cell_histogram(df: DataFrame, cell_col_name: str = "tile") -> DataFrame:
-    """Pre-pass cell histogram — drives per-cell salt factors
-    (SURVEY.md §4 skew plan) and feeds lineage metrics."""
-    return df.groupBy(cell_col_name).agg(F.count(F.lit(1)).alias("n_rows"))
-
-
-def salted_adaptive(
-    df: DataFrame,
-    cell_col_name: str,
-    id_col: str,
-    target_rows_per_group: int = 100_000,
-) -> DataFrame:
-    """Histogram-driven salting: one pre-pass count per cell sets that
-    cell's salt factor to ceil(n/target), so ONLY hot cells split
-    (cold cells keep factor 1 — no extra groups, no extra final-merge
-    work). The factor table is tiny (≤ distinct cells) and broadcast.
-
-    Use as the grouping key for two-phase grouped-map aggregation:
-    ``groupBy(cell, _salt)`` partials → ``groupBy(cell)`` final —
-    the same partial+final shape as A2/A3, sized by real data instead
-    of a guessed constant. AQE skew-join handles join-side skew at
-    runtime; this handles grouped-map skew, which AQE cannot split."""
-    factors = (
-        cell_histogram(df, cell_col_name)
-        .select(
-            cell_col_name,
-            F.greatest(
-                F.lit(1), F.ceil(F.col("n_rows") / F.lit(target_rows_per_group))
-            ).cast("int").alias("_salt_factor"),
-        )
-    )
-    return df.join(broadcast(factors), cell_col_name).withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.col("_salt_factor"))
-    ).drop("_salt_factor")

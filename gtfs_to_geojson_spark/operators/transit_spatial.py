@@ -54,8 +54,10 @@ def snap_stops_to_shapes(
     n_targets: int | None = None,
 ) -> DataFrame:
     """J8 at the transit level: nearest shape *vertex* per used stop
-    (stop→shape snapping). Exact kNN via ring expansion; distance is
-    haversine meters; ties break on shape point identity.
+    (stop→shape snapping). Exact kNN through ``knn_join``'s auto
+    strategy (broadcast, grid or ring, picked from the row-count
+    hints); distance is haversine meters; ties break on shape point
+    identity.
 
     ``n_points``/``n_targets`` are row-count hints for ``knn_join``'s
     strategy choice: upper bounds on the used stops and the shape

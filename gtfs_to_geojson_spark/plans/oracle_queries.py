@@ -1776,33 +1776,9 @@ def crossmodal_canonical(spark, sf_dir):
     return multimodal.crossmodal_canonical(imgs, max_hamming=2, combos=2)
 
 
-# Driver-window rotation: the driver records at most 50 of the 86
-# registered queries, in dict order, so the rest lean on selfcheck +
-# prior-round driver rows instead of a fresh row.  Round-5 rotation
-# (VERDICT r4 item 2): ALL 35 r4-rested queries return to the window
-# — the 10 r3-era veterans' second cycle plus the heavy hitters
-# (j6_point_in_envelope, j9_tile_assign, j1_multiway_join,
-# minhash_lsh_pairs, ann_brute_topk/ann_ivf_topk, simhash_pairs, ...)
-# — so no query goes two consecutive rounds unwitnessed.  The tail
-# below rests 36 queries that ALL have fresh green rows in
-# CORRECTNESS_r04: 25 multi-round-green veterans, plus 11 r4
-# first-rowers whose machinery keeps an in-window representative
-# (ann_ivf_sq <- ann_brute_topk/ann_ivf_topk return; decontam_ngrams
-# <- decontam_bloom's verify join stays; image_aspect_bucket /
-# image_pack_batches <- scan_pack_shards runs the same grouped scan;
-# j10 <- bench's closed-form j10_box_lattice_1m gate every round +
-# j6's envelope machinery returns; j11/j11b/j12 <- j7_point_in_polygon
-# returns with the same exact polygon residual; phash_near_dup <-
-# simhash_pairs returns on the same signature_near_pairs path;
-# text_pii_scrub/text_repetition <- four text veterans return).
-# Staying in-window for a second consecutive row: the r4 red rows
-# (a15_zonal_stats, r2_raster_pyramid — oracle casts fixed this
-# round), the session-8 newcomers (j14/g14/g15/r1/r2), the once-green
-# compositions (curate_*, crossmodal_canonical, j13, embed_near_dup_ivf,
-# decontam_bloom, scan_pack_shards, tfidf_topk), and the new
-# r3_raster_pyramid_full.
+# A caller of ``__spark_entry__.queries()`` may record only the first
+# 50 queries, in dict order; the queries listed here move to the end.
 _DRIVER_TAIL = [
-    # 25 multi-round-green veterans (r4 row + >=1 earlier round)
     "a10_nested_collect",
     "a12_union_all",
     "a13_cell_rollup",
@@ -1828,7 +1804,6 @@ _DRIVER_TAIL = [
     "s11_session_window",
     "s7_filenames",
     "text_stopword_ratio",
-    # 11 r4 first-rowers with in-window family coverage (see above)
     "ann_ivf_sq",
     "decontam_ngrams",
     "image_aspect_bucket",

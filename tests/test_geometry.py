@@ -192,6 +192,32 @@ def test_dissolve_salted_matches_unsalted(spark):
     assert (a == b).mean() > 0.995
 
 
+@pytest.mark.parametrize("cell_res", [None, 12])
+def test_dissolve_keeps_no_hole_another_cell_fills(spark, cell_res):
+    """Every vertex of a buffered line lies inside the dissolved union:
+    in an outer ring and in none of that polygon's holes. On this feed
+    at res 12 one cell's union of its two buffers encloses a hole that
+    a neighbouring cell's buffer covers (vertex 25 of SH001_1)."""
+    from gtfs_to_geojson_spark import synth
+    from gtfs_to_geojson_spark.operators import formats, geoagg
+    from gtfs_to_geojson_spark.operators.filters import BaseQuery
+    from gtfs_to_geojson_spark.plans.run_spec import RunSpec
+    from gtfs_to_geojson_spark.sources.gtfs import feed_from_pandas
+
+    pdf = synth.make_gtfs_feed(seed=1008, n_routes=3, n_stops=40, trips_per_route=4, stops_per_trip=8, shape_pts=16)
+    feed = feed_from_pandas(spark, pdf)
+    buffers = formats._line_buffers(feed, RunSpec(), BaseQuery(), formats.Groups.single(feed)).select("polygon")
+    parts = [[np.asarray(r) for r in row["polygon"]] for row in geoagg.dissolve_polygons(buffers, cell_res=cell_res).collect()]
+    assert any(len(p) > 1 for p in parts)  # the union has holes to check against
+    used = pdf["shapes"][pdf["shapes"]["shape_id"].isin(pdf["trips"]["shape_id"])]
+    for x, y in used[["shape_pt_lon", "shape_pt_lat"]].to_numpy():
+        px, py = np.asarray([x]), np.asarray([y])
+        assert any(
+            g.points_in_ring(px, py, p[0])[0] and not any(g.points_in_ring(px, py, h)[0] for h in p[1:])
+            for p in parts
+        ), (x, y)
+
+
 # ---------------------------------------------------------------------------
 # Boolean overlay: intersection / difference (extends G5's machinery)
 # ---------------------------------------------------------------------------

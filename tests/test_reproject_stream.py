@@ -288,26 +288,39 @@ def test_streaming_windowed_counts_watermark(spark, images_pd, tmp_path):
 
 
 def test_salted_adaptive_splits_only_hot_cells(spark, images_df):
+    """skew.salt / skew.fan_out on the tiled fixture: no row lost, a cold
+    tile keeps one lane, a hot tile splits into at most ceil(n / target)
+    lanes, and the fan-out gives exactly g rows per hot tile, 1 per cold."""
+    import math
+
+    from gtfs_to_geojson_spark import skew
     from gtfs_to_geojson_spark.operators import spatial
 
     tiled = spatial.assign_images_to_tiles(images_df, res=13)
-    n = tiled.count()
+    hist = tiled.groupBy("tile").count().toPandas().set_index("tile")["count"]
+    n = images_df.count()
     target = 20
-    salted = spatial.salted_adaptive(tiled, "tile", id_col="image_id", target_rows_per_group=target)
-    assert salted.count() == n  # no row loss
-    groups = salted.groupBy("tile", "_salt").count().toPandas()
-    hist = spatial.cell_histogram(tiled, "tile").toPandas().set_index("tile")["n_rows"]
-    import math
+    lanes = {t: math.ceil(m / target) for t, m in hist.items() if m > target}
+    assert lanes  # the hottest tile is hot at this target
+    hot = skew.hot_keys(tiled, "tile", target)
 
-    for tile, sub in groups.groupby("tile"):
-        want_factor = max(1, math.ceil(hist.loc[tile] / target))
-        assert sub["_salt"].nunique() <= want_factor
-        if hist.loc[tile] <= target:
-            # cold cells stay unsplit
-            assert sub["_salt"].nunique() == 1
-    # the hot cell really did split
-    hot_tile = hist.idxmax()
-    assert groups[groups["tile"] == hot_tile]["_salt"].nunique() > 1
+    salted = skew.salt(tiled, hot, "tile", "image_id")
+    assert dict(salted.dtypes)["_salt"] == "int"
+    got = salted.select("image_id", "tile", "_salt").toPandas()
+    assert len(got) == n and got["image_id"].nunique() == n  # no row lost
+    for tile, sub in got.groupby("tile"):
+        g = lanes.get(tile, 1)
+        assert sub["_salt"].between(0, g - 1).all()
+        if g == 1:
+            assert (sub["_salt"] == 0).all()  # a cold key keeps one lane
+    assert got[got["tile"] == hist.idxmax()]["_salt"].nunique() > 1  # the hottest tile split
+
+    fanned = skew.fan_out(tiled.select("tile").distinct(), hot, "tile")
+    assert dict(fanned.dtypes)["_salt"] == "int"
+    fanned = fanned.toPandas()
+    for tile, sub in fanned.groupby("tile"):
+        assert sorted(sub["_salt"]) == list(range(lanes.get(tile, 1)))
+    assert set(fanned["tile"]) == set(hist.index)
 
 
 def test_stateful_stream_dedup_across_batches(spark, images_pd, tmp_path):

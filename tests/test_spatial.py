@@ -282,14 +282,26 @@ def test_multimodal_junk_video_bytes_flagged(spark):
 
 
 def test_skew_histogram_and_salt(spark, images_df):
+    """skew.hot_keys is the tile histogram cut to the hot tiles; the
+    fixture's engineered skew makes the hottest tile hot."""
+    import math
+
+    from gtfs_to_geojson_spark import skew
+
     tiled = spatial.assign_images_to_tiles(images_df, res=13)
-    hist = spatial.cell_histogram(tiled, "tile").toPandas()
-    assert hist["n_rows"].sum() == images_df.count()
+    hist = tiled.groupBy("tile").count().toPandas().set_index("tile")["count"]
+    assert hist.sum() == images_df.count()
     # engineered skew: hottest cell ≫ median
-    assert hist["n_rows"].max() >= 3 * max(1, int(hist["n_rows"].median()))
-    salted = spatial.salted(tiled, "tile", salt_factor=8, id_col="image_id")
+    assert hist.max() >= 3 * max(1, int(hist.median()))
+    target = int(hist.median()) + 1
+    hot_df = skew.hot_keys(tiled, "tile", target)
+    hot = hot_df.toPandas().set_index("tile")
+    assert dict(zip(hot.index, hot["_n"])) == {t: m for t, m in hist.items() if m > target}
+    assert (hot["_g"] == [math.ceil(m / target) for m in hot["_n"]]).all()
+    assert (hot["_g"] >= 2).all() and hist.idxmax() in hot.index
+    salted = skew.salt(tiled, hot_df, "tile", "image_id")
     ns = salted.select("_salt").distinct().count()
-    assert 1 < ns <= 8
+    assert 1 < ns <= hot["_g"].max()
 
 
 def test_geotag_jvm_matches_numpy(spark, images_df, images_pd):

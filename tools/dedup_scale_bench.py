@@ -70,6 +70,7 @@ def build_docs(spark, n_docs: int, hot_m: int, path: str):
 def main():
     from pyspark.sql import functions as F
 
+    from gtfs_to_geojson_spark import skew
     from gtfs_to_geojson_spark.operators import dedup, graph
     from gtfs_to_geojson_spark.session import get_spark
 
@@ -126,15 +127,9 @@ def main():
     # ---- hot-bucket salt histogram (the salting evidence) ----
     sig = dedup.minhash_signatures(docs, n_hashes=n_hashes, shingle_n=8)
     buckets = dedup.minhash_band_buckets(sig, n_hashes=n_hashes, bands=bands)
-    hot = (
-        buckets.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("m"))
-        .filter(F.col("m") > TARGET_BUCKET_ROWS)
-        .withColumn("salt_g", F.ceil(F.col("m") / F.lit(TARGET_BUCKET_ROWS)).cast("int"))
-        .orderBy(F.desc("m"))
-    )
+    hot = skew.hot_keys(buckets, "bucket", TARGET_BUCKET_ROWS).orderBy(F.desc("_n"))
     out["hot_buckets"] = [
-        {"m": r["m"], "salt_g": r["salt_g"]} for r in hot.limit(20).collect()
+        {"m": r["_n"], "salt_g": r["_g"]} for r in hot.limit(20).collect()
     ]
     sys.stderr.write(f"hot buckets: {out['hot_buckets']}\n")
 
