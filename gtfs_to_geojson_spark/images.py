@@ -11,13 +11,12 @@ stdlib+numpy (SURVEY.md §7 hard part 5):
 * ``png``  — 8-bit truecolor, zlib DEFLATE; encoder emits filter 0,
   decoder implements all five PNG filter types (None/Sub/Up/Avg/Paeth)
 
-All three are lossless, so the per-row invariant "decoded-pixel
-allclose (PSNR≥40dB for lossy)" holds exactly (PSNR = inf). Two real
-lossy codecs exercise the 40 dB gate: ``dctq`` (numpy JPEG-analog, the
-bench-speed path) and ``jfif`` — a from-scratch ITU-T T.81 JPEG
-encoder/decoder covering baseline sequential AND progressive (SOF2,
-spectral selection + successive approximation), so real-world
-``jpeg``/``jpg`` bytes decode without PIL.
+All three are lossless: a decoded row reproduces the stored ``phash``
+exactly. One lossy codec, ``dctq`` (8×8 DCT coefficients, uniform
+quantizer, zlib), keeps the input_hint's lossy contract (decoded-pixel
+PSNR ≥ 40 dB) real; ``LOSSY_FORMATS`` names it. Every other format
+(jpeg, webp, …) raises ``NotImplementedError`` at the dispatch seam,
+and corrupt bytes of a known format raise ``ValueError``.
 
 ``phash64`` is a deterministic 8×8 average-hash of the grayscale
 image — it both verifies decode integrity and derives the image's
@@ -56,7 +55,7 @@ def decode_ppm(data: bytes) -> np.ndarray:
         while idx < len(data) and data[idx : idx + 1].isspace():
             idx += 1
         if data[idx : idx + 1] == b"#":  # comment line
-            while data[idx : idx + 1] != b"\n":
+            while idx < len(data) and data[idx : idx + 1] != b"\n":
                 idx += 1
             continue
         start = idx
@@ -132,13 +131,6 @@ def encode_png(pixels: np.ndarray) -> bytes:
         + _png_chunk(b"IDAT", zlib.compress(raw.tobytes(), 6))
         + _png_chunk(b"IEND", b"")
     )
-
-
-def _paeth(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
-    p = a.astype(np.int16) + b.astype(np.int16) - c.astype(np.int16)
-    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
-    out = np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
-    return out.astype(np.uint8)
 
 
 def decode_png(data: bytes) -> np.ndarray:
@@ -238,20 +230,23 @@ def encode_dctq(pixels: np.ndarray, q: float = DCTQ_Q) -> bytes:
         coefs = _DCT8 @ b @ _DCT8.T
         qc = np.round(coefs / q).astype(np.int16)
         planes.append(qc.tobytes())
-    header = b"DQ1" + np.asarray([h, w], dtype=np.int32).tobytes() + np.asarray(
-        [q], dtype=np.float64
-    ).tobytes()
+    header = b"DQ1" + struct.pack("<iid", h, w, q)
     return header + zlib.compress(b"".join(planes), 6)
 
 
 def decode_dctq(data: bytes) -> np.ndarray:
     if data[:3] != b"DQ1":
         raise ValueError("not a dctq payload")
-    h, w = np.frombuffer(data[3:11], dtype=np.int32)
-    q = float(np.frombuffer(data[11:19], dtype=np.float64)[0])
+    h, w, q = struct.unpack("<iid", data[3:19])
+    if h <= 0 or w <= 0 or not 0.0 < q < float("inf"):
+        raise ValueError(f"dctq: bad header (h={h}, w={w}, q={q})")
     raw = zlib.decompress(data[19:])
     H, W = h + ((-h) % 8), w + ((-w) % 8)
     n_block = (H // 8) * (W // 8) * 64
+    # checked before the allocation: one corrupt dim byte would
+    # otherwise size a many-GiB array (MemoryError kills the task)
+    if len(raw) != 3 * 2 * n_block:
+        raise ValueError(f"dctq: {len(raw)} payload bytes for a {h}x{w} header")
     out = np.empty((h, w, 3), dtype=np.uint8)
     for c in range(3):
         qc = np.frombuffer(
@@ -263,1463 +258,15 @@ def decode_dctq(data: bytes) -> np.ndarray:
     return out
 
 
-# ---------------------------------------------------------------------------
-# jfif — baseline sequential + progressive JPEG (ITU-T T.81), from scratch
-# ---------------------------------------------------------------------------
-# Converts the most common real-world image format from a documented
-# NotImplementedError seam into a working path (VERDICT r2 item 6;
-# progressive added later in r3). The encoder writes a conformant JFIF
-# stream (SOI/APP0/DQT/SOF0/DHT/SOS/EOI, Annex-K "typical" quantization
-# + Huffman tables, 4:4:4 / 4:2:2 / 4:2:0 chroma subsampling, optional
-# restart intervals), and with ``progressive=True`` a SOF2 stream using
-# libjpeg's standard 10-scan script (spectral selection + successive
-# approximation, T.81 Annex G). The decoder is generic: it reads the
-# tables FROM the stream (arbitrary DQT/DHT, any Hi×Vi sampling with
-# integer ratios, DRI/RSTn, grayscale or YCbCr, interleaved or
-# single-component scans), decodes baseline (SOF0/SOF1) AND progressive
-# (SOF2) Huffman streams — including truncated progressive streams,
-# which reconstruct at the refinement level reached — so it also
-# decodes third-party JPEGs, not just its own output. Arithmetic
-# coding and the hierarchical/lossless processes raise
-# NotImplementedError.
-#
-# Scale note: the entropy stage is per-bit Python, so this codec is an
-# ingest-boundary / test path, NOT the bench hot path — the synthetic
-# image tables keep using the numpy codecs above. The DCT/IDCT and
-# color math are vectorized numpy shared with dctq.
-
-# Annex K Table K.1 / K.2 quantization tables (natural 8×8 order).
-_JQ_LUMA = np.array([
-    16, 11, 10, 16, 24, 40, 51, 61,
-    12, 12, 14, 19, 26, 58, 60, 55,
-    14, 13, 16, 24, 40, 57, 69, 56,
-    14, 17, 22, 29, 51, 87, 80, 62,
-    18, 22, 37, 56, 68, 109, 103, 77,
-    24, 35, 55, 64, 81, 104, 113, 92,
-    49, 64, 78, 87, 103, 121, 120, 101,
-    72, 92, 95, 98, 112, 100, 103, 99,
-], dtype=np.float64).reshape(8, 8)
-_JQ_CHROMA = np.array([
-    17, 18, 24, 47, 99, 99, 99, 99,
-    18, 21, 26, 66, 99, 99, 99, 99,
-    24, 26, 56, 99, 99, 99, 99, 99,
-    47, 66, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-], dtype=np.float64).reshape(8, 8)
-
-# Annex K "typical" Huffman tables: (BITS[1..16], HUFFVAL). Encoder and
-# decoder both read whatever DHT carries, so these only pin our output.
-_JH_DC_LUMA = ([0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0], list(range(12)))
-_JH_DC_CHROMA = ([0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0], list(range(12)))
-_JH_AC_LUMA = (
-    [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D],
-    [0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12,
-     0x21, 0x31, 0x41, 0x06, 0x13, 0x51, 0x61, 0x07,
-     0x22, 0x71, 0x14, 0x32, 0x81, 0x91, 0xA1, 0x08,
-     0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0,
-     0x24, 0x33, 0x62, 0x72, 0x82, 0x09, 0x0A, 0x16,
-     0x17, 0x18, 0x19, 0x1A, 0x25, 0x26, 0x27, 0x28,
-     0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38, 0x39,
-     0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49,
-     0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59,
-     0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69,
-     0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79,
-     0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89,
-     0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98,
-     0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5, 0xA6, 0xA7,
-     0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6,
-     0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5,
-     0xC6, 0xC7, 0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4,
-     0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1, 0xE2,
-     0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA,
-     0xF1, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
-     0xF9, 0xFA],
-)
-_JH_AC_CHROMA = (
-    [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77],
-    [0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21,
-     0x31, 0x06, 0x12, 0x41, 0x51, 0x07, 0x61, 0x71,
-     0x13, 0x22, 0x32, 0x81, 0x08, 0x14, 0x42, 0x91,
-     0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0,
-     0x15, 0x62, 0x72, 0xD1, 0x0A, 0x16, 0x24, 0x34,
-     0xE1, 0x25, 0xF1, 0x17, 0x18, 0x19, 0x1A, 0x26,
-     0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37, 0x38,
-     0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48,
-     0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58,
-     0x59, 0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68,
-     0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78,
-     0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87,
-     0x88, 0x89, 0x8A, 0x92, 0x93, 0x94, 0x95, 0x96,
-     0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5,
-     0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4,
-     0xB5, 0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3,
-     0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9, 0xCA, 0xD2,
-     0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA,
-     0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9,
-     0xEA, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
-     0xF9, 0xFA],
-)
-
-
-def _zigzag() -> np.ndarray:
-    """ZZ[k] = flat natural index of the k-th coefficient in zigzag order."""
-    order = []
-    for s in range(15):
-        diag = [(i, s - i) for i in range(8) if 0 <= s - i < 8]
-        if s % 2 == 0:
-            diag.reverse()
-        order.extend(diag)
-    return np.array([i * 8 + j for i, j in order], dtype=np.int64)
-
-
-_JZZ = _zigzag()
-_JZZ_L = [int(v) for v in _JZZ]  # plain-int copy for the decode hot loop
-
-
-def _jpeg_qtab(base: np.ndarray, quality: int) -> np.ndarray:
-    """libjpeg-style quality (1..100) scaling of a base table."""
-    quality = min(100, max(1, int(quality)))
-    scale = 5000 // quality if quality < 50 else 200 - 2 * quality
-    return np.clip(np.floor((base * scale + 50.0) / 100.0), 1.0, 255.0)
-
-
-def _huff_encode_table(bits, vals):
-    """Canonical Huffman: symbol -> (code, length)."""
-    table, code, k = {}, 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            table[vals[k]] = (code, length)
-            k += 1
-            code += 1
-        code <<= 1
-    return table
-
-
-def _huff_decode_table(bits, vals):
-    """Decoder state: a 16-bit-window lookup table (the r4 vectorized
-    path — one peek + one table index per symbol instead of a per-bit
-    F.2.2.3 walk). ``lut_len[w] == 0`` marks a 16-bit window that is
-    no valid code's extension (corrupt stream).  Canonical-code
-    construction per T.81 C.2; symbols and lengths live in ``bytes``
-    objects because CPython indexes them faster than numpy scalars in
-    the decode loop."""
-    lut_sym = bytearray(65536)
-    lut_len = bytearray(65536)
-    code, k = 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            if code >= (1 << length):
-                # more codes than the length affords: a bytearray slice
-                # past 65536 would silently grow the table, so guard
-                # BEFORE assigning
-                raise ValueError("jfif: overfull Huffman code table")
-            base = code << (16 - length)
-            span = 1 << (16 - length)
-            lut_sym[base:base + span] = bytes([vals[k]]) * span
-            lut_len[base:base + span] = bytes([length]) * span
-            k += 1
-            code += 1
-        code <<= 1
-    return (bytes(lut_sym), bytes(lut_len))
-
-
-class _JBitWriter:
-    """MSB-first bit accumulator with 0xFF byte stuffing."""
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, value: int, length: int) -> None:
-        if length == 0:
-            return
-        self.acc = (self.acc << length) | (value & ((1 << length) - 1))
-        self.n += length
-        while self.n >= 8:
-            b = (self.acc >> (self.n - 8)) & 0xFF
-            self.out.append(b)
-            if b == 0xFF:
-                self.out.append(0x00)
-            self.n -= 8
-        self.acc &= (1 << self.n) - 1
-
-    def byte_align(self) -> None:
-        if self.n:
-            self.write((1 << (8 - self.n)) - 1, 8 - self.n)
-
-
-class _JMarkerHit(Exception):
-    def __init__(self, marker: int):
-        self.marker = marker
-
-
-def _jsplit_scan(data: bytes, pos: int, ff_all: np.ndarray | None = None):
-    """Split one scan's entropy-coded bytes (starting at ``pos``) into
-    restart-interval segments, unstuffing 0xFF00 with numpy up front so
-    the decode loop never touches raw bytes (r4 — this replaces the
-    per-bit/per-byte Python reader, VERDICT r3 item 3).
-
-    ``ff_all``: precomputed sorted 0xFF offsets for the WHOLE file —
-    pass it when decoding multi-scan (progressive) streams so the
-    marker sweep runs once per file instead of once per scan.
-
-    Returns a list of segment dicts::
-
-        words:    lazy (built by _seg_words on first scalar access):
-                  words[i] = clean bytes i..i+3 big-endian — any
-                  16-bit peek is one index + shift; the lanes path
-                  decodes from ``clean`` and never builds this
-        bitlen:   real payload bits (padding words beyond are zeros)
-        raw_start: file offset of the segment's first byte
-        stuff_clean: sorted clean-indices of bytes followed by a
-                  dropped stuffed 0x00 (maps clean→raw at scan end)
-        boundary: what terminated the segment —
-                  ('rst', n)  restart marker RSTn
-                  ('end', m)  any other marker m (scan is over)
-        premature: the marker a mid-decode bit-starvation surfaces as
-                  (_JMarkerHit parity with the old per-bit reader:
-                  0xFF when fill bytes precede the marker)
-    """
-    arr = np.frombuffer(data, dtype=np.uint8)
-    if ff_all is None:
-        ff_all = np.flatnonzero(arr[pos:] == 0xFF) + pos
-        i = 0
-    else:
-        i = int(np.searchsorted(ff_all, pos))
-    segments = []
-    seg_start = pos
-    stuffs: list[int] = []  # raw positions of dropped 0x00 bytes
-
-    def close(end: int, boundary, premature):
-        raw = arr[seg_start:end]
-        if stuffs:
-            keep = np.ones(len(raw), dtype=bool)
-            keep[np.asarray(stuffs, dtype=np.int64) - seg_start] = False
-            clean = raw[keep]
-            # clean index of each dropped 0x00's preceding 0xFF byte
-            sc = (np.asarray(stuffs, dtype=np.int64) - seg_start
-                  - 1 - np.arange(len(stuffs)))
-        else:
-            clean = raw
-            sc = np.empty(0, dtype=np.int64)
-        segments.append({
-            "words": None, "clean": clean, "bitlen": len(clean) * 8,
-            "raw_start": seg_start, "stuff_clean": sc, "boundary": boundary,
-            "premature": premature,
-            "raw_ff": end,  # offset of the 0xFF that ended the segment
-        })
-
-    n_ff = len(ff_all)
-    cursor = pos
-    while True:
-        while i < n_ff and ff_all[i] < cursor:
-            i += 1
-        if i >= n_ff:
-            # entropy data runs to EOF with no terminating marker — the
-            # old reader IndexError'd here; surface the normalized error
-            raise ValueError("jfif: unterminated entropy-coded scan")
-        f = int(ff_all[i])
-        if f + 1 >= len(data):
-            raise ValueError("jfif: truncated entropy-coded scan")
-        nxt = data[f + 1]
-        if nxt == 0x00:  # stuffed data byte
-            stuffs.append(f + 1)
-            cursor = f + 2
-            continue
-        # a marker, possibly preceded by 0xFF fill bytes: mid-data the
-        # old per-bit reader surfaced the FIRST fill byte as marker 0xFF
-        fills = nxt == 0xFF
-        m = f + 1
-        while data[m] == 0xFF:
-            m += 1
-            if m >= len(data):
-                raise ValueError("jfif: truncated entropy-coded scan")
-        marker = data[m]
-        if 0xD0 <= marker <= 0xD7:
-            close(f, ("rst", marker - 0xD0), 0xFF if fills else marker)
-            seg_start = cursor = m + 1
-            stuffs = []
-            continue
-        close(f, ("end", marker), 0xFF if fills else marker)
-        return segments
-
-
-def _seg_words(seg: dict) -> list:
-    """Materialize (and cache) a segment's scalar-side word table:
-    words[i] = clean bytes i..i+3 big-endian. Lazy because the lanes
-    path decodes straight from ``clean`` — building one boxed int per
-    scan byte as unused fallback insurance cost ~40 bytes/byte of
-    allocation traffic on the fast path (r4 review finding)."""
-    w = seg["words"]
-    if w is None:
-        ext = np.concatenate(
-            [seg["clean"], np.zeros(4, dtype=np.uint8)]
-        ).astype(np.uint64)
-        w = seg["words"] = (
-            (ext[:-3] << np.uint64(24)) | (ext[1:-2] << np.uint64(16))
-            | (ext[2:-1] << np.uint64(8)) | ext[3:]
-        ).tolist()
-    return w
-
-
-class _JFastReader:
-    """MSB-first entropy reader over _jsplit_scan segments: every
-    Huffman symbol is ONE 16-bit window peek + table lookup (T.81
-    F.2.2.3 collapsed into the canonical-code LUT built by
-    _huff_decode_table) and every magnitude read is one shift+mask —
-    no per-bit Python anywhere. Surfaces real markers as _JMarkerHit
-    exactly where the retired per-bit reader did (bit-starvation at a
-    segment boundary), so truncated-stream refinement recovery and the
-    corrupt-byte fuzz contract are unchanged."""
-
-    __slots__ = ("segs", "si", "_words", "bitpos", "bitlen")
-
-    def __init__(self, data: bytes, pos: int, ff_all: np.ndarray | None = None):
-        self.segs = _jsplit_scan(data, pos, ff_all)
-        self.si = 0
-        self._words = None  # materialized on first scalar access
-        self.bitpos = 0
-        self.bitlen = self.segs[0]["bitlen"]
-
-    @property
-    def words(self) -> list:
-        # per-segment lazy: the lanes path never touches this, and the
-        # scalar path re-reads it once per segment (cached by _seg_words)
-        w = self._words
-        if w is None:
-            w = self._words = _seg_words(self.segs[self.si])
-        return w
-
-    def _starved(self):
-        raise _JMarkerHit(self.segs[self.si]["premature"])
-
-    def decode_sym(self, lut) -> int:
-        lut_sym, lut_len = lut
-        bp = self.bitpos
-        words = self._words
-        if words is None:
-            words = self._words = _seg_words(self.segs[self.si])
-        w = (words[bp >> 3] >> (16 - (bp & 7))) & 0xFFFF
-        length = lut_len[w]
-        nbp = bp + length
-        if nbp > self.bitlen or length == 0:
-            if bp + 16 > self.bitlen:
-                self._starved()  # ran into the next marker mid-symbol
-            raise ValueError("jfif: corrupt Huffman stream")
-        self.bitpos = nbp
-        return lut_sym[w]
-
-    def read_bits(self, length: int) -> int:
-        if length == 0:
-            return 0
-        bp = self.bitpos
-        if bp + length > self.bitlen:
-            self._starved()
-        self.bitpos = bp + length
-        words = self._words
-        if words is None:
-            words = self._words = _seg_words(self.segs[self.si])
-        return (words[bp >> 3] >> (32 - (bp & 7) - length)) & (
-            (1 << length) - 1
-        )
-
-    def read_bit(self) -> int:
-        bp = self.bitpos
-        if bp >= self.bitlen:
-            self._starved()
-        self.bitpos = bp + 1
-        words = self._words
-        if words is None:
-            words = self._words = _seg_words(self.segs[self.si])
-        return (words[bp >> 3] >> (31 - (bp & 7))) & 1
-
-    def restart(self, expect_n: int) -> None:
-        """Cross the segment boundary, verifying the expected RSTn."""
-        seg = self.segs[self.si]
-        if (
-            self.bitlen - self.bitpos >= 8  # a full data byte where the
-            or seg["boundary"][0] != "rst"  # marker should be
-            or seg["boundary"][1] != expect_n
-        ):
-            raise ValueError("jfif: missing restart marker")
-        self.si += 1
-        seg = self.segs[self.si]
-        self._words = None
-        self.bitpos = 0
-        self.bitlen = seg["bitlen"]
-
-    def end_raw_pos(self) -> int:
-        """Raw file offset just past the last consumed byte — feeds the
-        caller's walk to the next marker (old reader's ``br.pos``)."""
-        seg = self.segs[self.si]
-        consumed = (self.bitpos + 7) >> 3
-        return (
-            seg["raw_start"] + consumed
-            + int(np.searchsorted(seg["stuff_clean"], consumed))
-        )
-
-
-def _jextend(v: int, s: int) -> int:
-    """Sign-extend an s-bit magnitude (T.81 F.2.2.1 EXTEND)."""
-    return v - (1 << s) + 1 if v < (1 << (s - 1)) else v
-
-
-_JSAMPLING = {"444": ((1, 1), (1, 1), (1, 1)),
-              "422": ((2, 1), (1, 1), (1, 1)),
-              "420": ((2, 2), (1, 1), (1, 1))}
-
-
-def _rgb_to_ycbcr(px: np.ndarray):
-    p = px.astype(np.float64)
-    r, g, b = p[:, :, 0], p[:, :, 1], p[:, :, 2]
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-    return y, cb, cr
-
-
-def _ycbcr_to_rgb(y: np.ndarray, cb: np.ndarray, cr: np.ndarray) -> np.ndarray:
-    # np.rint == np.round(decimals=0) bit for bit, but in-place per
-    # channel: the old stack/round/clip/astype chain materialized four
-    # full-frame float64 temporaries and dominated large decodes
-    cb = cb - np.float32(128.0)
-    cr = cr - np.float32(128.0)
-    out = np.empty(y.shape + (3,), dtype=np.uint8)
-    for ch, plane in enumerate((
-        y + np.float32(1.402) * cr,
-        y - np.float32(0.344136) * cb - np.float32(0.714136) * cr,
-        y + np.float32(1.772) * cb,
-    )):
-        np.rint(plane, out=plane)
-        np.clip(plane, 0, 255, out=plane)
-        out[..., ch] = plane  # exact: already integral and clipped
-    return out
-
-
-# Progressive AC scans need EOBn run-length symbols (0x10..0xE0) that
-# the Annex-K sequential tables don't define; a flat 256-symbol table
-# (255 codes of length 9, one of length 10) keeps the encoder simple —
-# compression ratio is not this codec's goal (ingest/test path), and
-# the decoder always reads whatever DHT the stream carries.
-_JH_AC_FLAT = ([0, 0, 0, 0, 0, 0, 0, 0, 255, 1, 0, 0, 0, 0, 0, 0],
-               list(range(256)))
-
-# libjpeg's standard progressive scan script (jcparam.c
-# jpeg_simple_progression), for a 3-component frame: interleaved DC
-# first, split luma spectral bands, then successive-approximation
-# refinements. Entries: (kind, comps, Ss, Se, Ah, Al).
-_JPROG_SCRIPT = (
-    ("dc", (0, 1, 2), 0, 0, 0, 1),
-    ("ac", (0,), 1, 5, 0, 2),
-    ("ac", (1,), 1, 63, 0, 1),
-    ("ac", (2,), 1, 63, 0, 1),
-    ("ac", (0,), 6, 63, 0, 2),
-    ("ac", (0,), 1, 63, 2, 1),
-    ("dc", (0, 1, 2), 0, 0, 1, 0),
-    ("ac", (1,), 1, 63, 1, 0),
-    ("ac", (2,), 1, 63, 1, 0),
-    ("ac", (0,), 1, 63, 1, 0),
-)
-
-
-def _jfif_coef_stores(pixels: np.ndarray, quality: int, subsample: str):
-    """Pad, color-convert, chroma-downsample, forward-DCT and quantize
-    the whole image at once (vectorized numpy). Returns per-component
-    int64 coefficient stores of shape (nby, nbx, 64) in ZIGZAG order
-    (the padded MCU-grid block counts), plus the quant tables, the
-    sampling spec and the MCU grid dims."""
-    h, w, _ = pixels.shape
-    samp = _JSAMPLING[subsample]
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcu_w, mcu_h = 8 * hmax, 8 * vmax
-    mcus_x = -(-w // mcu_w)
-    mcus_y = -(-h // mcu_h)
-    qy = _jpeg_qtab(_JQ_LUMA, quality)
-    qc = _jpeg_qtab(_JQ_CHROMA, quality)
-    qtabs = [qy, qc, qc]
-    stores = []
-    for ci, plane in enumerate(_rgb_to_ycbcr(pixels)):
-        hi, vi = samp[ci]
-        fy, fx = vmax // vi, hmax // hi
-        p = np.pad(plane, ((0, mcus_y * mcu_h - h), (0, mcus_x * mcu_w - w)),
-                   mode="edge")
-        if fy > 1 or fx > 1:  # box-average chroma downsample
-            H, W = p.shape
-            p = p.reshape(H // fy, fy, W // fx, fx).mean(axis=(1, 3))
-        nby, nbx = p.shape[0] // 8, p.shape[1] // 8
-        blocks = p.reshape(nby, 8, nbx, 8).transpose(0, 2, 1, 3) - 128.0
-        coefs = _DCT8 @ blocks @ _DCT8.T
-        q = np.round(coefs / qtabs[ci]).astype(np.int64).reshape(nby, nbx, 64)
-        stores.append(q[:, :, _JZZ])
-    return stores, qy, qc, samp, mcus_x, mcus_y
-
-
-def _jencode_block(bw, zz, dc_tab, ac_tab, pred):
-    """Huffman-code one quantized block (zigzag-ordered ints) for a
-    sequential scan; returns the new DC predictor."""
-    dc = int(zz[0])
-    diff = dc - pred
-    mag = abs(diff)
-    s = mag.bit_length()
-    code, ln = dc_tab[s]
-    bw.write(code, ln)
-    if s:
-        bw.write(diff if diff >= 0 else diff + (1 << s) - 1, s)
-    run = 0
-    nz = np.nonzero(zz[1:])[0]
-    last = nz[-1] + 1 if len(nz) else 0
-    for k in range(1, last + 1):
-        v = int(zz[k])
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            code, ln = ac_tab[0xF0]  # ZRL
-            bw.write(code, ln)
-            run -= 16
-        s = abs(v).bit_length()
-        code, ln = ac_tab[run * 16 + s]
-        bw.write(code, ln)
-        bw.write(v if v >= 0 else v + (1 << s) - 1, s)
-        run = 0
-    if last < 63:
-        code, ln = ac_tab[0x00]  # EOB
-        bw.write(code, ln)
-    return dc
-
-
-class _JProgACEnc:
-    """Entropy encoder for one progressive AC scan (single component;
-    T.81 G.1.2.2 first pass / G.1.2.3 refinement pass). Carries the
-    EOB-run counter and the refinement correction bits buffered against
-    the next emitted symbol across blocks, exactly mirroring the read
-    order of the decoder's refinement advance loop (libjpeg
-    jcphuff.c/jdphuff.c semantics)."""
-
-    def __init__(self, bw, ac_tab, ss, se, al, refine):
-        self.bw = bw
-        self.tab = ac_tab
-        self.ss, self.se, self.al = ss, se, al
-        self.refine = refine
-        self.eobrun = 0
-        self.pending = []  # correction bits owed at the next EOB-run flush
-
-    def _sym(self, rs):
-        code, ln = self.tab[rs]
-        self.bw.write(code, ln)
-
-    def flush_eobrun(self):
-        if self.eobrun:
-            n = self.eobrun.bit_length() - 1
-            self._sym(n << 4)
-            if n:
-                self.bw.write(self.eobrun & ((1 << n) - 1), n)
-            for b in self.pending:
-                self.bw.write(b, 1)
-            self.pending = []
-            self.eobrun = 0
-
-    def block(self, zz):
-        if self.refine:
-            self._block_refine(zz)
-        else:
-            self._block_first(zz)
-
-    def _block_first(self, zz):
-        r = 0
-        for k in range(self.ss, self.se + 1):
-            v = int(zz[k])
-            v = -((-v) >> self.al) if v < 0 else v >> self.al
-            if v == 0:
-                r += 1
-                continue
-            self.flush_eobrun()
-            while r > 15:
-                self._sym(0xF0)  # ZRL
-                r -= 16
-            s = abs(v).bit_length()
-            self._sym((r << 4) | s)
-            self.bw.write(v if v >= 0 else v + (1 << s) - 1, s)
-            r = 0
-        if r:
-            self.eobrun += 1
-            if self.eobrun == 0x7FFF:
-                self.flush_eobrun()
-
-    def _block_refine(self, zz):
-        vals = [int(zz[k]) for k in range(self.ss, self.se + 1)]
-        absv = [(-v if v < 0 else v) >> self.al for v in vals]
-        # index AFTER the last newly-nonzero coefficient: runs beyond it
-        # fold into the EOB run instead of ZRLs
-        eob = 0
-        for i, a in enumerate(absv):
-            if a == 1:
-                eob = i + 1
-        r = 0
-        br = []  # correction bits owed at the next symbol in this block
-        for i, a in enumerate(absv):
-            if a == 0:
-                r += 1
-                continue
-            while r > 15 and i < eob:
-                self.flush_eobrun()
-                self._sym(0xF0)
-                r -= 16
-                for b in br:
-                    self.bw.write(b, 1)
-                br = []
-            if a > 1:
-                # nonzero in an earlier pass: just the next magnitude bit
-                br.append(a & 1)
-                continue
-            # a == 1: becomes nonzero in this pass
-            self.flush_eobrun()
-            self._sym((r << 4) | 1)
-            self.bw.write(1 if vals[i] >= 0 else 0, 1)
-            for b in br:
-                self.bw.write(b, 1)
-            br = []
-            r = 0
-        if r or br:
-            self.eobrun += 1
-            self.pending.extend(br)
-            if self.eobrun == 0x7FFF or len(self.pending) > 930:
-                self.flush_eobrun()
-
-
-def encode_jfif(
-    pixels: np.ndarray,
-    quality: int = 92,
-    subsample: str = "444",
-    restart_interval: int = 0,
-    progressive: bool = False,
-    _scan_spans: list | None = None,
-) -> bytes:
-    """JFIF encoder (Annex-K tables; see section comment). ``subsample``
-    ∈ {"444","422","420"}; ``restart_interval`` in MCUs (0 = none).
-    ``progressive=True`` writes a SOF2 stream using libjpeg's standard
-    10-scan script. ``_scan_spans`` (test hook) collects the byte offset
-    at the end of each scan's entropy data, so tests can truncate a
-    progressive stream at scan boundaries."""
-    h, w, _ = pixels.shape
-    stores, qy, qc, samp, mcus_x, mcus_y = _jfif_coef_stores(
-        pixels, quality, subsample)
-    tsel = [0, 1, 1]
-    enc_dc = [_huff_encode_table(*_JH_DC_LUMA), _huff_encode_table(*_JH_DC_CHROMA)]
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    def dqt(tid: int, tab: np.ndarray) -> bytes:
-        return seg(0xDB, bytes([tid]) + bytes(
-            int(tab.ravel()[_JZZ[k]]) for k in range(64)))
-
-    def dht(cls: int, tid: int, bits, vals) -> bytes:
-        return seg(0xC4, bytes([cls * 16 + tid]) + bytes(bits) + bytes(vals))
-
-    out = bytearray()
-    out += bytes([0xFF, 0xD8])  # SOI
-    out += seg(0xE0, b"JFIF\x00" + bytes([1, 1, 0]) + struct.pack(">HH", 1, 1)
-               + bytes([0, 0]))
-    out += dqt(0, qy) + dqt(1, qc)
-    sof = bytes([8]) + struct.pack(">HH", h, w) + bytes([3])
-    for ci in range(3):
-        hi, vi = samp[ci]
-        sof += bytes([ci + 1, hi * 16 + vi, tsel[ci]])
-    out += seg(0xC2 if progressive else 0xC0, sof)
-    if progressive:
-        out += dht(0, 0, *_JH_DC_LUMA) + dht(0, 1, *_JH_DC_CHROMA)
-        out += dht(1, 0, *_JH_AC_FLAT)
-    else:
-        out += dht(0, 0, *_JH_DC_LUMA) + dht(1, 0, *_JH_AC_LUMA)
-        out += dht(0, 1, *_JH_DC_CHROMA) + dht(1, 1, *_JH_AC_CHROMA)
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-
-    def emit_restart(bw, rst_n):
-        bw.byte_align()
-        bw.out += bytes([0xFF, 0xD0 + rst_n])
-        return (rst_n + 1) % 8
-
-    if not progressive:
-        enc_ac = [_huff_encode_table(*_JH_AC_LUMA),
-                  _huff_encode_table(*_JH_AC_CHROMA)]
-        sos = bytes([3])
-        for ci in range(3):
-            sos += bytes([ci + 1, tsel[ci] * 16 + tsel[ci]])
-        sos += bytes([0, 63, 0])
-        out += seg(0xDA, sos)
-        bw = _JBitWriter()
-        preds = [0, 0, 0]
-        mcu_i = 0
-        rst_n = 0
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                if restart_interval and mcu_i and mcu_i % restart_interval == 0:
-                    rst_n = emit_restart(bw, rst_n)
-                    preds = [0, 0, 0]
-                for ci in range(3):
-                    hi, vi = samp[ci]
-                    for by in range(vi):
-                        for bx in range(hi):
-                            preds[ci] = _jencode_block(
-                                bw, stores[ci][my * vi + by, mx * hi + bx],
-                                enc_dc[tsel[ci]], enc_ac[tsel[ci]], preds[ci],
-                            )
-                mcu_i += 1
-        bw.byte_align()
-        out += bw.out
-        if _scan_spans is not None:
-            _scan_spans.append(len(out))
-        out += bytes([0xFF, 0xD9])  # EOI
-        return bytes(out)
-
-    # progressive: one SOS per script entry
-    ac_flat = _huff_encode_table(*_JH_AC_FLAT)
-    for kind, comps, ss, se, ah, al in _JPROG_SCRIPT:
-        sos = bytes([len(comps)])
-        for ci in comps:
-            # DC scans: Td = component's DC table, Ta unused (0).
-            # AC scans: Td unused, Ta = 0 (the shared flat table).
-            sos += bytes([ci + 1, tsel[ci] * 16 if kind == "dc" else 0])
-        sos += bytes([ss, se, ah * 16 + al])
-        out += seg(0xDA, sos)
-        bw = _JBitWriter()
-        rst_n = 0
-        if kind == "dc":
-            preds = [0] * len(comps)
-            for mcu_i in range(mcus_y * mcus_x):
-                if restart_interval and mcu_i and mcu_i % restart_interval == 0:
-                    rst_n = emit_restart(bw, rst_n)
-                    preds = [0] * len(comps)
-                my, mx = divmod(mcu_i, mcus_x)
-                for si, ci in enumerate(comps):
-                    hi, vi = samp[ci]
-                    for by in range(vi):
-                        for bx in range(hi):
-                            dc = int(stores[ci][my * vi + by, mx * hi + bx, 0])
-                            if ah == 0:
-                                t = dc >> al  # arithmetic shift (T.81 G.1.2.1)
-                                diff = t - preds[si]
-                                preds[si] = t
-                                s = abs(diff).bit_length()
-                                code, ln = enc_dc[tsel[ci]][s]
-                                bw.write(code, ln)
-                                if s:
-                                    bw.write(diff if diff >= 0
-                                             else diff + (1 << s) - 1, s)
-                            else:
-                                bw.write((dc >> al) & 1, 1)
-        else:
-            ci = comps[0]
-            hi, vi = samp[ci]
-            # single-component scan: block grid is the ceil of the
-            # component's true sample dims, not the padded MCU grid
-            hmax = max(s[0] for s in samp)
-            vmax = max(s[1] for s in samp)
-            comp_w = -(-w * hi // hmax)  # ceil: component's true sample dims
-            comp_h = -(-h * vi // vmax)
-            nbx = -(-comp_w // 8)
-            nby = -(-comp_h // 8)
-            enc = _JProgACEnc(bw, ac_flat, ss, se, al, refine=ah != 0)
-            for mcu_i in range(nby * nbx):
-                if restart_interval and mcu_i and mcu_i % restart_interval == 0:
-                    enc.flush_eobrun()
-                    rst_n = emit_restart(bw, rst_n)
-                my, mx = divmod(mcu_i, nbx)
-                enc.block(stores[ci][my, mx])
-            enc.flush_eobrun()
-        bw.byte_align()
-        out += bw.out
-        if _scan_spans is not None:
-            _scan_spans.append(len(out))
-    out += bytes([0xFF, 0xD9])  # EOI
-    return bytes(out)
-
-
-# Decoder resource guard: corrupt SOF dimension bytes must not drive a
-# multi-GB coefficient-store allocation (review r3 finding). 2^26 px
-# (= 8192x8192) is far beyond anything this per-bit-Python ingest/test
-# codec is for; legitimate larger imagery belongs to the numpy codecs.
-JFIF_MAX_PIXELS = 1 << 26
-
-
-def _jdecode_scan_seq_lanes(br, data, frame, htabs, scan, dri):
-    """Restart-interval-parallel baseline decode (r4, VERDICT r3 item 3
-    — the ≥10× path): restart markers make every DRI-sized run of MCUs
-    an independent bitstream (byte-aligned, DC predictors reset), which
-    is JPEG's native intra-image parallelism mechanism.  Decode ALL
-    intervals simultaneously as numpy lanes: one step decodes one
-    Huffman symbol + magnitude per lane — window peek, LUT gather,
-    EXTEND, run-length/EOB state update and coefficient emit are all
-    vectorized over the lane axis, so wall time scales with the max
-    SYMBOLS PER INTERVAL instead of total symbols.  A 100-TB image
-    ingest wants exactly this shape: per-file work bounded by the
-    restart interval, not the image.
-
-    Returns the next-marker offset on success, or ``None`` to make the
-    caller fall back to the scalar path — taken when the stream has no
-    usable restart structure (few/no intervals, fill bytes, boundary
-    anomalies) and for ANY in-stream anomaly (truncation, corrupt
-    code, AC overflow).  Fallback is decided before anything is
-    written: coefficients scatter into the stores only after every
-    lane finishes clean, so the scalar rerun starts from pristine
-    state and reproduces the per-bit error/truncation semantics
-    exactly (pinned by the fuzz gate)."""
-    segs = br.segs
-    interleaved = len(scan) > 1
-    mcus_x = frame["mcus_x"]
-    n_mcus = (mcus_x * frame["mcus_y"] if interleaved
-              else scan[0][0]["nbx"] * scan[0][0]["nby"])
-    if not dri or dri >= n_mcus:
-        return None
-    lanes = -(-n_mcus // dri)
-    if lanes < 8 or len(segs) < lanes:
-        return None  # too little parallelism / missing intervals
-    for i in range(lanes - 1):  # boundary i closes lane i
-        b = segs[i]["boundary"]
-        if b[0] != "rst" or b[1] != i % 8 or segs[i]["premature"] == 0xFF:
-            return None  # unexpected id or fill bytes: scalar handles
-    nsc = len(scan)
-
-    # ---- flatten segments into one window buffer ----
-    clean_lens = np.asarray(
-        [segs[i]["bitlen"] >> 3 for i in range(lanes)], dtype=np.int64)
-    seg_base = np.zeros(lanes, dtype=np.int64)
-    np.cumsum(clean_lens[:-1], out=seg_base[1:])
-    total = int(clean_lens.sum())
-    buf = np.zeros(total + 8, dtype=np.uint8)
-    for i in range(lanes):
-        buf[seg_base[i]:seg_base[i] + clean_lens[i]] = segs[i]["clean"]
-    # 56-bit big-endian windows: one gather per SYMBOL serves both the
-    # 16-bit code peek and the following magnitude bits (offset + 16 +
-    # 11 <= 34 < 56), halving the random-access traffic that dominates
-    # the step cost; 7 bytes keeps the value positive in int64 (numpy
-    # uint64 ops would promote mixed expressions to float64)
-    b64 = buf.astype(np.int64)
-    W = ((b64[:-6] << 48) | (b64[1:-5] << 40) | (b64[2:-4] << 32)
-         | (b64[3:-3] << 24) | (b64[4:-2] << 16) | (b64[5:-1] << 8)
-         | b64[6:])
-
-    # ---- LUT stacks per scan-component ----
-    dlen = np.stack([np.frombuffer(htabs[(0, td)][1], np.uint8)
-                     for _, td, _ in scan]).astype(np.int64)
-    dsym = np.stack([np.frombuffer(htabs[(0, td)][0], np.uint8)
-                     for _, td, _ in scan]).astype(np.int64)
-    alen = np.stack([np.frombuffer(htabs[(1, ta)][1], np.uint8)
-                     for _, _, ta in scan]).astype(np.int64)
-    asym = np.stack([np.frombuffer(htabs[(1, ta)][0], np.uint8)
-                     for _, _, ta in scan]).astype(np.int64)
-
-    # ---- global block schedule (scan order) + component offsets ----
-    sizes = [c["store"].size for c, _, _ in scan]
-    comp_off = np.zeros(nsc, dtype=np.int64)
-    np.cumsum(np.asarray(sizes[:-1], dtype=np.int64), out=comp_off[1:])
-    mcu = np.arange(n_mcus, dtype=np.int64)
-    if interleaved:
-        my, mx = mcu // mcus_x, mcu % mcus_x
-        base_parts, si_parts = [], []
-        for si, (comp, _, _) in enumerate(scan):
-            h, v, cols = comp["h"], comp["v"], comp["store"].shape[1]
-            by, bx = np.divmod(np.arange(h * v, dtype=np.int64), h)
-            bb = (((my[:, None] * v + by) * cols + mx[:, None] * h + bx) << 6)
-            base_parts.append(bb + comp_off[si])
-            si_parts.append(np.full((n_mcus, h * v), si, dtype=np.int64))
-        block_base = np.concatenate(base_parts, axis=1).reshape(-1)
-        block_si = np.concatenate(si_parts, axis=1).reshape(-1)
-        bpm = block_base.shape[0] // n_mcus
-    else:
-        comp = scan[0][0]
-        cols = comp["store"].shape[1]
-        by, bx = np.divmod(mcu, comp["nbx"])
-        block_base = ((by * cols + bx) << 6) + comp_off[0]
-        block_si = np.zeros(n_mcus, dtype=np.int64)
-        bpm = 1
-    zz = _JZZ.astype(np.int64)
-
-    # DC size categories are <= 15 (8-bit baseline max is 11), so
-    # ``sym & 15``/``sym >> 4`` decode BOTH table kinds uniformly; a
-    # corrupt DHT with a larger DC symbol falls back to the scalar
-    # path, which reproduces the per-bit error behavior
-    if (dsym > 15).any():
-        return None
-    # Packed fused LUT: one int64 gather yields (code length << 8 | sym)
-    # for the right table — flat-indexed by (2·si + is_dc) << 16 | w
-    lut = np.empty((2 * nsc, 65536), dtype=np.int16)
-    lut[0::2] = (alen.astype(np.int64) << 8) | asym
-    lut[1::2] = (dlen.astype(np.int64) << 8) | dsym
-    lut = lut.reshape(-1)  # int16: 1.5 MB stays L2-resident under the
-    # random 16-bit-window gather (the step's one true random access)
-
-    # ---- per-lane state (COMPRESSED: arrays hold only live lanes;
-    # ``gid`` maps row -> lane id, rows drop out as lanes finish) ----
-    lane = np.arange(lanes, dtype=np.int64)
-    gid = lane.copy()
-    bp = seg_base * 8                       # absolute bit cursor
-    limit = bp + np.asarray([segs[i]["bitlen"] for i in range(lanes)],
-                            dtype=np.int64)
-    bj = np.minimum(lane * dri, n_mcus) * bpm       # current block
-    bj_end = np.minimum((lane + 1) * dri, n_mcus) * bpm
-    k = np.zeros(lanes, dtype=np.int64)     # 0 = expecting DC
-    preds = np.zeros((lanes, nsc), dtype=np.int64)
-    last_bp = -1  # final bit cursor of lane lanes-1, for the raw pos
-    out_idx: list[np.ndarray] = []
-    out_val: list[np.ndarray] = []
-
-    while len(gid):
-        si = block_si[bj]
-        wv = W[bp >> 3]
-        off = bp & 7
-        w = (wv >> (40 - off)) & 0xFFFF
-        is_dc = k == 0
-        packed = lut[((2 * si + is_dc) << 16) | w]
-        ln = packed >> 8
-        sym = packed & 255
-        # widen before shifting: the packed LUT is int16, and at the
-        # maximum magnitude category s == 15 both ``1 << s`` (the
-        # EXTEND threshold) and ``(1 << s) - 1`` (the mask) overflow
-        # int16 — EXTEND would silently never fire for m < 16384
-        s = (sym & 15).astype(np.int64)  # == sym for DC (validated <= 15 above)
-        # magnitude bits from the SAME window (s == 0 lanes read nothing)
-        m = (wv >> (56 - off - ln - s)) & ((1 << s) - 1)
-        bp = bp + ln + s
-        r = sym >> 4          # == 0 for DC
-        coef = ~is_dc & (s > 0)
-        knew = k + r
-        # one fused anomaly check: zero-length code, bit starvation
-        # (either read), AC index overflow — scalar reruns and raises
-        # the exact per-bit error/truncation behavior
-        if ((ln == 0) | (bp > limit) | (coef & (knew > 63))).any():
-            return None
-        t = 1 << s
-        val = np.where((m << 1) < t, m + 1 - t, m)  # EXTEND; 0 for s==0
-        # --- DC lanes: accumulate predictor, emit coef 0 ---
-        if is_dc.any():
-            d = np.flatnonzero(is_dc)
-            preds[d, si[d]] += val[d]  # val is 0 when s == 0
-            out_idx.append(block_base[bj[d]])
-            out_val.append(preds[d, si[d]])
-        # --- AC lanes ---
-        if coef.any():
-            c = np.flatnonzero(coef)
-            out_idx.append(block_base[bj[c]] + zz[knew[c]])
-            out_val.append(val[c])
-        zrl = ~is_dc & (s == 0) & (r == 15)
-        # EOB (ac, s == 0, r != 15) lands in the final 64 branch
-        k = np.where(is_dc, 1, np.where(coef, knew + 1,
-                     np.where(zrl, k + 16, 64)))
-        # --- block / lane advance ---
-        done_blk = k > 63
-        if done_blk.any():
-            bj = bj + done_blk
-            k = np.where(done_blk, 0, k)
-            finished = bj >= bj_end
-            if finished.any():
-                f = np.flatnonzero(finished)
-                # a non-last lane with >=8 unread bits means data where
-                # the restart marker belongs — scalar raises "missing
-                # restart"
-                if ((limit[f] - bp[f] >= 8) & (gid[f] < lanes - 1)).any():
-                    return None
-                if gid[f[-1]] == lanes - 1:
-                    last_bp = int(bp[f[-1]])
-                keep = ~finished
-                gid, bp, limit, bj, bj_end, k = (
-                    gid[keep], bp[keep], limit[keep],
-                    bj[keep], bj_end[keep], k[keep])
-                preds = preds[keep]
-
-    # ---- success: single scatter, then position after the last lane ----
-    if out_idx:
-        big = np.concatenate(out_idx)
-        bigv = np.concatenate(out_val)
-        flats = [c["store"].reshape(-1) for c, _, _ in scan]
-        order = np.argsort(big, kind="stable")
-        big, bigv = big[order], bigv[order]
-        splits = np.searchsorted(big, comp_off[1:])
-        for si2, (ii, vv) in enumerate(zip(np.split(big, splits),
-                                           np.split(bigv, splits))):
-            flats[si2][ii - comp_off[si2]] = vv
-    br.si = lanes - 1
-    br.bitpos = int(last_bp - seg_base[lanes - 1] * 8)
-    pos = br.end_raw_pos()
-    while data[pos] != 0xFF or data[pos + 1] == 0x00:
-        pos += 1
-    return pos
-
-
-def _jdecode_scan_seq(br, data, frame, htabs, scan, dri):
-    """Baseline-sequential scan decode, fully inlined (r4, VERDICT r3
-    item 3): the Huffman symbol + magnitude + EXTEND chain is plain
-    local-variable integer arithmetic over the _JFastReader's word
-    windows (no method calls, no numpy scalars in the loop), and
-    coefficients accumulate into python lists that scatter into each
-    component's store with ONE vectorized assignment per scan.  The
-    semantics — traversal order, DC prediction, restart resets,
-    truncation recovery (partial block kept, _JMarkerHit(EOI) returns
-    gracefully), corrupt-stream ValueErrors — replicate the generic
-    path bit for bit (pinned by the fuzz + bit-exactness tests)."""
-    interleaved = len(scan) > 1
-    mcus_x = frame["mcus_x"]
-    n_mcus = (mcus_x * frame["mcus_y"] if interleaved
-              else scan[0][0]["nbx"] * scan[0][0]["nby"])
-    nsc = len(scan)
-    comps = []
-    idxs: list[list[int]] = [[] for _ in scan]
-    vals: list[list[int]] = [[] for _ in scan]
-    for comp, td, ta in scan:
-        dsym, dlen = htabs[(0, td)]
-        asym, alen = htabs[(1, ta)]
-        comps.append((comp, comp["store"].shape[1], dsym, dlen, asym, alen))
-    zz = _JZZ_L
-    preds = [0] * nsc
-    words, bp, bitlen = br.words, br.bitpos, br.bitlen
-    rst_n = 0
-    end_marker = None
-
-    def starved():
-        raise _JMarkerHit(br.segs[br.si]["premature"])
-
-    try:
-        for mcu_i in range(n_mcus):
-            if dri and mcu_i and mcu_i % dri == 0:
-                br.bitpos = bp
-                br.restart(rst_n)
-                words, bp, bitlen = br.words, br.bitpos, br.bitlen
-                rst_n = (rst_n + 1) % 8
-                preds = [0] * nsc
-            if interleaved:
-                my, mx = divmod(mcu_i, mcus_x)
-            for si in range(nsc):
-                comp, cols, dsym, dlen, asym, alen = comps[si]
-                if interleaved:
-                    h, v = comp["h"], comp["v"]
-                    bases = [
-                        ((my * v + by) * cols + mx * h + bx) << 6
-                        for by in range(v) for bx in range(h)
-                    ]
-                else:
-                    by, bx = divmod(mcu_i, comp["nbx"])
-                    bases = [(by * cols + bx) << 6]
-                ia, va = idxs[si].append, vals[si].append
-                pred = preds[si]
-                for base in bases:
-                    # ---- DC: symbol, magnitude, EXTEND ----
-                    w = (words[bp >> 3] >> (16 - (bp & 7))) & 0xFFFF
-                    ln = dlen[w]
-                    if ln == 0 or bp + ln > bitlen:
-                        if bp + 16 > bitlen:
-                            starved()
-                        raise ValueError("jfif: corrupt Huffman stream")
-                    bp += ln
-                    s = dsym[w]
-                    if s:
-                        if bp + s > bitlen:
-                            starved()
-                        m = (words[bp >> 3] >> (32 - (bp & 7) - s)) & (
-                            (1 << s) - 1
-                        )
-                        bp += s
-                        pred += m - (1 << s) + 1 if m < (1 << (s - 1)) else m
-                    ia(base)
-                    va(pred)
-                    # ---- AC run-length loop ----
-                    k = 1
-                    while k <= 63:
-                        w = (words[bp >> 3] >> (16 - (bp & 7))) & 0xFFFF
-                        ln = alen[w]
-                        if ln == 0 or bp + ln > bitlen:
-                            if bp + 16 > bitlen:
-                                starved()
-                            raise ValueError("jfif: corrupt Huffman stream")
-                        bp += ln
-                        rs = asym[w]
-                        s = rs & 15
-                        if s == 0:
-                            if rs == 0xF0:  # ZRL
-                                k += 16
-                                continue
-                            break  # EOB
-                        k += rs >> 4
-                        if k > 63:
-                            raise ValueError("jfif: AC index overflow")
-                        if bp + s > bitlen:
-                            starved()
-                        m = (words[bp >> 3] >> (32 - (bp & 7) - s)) & (
-                            (1 << s) - 1
-                        )
-                        bp += s
-                        ia(base + zz[k])
-                        va(m - (1 << s) + 1 if m < (1 << (s - 1)) else m)
-                        k += 1
-                preds[si] = pred
-    except _JMarkerHit as mhit:
-        if mhit.marker != 0xD9:
-            raise ValueError(
-                f"jfif: unexpected marker 0x{mhit.marker:02x} in scan")
-        end_marker = br.segs[br.si]["raw_ff"]  # truncated: main loop sees EOI
-    br.bitpos = bp
-    for si in range(nsc):
-        if idxs[si]:
-            comps[si][0]["store"].reshape(-1)[
-                np.asarray(idxs[si], dtype=np.int64)
-            ] = np.asarray(vals[si], dtype=np.int64)
-    if end_marker is not None:
-        return end_marker
-    pos = br.end_raw_pos()
-    while data[pos] != 0xFF or data[pos + 1] == 0x00:
-        pos += 1
-    return pos
-
-
-def _jdecode_scan(data, pos, frame, htabs, scan, ss, se, ah, al, dri,
-                  ff_all: np.ndarray | None = None):
-    """Decode one scan's entropy-coded data into the frame's persistent
-    per-component coefficient stores (T.81 F.2 sequential, G.2
-    progressive). Returns the byte offset of the next marker. ``scan``
-    is [(comp, Td, Ta), ...] in scan order."""
-    prog = frame["prog"]
-    interleaved = len(scan) > 1
-    if prog:
-        if ss == 0 and se != 0:
-            raise ValueError("jfif: progressive DC scan must have Se=0")
-        if ss > 0 and interleaved:
-            raise ValueError("jfif: progressive AC scans are single-component")
-    elif (ss, se, ah, al) != (0, 63, 0, 0):
-        raise ValueError("jfif: invalid sequential scan header")
-    if interleaved:
-        n_mcus = frame["mcus_x"] * frame["mcus_y"]
-    else:
-        n_mcus = scan[0][0]["nbx"] * scan[0][0]["nby"]
-    mode = ("seq" if not prog else
-            "dc_first" if ss == 0 and ah == 0 else
-            "dc_refine" if ss == 0 else
-            "ac_first" if ah == 0 else "ac_refine")
-    br = _JFastReader(data, pos, ff_all)
-    if mode == "seq":
-        # restart-parallel numpy lanes when the stream has intervals,
-        # else the inlined scalar hot path
-        out = _jdecode_scan_seq_lanes(br, data, frame, htabs, scan, dri)
-        if out is not None:
-            return out
-        return _jdecode_scan_seq(br, data, frame, htabs, scan, dri)
-    st = {"preds": [0] * len(scan), "eobrun": 0}
-    p1, m1 = 1 << al, -(1 << al)
-
-    def block_dc_first(zzv, si, dc_tab):
-        s = br.decode_sym(dc_tab)
-        diff = _jextend(br.read_bits(s), s) if s else 0
-        st["preds"][si] += diff
-        zzv[0] = st["preds"][si] << al
-
-    def block_dc_refine(zzv):
-        if br.read_bit():
-            # two's-complement OR works for negatives: the first pass's
-            # arithmetic shift left this bit zero
-            zzv[0] = int(zzv[0]) | p1
-
-    def block_ac_first(zzv, ac_tab):
-        if st["eobrun"] > 0:
-            st["eobrun"] -= 1
-            return
-        k = ss
-        while k <= se:
-            rs = br.decode_sym(ac_tab)
-            r, s = rs >> 4, rs & 15
-            if s == 0:
-                if r != 15:
-                    st["eobrun"] = (1 << r) - 1  # this block is a member
-                    if r:
-                        st["eobrun"] += br.read_bits(r)
-                    break
-                k += 16  # ZRL
-                continue
-            k += r
-            if k > se:
-                raise ValueError("jfif: AC index overflow")
-            zzv[_JZZ[k]] = _jextend(br.read_bits(s), s) << al
-            k += 1
-
-    def _refine_correct(zzv, k):
-        c = int(zzv[_JZZ[k]])
-        if br.read_bit() and (c & p1) == 0:
-            zzv[_JZZ[k]] = c + (p1 if c >= 0 else m1)
-
-    def block_ac_refine(zzv, ac_tab):
-        k = ss
-        if st["eobrun"] == 0:
-            while k <= se:
-                rs = br.decode_sym(ac_tab)
-                r, s = rs >> 4, rs & 15
-                val = 0
-                if s == 0:
-                    if r != 15:
-                        st["eobrun"] = 1 << r
-                        if r:
-                            st["eobrun"] += br.read_bits(r)
-                        break
-                    # r == 15 (ZRL): advance over 16 zero-history coefs
-                else:
-                    if s != 1:
-                        raise ValueError("jfif: refinement magnitude != 1")
-                    val = p1 if br.read_bit() else m1
-                # advance: correction bits for already-nonzero coefs,
-                # count down r over still-zero ones, then place val
-                while k <= se:
-                    if int(zzv[_JZZ[k]]) != 0:
-                        _refine_correct(zzv, k)
-                    else:
-                        if r == 0:
-                            if val:
-                                zzv[_JZZ[k]] = val
-                            k += 1
-                            break
-                        r -= 1
-                    k += 1
-        if st["eobrun"] > 0:
-            while k <= se:  # corrections for the rest of the band
-                if int(zzv[_JZZ[k]]) != 0:
-                    _refine_correct(zzv, k)
-                k += 1
-            st["eobrun"] -= 1
-
-    rst_n = 0
-    try:
-        for mcu_i in range(n_mcus):
-            if dri and mcu_i and mcu_i % dri == 0:
-                br.restart(rst_n)
-                rst_n = (rst_n + 1) % 8
-                st["preds"] = [0] * len(scan)
-                st["eobrun"] = 0
-            if interleaved:
-                my, mx = divmod(mcu_i, frame["mcus_x"])
-                for si, (comp, td, ta) in enumerate(scan):
-                    for by in range(comp["v"]):
-                        for bx in range(comp["h"]):
-                            zzv = comp["store"][my * comp["v"] + by,
-                                                mx * comp["h"] + bx]
-                            if mode == "dc_first":
-                                block_dc_first(zzv, si, htabs[(0, td)])
-                            else:  # dc_refine (AC modes are single-component)
-                                block_dc_refine(zzv)
-            else:
-                comp, td, ta = scan[0]
-                by, bx = divmod(mcu_i, comp["nbx"])
-                zzv = comp["store"][by, bx]
-                if mode == "dc_first":
-                    block_dc_first(zzv, 0, htabs[(0, td)])
-                elif mode == "dc_refine":
-                    block_dc_refine(zzv)
-                elif mode == "ac_first":
-                    block_ac_first(zzv, htabs[(1, ta)])
-                else:
-                    block_ac_refine(zzv, htabs[(1, ta)])
-    except _JMarkerHit as m:
-        if m.marker != 0xD9:
-            raise ValueError(f"jfif: unexpected marker 0x{m.marker:02x} in scan")
-        # truncated stream: point the main loop at the EOI's 0xFF
-        return br.segs[br.si]["raw_ff"]
-    # skip padding bits / stuffed bytes up to the next marker
-    pos = br.end_raw_pos()
-    while data[pos] != 0xFF or data[pos + 1] == 0x00:
-        pos += 1
-    return pos
-
-
-def decode_jfif(data: bytes) -> np.ndarray:
-    """Generic JPEG decoder: baseline sequential (SOF0/SOF1) and
-    progressive (SOF2) Huffman streams — tables read from the stream,
-    any integer Hi×Vi sampling, interleaved or single-component scans,
-    spectral selection + successive approximation, DRI/RSTn, grayscale
-    or YCbCr. A truncated progressive stream (early EOI) reconstructs
-    at the refinement level reached. Raises NotImplementedError for
-    arithmetic-coded and hierarchical/lossless processes."""
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("jfif: missing SOI")
-    pos = 2
-    qtabs: dict[int, np.ndarray] = {}
-    htabs: dict[tuple, tuple] = {}
-    frame = None
-    dri = 0
-    nscans = 0
-    # one 0xFF sweep for the whole file: progressive streams have many
-    # scans and each _jsplit_scan call would otherwise re-scan the tail
-    ff_all = np.flatnonzero(np.frombuffer(data, dtype=np.uint8) == 0xFF)
-    while True:
-        if data[pos] != 0xFF:
-            raise ValueError("jfif: expected marker")
-        # T.81 B.1.1.2: any number of 0xFF fill bytes may precede a marker.
-        while data[pos + 1] == 0xFF:
-            pos += 1
-        marker = data[pos + 1]
-        pos += 2
-        if marker == 0xD9:  # EOI
-            break
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:  # TEM / stray RSTn
-            continue
-        if marker in (0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError("jfif: arithmetic coding not supported")
-        if marker in (0xC3, 0xC5, 0xC6, 0xC7):
-            raise NotImplementedError(
-                "jfif: lossless/hierarchical process not supported")
-        ln = struct.unpack(">H", data[pos:pos + 2])[0]
-        payload = data[pos + 2:pos + ln]
-        if marker == 0xDB:  # DQT (possibly several tables)
-            p = 0
-            while p < len(payload):
-                pq, tq = payload[p] >> 4, payload[p] & 15
-                p += 1
-                n = 64 * (2 if pq else 1)
-                raw = payload[p:p + n]
-                vals = (np.frombuffer(raw, dtype=">u2") if pq
-                        else np.frombuffer(raw, dtype=np.uint8))
-                tab = np.zeros(64, dtype=np.float64)
-                tab[_JZZ] = vals.astype(np.float64)
-                qtabs[tq] = tab.reshape(8, 8)
-                p += n
-        elif marker == 0xC4:  # DHT (possibly several tables)
-            p = 0
-            while p < len(payload):
-                tc, th = payload[p] >> 4, payload[p] & 15
-                bits = list(payload[p + 1:p + 17])
-                nv = sum(bits)
-                vals = list(payload[p + 17:p + 17 + nv])
-                htabs[(tc, th)] = _huff_decode_table(bits, vals)
-                p += 17 + nv
-        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 baseline, SOF2 progressive
-            ncomp = payload[5]
-            if ncomp not in (1, 3):
-                # 4-component (Adobe CMYK) and exotic counts: only the
-                # grayscale/YCbCr color models are implemented — raise
-                # the auditable seam error BEFORE spending the decode
-                raise NotImplementedError(
-                    f"jfif: {ncomp}-component color model not supported")
-            comps = []
-            for c in range(ncomp):
-                cid, hv, tq = payload[6 + 3 * c:9 + 3 * c]
-                comps.append({"id": cid, "h": hv >> 4, "v": hv & 15, "tq": tq})
-            h = struct.unpack(">H", payload[1:3])[0]
-            w = struct.unpack(">H", payload[3:5])[0]
-            if h == 0 or w == 0:
-                raise ValueError("jfif: zero frame dimension")
-            if h * w > JFIF_MAX_PIXELS:
-                # corrupt dim bytes would otherwise drive a multi-GB
-                # np.zeros before any entropy data is read; this is an
-                # ingest/test-path codec (per-bit Python entropy), so a
-                # generous-but-bounded cap is the right failure mode
-                raise ValueError(
-                    f"jfif: {w}x{h} exceeds the decoder pixel cap "
-                    f"({JFIF_MAX_PIXELS})")
-            for c in comps:
-                if not (1 <= c["h"] <= 4 and 1 <= c["v"] <= 4):
-                    raise ValueError(
-                        f"jfif: sampling factor {c['h']}x{c['v']} outside "
-                        "the T.81 range 1..4")
-            hmax = max(c["h"] for c in comps)
-            vmax = max(c["v"] for c in comps)
-            for c in comps:
-                # Legal per T.81 but unsupported here: e.g. Y=3x1 + Cb=2x1
-                # gives a 1.5x chroma ratio, which the np.repeat upsampler
-                # can't express — integer division below would silently
-                # mis-scale the plane.
-                if hmax % c["h"] or vmax % c["v"]:
-                    raise NotImplementedError(
-                        "jfif: non-integer sampling ratio "
-                        f"(hmax={hmax}, vmax={vmax} vs component "
-                        f"{c['h']}x{c['v']})"
-                    )
-            mcus_x = -(-w // (8 * hmax))
-            mcus_y = -(-h // (8 * vmax))
-            for c in comps:
-                # single-component scans traverse the ceil of the
-                # component's true sample dims; interleaved scans the
-                # (possibly larger) padded MCU grid
-                c["nbx"] = -(-(-(-w * c["h"] // hmax)) // 8)
-                c["nby"] = -(-(-(-h * c["v"] // vmax)) // 8)
-                c["store"] = np.zeros(
-                    (mcus_y * c["v"], mcus_x * c["h"], 64), dtype=np.int64)
-            frame = {"h": h, "w": w, "comps": comps, "hmax": hmax,
-                     "vmax": vmax, "mcus_x": mcus_x, "mcus_y": mcus_y,
-                     "prog": marker == 0xC2}
-        elif marker == 0xDD:  # DRI
-            dri = struct.unpack(">H", payload[:2])[0]
-        elif marker == 0xDA:  # SOS
-            if frame is None:
-                raise ValueError("jfif: SOS before SOF")
-            ns = payload[0]
-            scan = []
-            for c in range(ns):
-                cs, tda = payload[1 + 2 * c:3 + 2 * c]
-                # explicit lookup: a corrupted selector byte must raise
-                # ValueError, not StopIteration (which PEP 479 turns
-                # into RuntimeError inside the Arrow kernel generators,
-                # escaping the decode() normalization entirely)
-                for x in frame["comps"]:
-                    if x["id"] == cs:
-                        scan.append((x, tda >> 4, tda & 15))
-                        break
-                else:
-                    raise ValueError(
-                        f"jfif: SOS selects unknown component id {cs}")
-            ss = payload[1 + 2 * ns]
-            se = payload[2 + 2 * ns]
-            ahl = payload[3 + 2 * ns]
-            pos += ln
-            pos = _jdecode_scan(data, pos, frame, htabs, scan,
-                                ss, se, ahl >> 4, ahl & 15, dri, ff_all)
-            nscans += 1
-            continue
-        pos += ln
-    if frame is None or nscans == 0:
-        raise ValueError("jfif: no scan data")
-
-    # vectorized dequant + IDCT + upsample per component — float32
-    # throughout: JPEG is lossy and the only exact-equality contracts
-    # are decode-vs-decode through this same stage (restart/progressive
-    # equivalence tests), so single precision (~1e-4 coefficient error,
-    # well under the quantizer step) halves the memory traffic of the
-    # full-frame stage that dominates large decodes
-    h, w = frame["h"], frame["w"]
-    hmax, vmax = frame["hmax"], frame["vmax"]
-    dct32 = _DCT8.astype(np.float32)
-    out_planes = []
-    for comp in frame["comps"]:
-        q = qtabs[comp["tq"]].ravel().astype(np.float32)
-        nby, nbx, _ = comp["store"].shape
-        blocks = (comp["store"].astype(np.float32) * q).reshape(nby, nbx, 8, 8)
-        px = dct32.T @ blocks @ dct32 + np.float32(128.0)
-        plane = px.transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8)
-        fy, fx = vmax // comp["v"], hmax // comp["h"]
-        if fy > 1:
-            plane = np.repeat(plane, fy, axis=0)
-        if fx > 1:
-            plane = np.repeat(plane, fx, axis=1)
-        out_planes.append(plane[:h, :w])
-    if len(out_planes) == 1:
-        p = out_planes[0]
-        np.rint(p, out=p)
-        np.clip(p, 0, 255, out=p)
-        g = p.astype(np.uint8)
-        return np.stack([g, g, g], axis=-1)
-    return _ycbcr_to_rgb(*out_planes)
-
-
-LOSSY_FORMATS = ("dctq", "jfif", "jpeg", "jpg")
+LOSSY_FORMATS = ("dctq",)
 
 
 # ---------------------------------------------------------------------------
 # dispatch
 # ---------------------------------------------------------------------------
 
-_ENCODERS = {"ppm": encode_ppm, "bmp": encode_bmp, "png": encode_png, "dctq": encode_dctq,
-             "jfif": encode_jfif, "jpeg": encode_jfif, "jpg": encode_jfif}
-_DECODERS = {"ppm": decode_ppm, "bmp": decode_bmp, "png": decode_png, "dctq": decode_dctq,
-             "jfif": decode_jfif, "jpeg": decode_jfif, "jpg": decode_jfif}
+_ENCODERS = {"ppm": encode_ppm, "bmp": encode_bmp, "png": encode_png, "dctq": encode_dctq}
+_DECODERS = {"ppm": decode_ppm, "bmp": decode_bmp, "png": decode_png, "dctq": decode_dctq}
 
 
 def encode(pixels: np.ndarray, fmt: str) -> bytes:
@@ -1728,7 +275,7 @@ def encode(pixels: np.ndarray, fmt: str) -> bytes:
     except KeyError:
         raise NotImplementedError(
             f"fmt={fmt!r}: encodable formats are {tuple(_ENCODERS)} (no PIL in "
-            "this sandbox); webp/mp3/mp4 would plug in behind the same dispatch"
+            "this sandbox); jpeg/webp/mp3/mp4 would plug in behind the same dispatch"
         ) from None
     return enc(pixels)
 
@@ -1837,129 +384,3 @@ def geotag_from_phash(
         bbox[1] + u2 * (bbox[3] - bbox[1]),
     )
     return lon, lat
-
-
-# ---------------------------------------------------------------------------
-# GVID — minimal seekable video container (r2: makes the video
-# frame-sampling operator real without ffmpeg/PyAV). Layout:
-#   b"GVID" | u16 n_frames | u16 w | u16 h | u8 fmt_idx |
-#   u32 frame_len × n_frames | frame bytes...
-# Each frame is encoded with one of THIS module's image codecs, and the
-# length table makes frame-accurate seeks O(1) — sampling every Nth
-# frame decodes ONLY the sampled frames, which is the design point.
-# ---------------------------------------------------------------------------
-
-VIDEO_MAGIC = b"GVID"
-_VID_FMTS = FORMATS + ("dctq",)
-
-
-def encode_video(frames: list, fmt: str = "png") -> bytes:
-    """Frames (each HxWx3 uint8, identical shape) → GVID bytes."""
-    if not frames:
-        raise ValueError("empty frame list")
-    h, w, _ = np.asarray(frames[0]).shape
-    payloads = [encode(np.asarray(f), fmt) for f in frames]
-    import struct
-
-    head = VIDEO_MAGIC + struct.pack(
-        "<HHHB", len(payloads), w, h, _VID_FMTS.index(fmt)
-    )
-    table = b"".join(struct.pack("<I", len(p)) for p in payloads)
-    return head + table + b"".join(payloads)
-
-
-def video_info(data: bytes) -> tuple[int, int, int, str, list[tuple[int, int]]]:
-    """(n_frames, w, h, fmt, [(offset, length)]) without decoding any
-    pixels — the seek table. Raises ValueError on a corrupt or
-    truncated container (header short, bad fmt index, or the seek
-    table pointing past the end of the bytes)."""
-    import struct
-
-    if data[:4] != VIDEO_MAGIC:
-        raise ValueError("not a GVID container")
-    try:
-        n, w, h, fi = struct.unpack("<HHHB", data[4:11])
-        lens = struct.unpack(f"<{n}I", data[11 : 11 + 4 * n])
-        fmt = _VID_FMTS[fi]
-    except (struct.error, IndexError) as e:
-        raise ValueError(f"gvid: corrupt or truncated header ({e})") from e
-    off = 11 + 4 * n
-    offsets = []
-    for ln in lens:
-        offsets.append((off, ln))
-        off += ln
-    if off > len(data):
-        raise ValueError(
-            f"gvid: truncated container (seek table needs {off} bytes, "
-            f"have {len(data)})")
-    return n, w, h, fmt, offsets
-
-
-def decode_video_frame(data: bytes, idx: int) -> np.ndarray:
-    """Decode ONE frame by index (O(1) seek via the length table)."""
-    _n, _w, _h, fmt, offs = video_info(data)
-    o, ln = offs[idx]
-    return decode(data[o : o + ln], fmt)
-
-
-# ---------------------------------------------------------------------------
-# WAV (RIFF PCM16) — minimal stdlib-free codec for the audio-feature
-# operator. Mono or interleaved stereo, 16-bit little-endian.
-# ---------------------------------------------------------------------------
-
-
-def encode_wav(samples: np.ndarray, sample_rate: int) -> bytes:
-    """float samples in [-1, 1] (1-D mono or (n, ch)) → PCM16 WAV."""
-    import struct
-
-    s = np.asarray(samples, dtype=np.float64)
-    if s.ndim == 1:
-        s = s[:, None]
-    n, ch = s.shape
-    pcm = np.clip(np.round(s * 32767.0), -32768, 32767).astype("<i2").tobytes()
-    byte_rate = sample_rate * ch * 2
-    hdr = (
-        b"RIFF"
-        + struct.pack("<I", 36 + len(pcm))
-        + b"WAVEfmt "
-        + struct.pack("<IHHIIHH", 16, 1, ch, sample_rate, byte_rate, ch * 2, 16)
-        + b"data"
-        + struct.pack("<I", len(pcm))
-    )
-    return hdr + pcm
-
-
-def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
-    """PCM16 WAV bytes → (float samples in [-1, 1] shaped (n, ch),
-    sample_rate). Walks RIFF chunks, so extra chunks are tolerated."""
-    import struct
-
-    if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE file")
-    pos, sr, ch, bits, pcm = 12, None, None, None, None
-    while pos + 8 <= len(data):
-        tag = data[pos : pos + 4]
-        (ln,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        body = data[pos + 8 : pos + 8 + ln]
-        if len(body) < ln:
-            raise ValueError(
-                f"wav: truncated {tag!r} chunk ({len(body)} of {ln} bytes)")
-        if tag == b"fmt ":
-            try:
-                _fmt, ch, sr, _br, _ba, bits = struct.unpack("<HHIIHH", body[:16])
-            except struct.error as e:
-                raise ValueError(f"wav: corrupt fmt chunk ({e})") from e
-        elif tag == b"data":
-            pcm = body
-        pos += 8 + ln + (ln & 1)
-    if sr is None or pcm is None:
-        raise ValueError("missing fmt/data chunk")
-    if bits != 16:
-        raise ValueError(f"only PCM16 supported, got {bits}-bit")
-    if sr <= 0 or not ch or ch <= 0:
-        # corrupt fmt-chunk bytes: a zero sample rate would surface as
-        # ZeroDivisionError in the feature kernel, escaping its
-        # ValueError handling (review r3 finding)
-        raise ValueError(f"wav: invalid sample rate {sr} / channels {ch}")
-    arr = np.frombuffer(pcm, dtype="<i2").astype(np.float64) / 32767.0
-    return arr.reshape(-1, ch), sr

@@ -1,15 +1,12 @@
-"""Multimodal (image/audio/video) column operators.
+"""Image column operators.
 
-Images, audio, and video are opaque ``binary`` columns with typed
-metadata (input_hint schema). Decode / feature-extract / resize /
-frame-sample run as Arrow-batched ``mapInPandas`` kernels, all REAL in
-this sandbox: images via the from-scratch ppm/bmp/png/dctq codecs plus
-the ITU-T T.81 JPEG codec (baseline sequential AND progressive since
-r3), video via the seekable GVID container, audio via the RIFF/PCM16
-WAV walker (all in images.py). Foreign formats whose codecs genuinely
-need external libs (webp/mp3/mp4, arithmetic-coded JPEG) raise
-``NotImplementedError`` at the decode seam — the documented boundary
-per the build contract.
+Images are opaque ``binary`` columns with typed metadata (input_hint
+schema). Decode / pixel stats / verify-and-assign / resize / embed run
+as Arrow-batched ``mapInPandas`` kernels over the codecs in images.py:
+lossless ppm/bmp/png and lossy dctq. Any other format (jpeg, webp,
+mp3, mp4, …) raises ``NotImplementedError`` at the decode seam, and
+each kernel turns it, like corrupt bytes, into an auditable row
+instead of a failed task.
 """
 
 from __future__ import annotations
@@ -30,11 +27,28 @@ PIXEL_STATS_SCHEMA = (
 )
 
 
+# Hamming bits a lossy decode's phash64 may differ from the stored hash
+# and still verify (lossless rows need equality). Measured on 1,200
+# dctq images (random noise and smooth sinusoids, 16² and 64²): true
+# rows differ by at most 4 bits, bytes of another noise image by at
+# least 20. Near-flat images (contrast within ±8 gray levels) sit at
+# 7–38 bits even when true, so they are flagged unverified.
+LOSSY_PHASH_MAX_BITS = 8
+
+
+def _phash_verified(got: int, stored: int, fmt: str) -> bool:
+    """The per-row verification rule shared by every kernel."""
+    if fmt in img.LOSSY_FORMATS:
+        diff = (got ^ stored) & 0xFFFFFFFFFFFFFFFF
+        return diff.bit_count() <= LOSSY_PHASH_MAX_BITS
+    return got == stored
+
+
 def decode_pixel_stats(images: DataFrame) -> DataFrame:
     """Decode every image and emit per-image pixel statistics plus the
-    two per-row invariants (BASELINE.json): phash(decoded) == stored
-    phash, and round-trip PSNR (inf for the lossless whitelist,
-    reported so a future lossy codec is gated at ≥40dB)."""
+    two per-row invariants (BASELINE.json): ``phash_match`` (the
+    verification rule of decode_tile_assign), and round-trip PSNR (inf
+    for the lossless formats)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -59,7 +73,7 @@ def decode_pixel_stats(images: DataFrame) -> DataFrame:
                         image_id, fmt, int(w), int(h), True,
                         float(px[:, :, 0].mean()), float(px[:, :, 1].mean()),
                         float(px[:, :, 2].mean()), float(gray.std()),
-                        img.phash64(px) == int(ph),
+                        _phash_verified(img.phash64(px), int(ph), fmt),
                         float(p) if np.isfinite(p) else float("inf"),
                     )
                 )
@@ -78,15 +92,16 @@ def decode_pixel_stats(images: DataFrame) -> DataFrame:
 
 def decode_tile_assign(images: DataFrame, res: int) -> DataFrame:
     """J9 full-integrity raster-tile assignment: decode pixels, verify
-    the stored phash against the decoded image, re-derive the geotag
-    from the *verified* hash, and assign the tile cell — one
-    Arrow-batched pass over the binary column. This is the heavyweight
-    variant of spatial.assign_images_to_tiles (which trusts the stored
-    phash and stays JVM-side); use this one when ingesting untrusted
-    bytes. Returns (image_id, caption, tile, phash_match) —
-    ``phash_match`` is the per-row verification verdict: hash equality
-    for lossless formats, codec-roundtrip PSNR ≥ 40 dB for lossy
-    (input_hint contract); callers filter on it."""
+    the decoded image against the stored phash, derive the geotag from
+    the *stored* hash, and assign the tile cell — one Arrow-batched
+    pass over the binary column. This is the heavyweight variant of
+    spatial.assign_images_to_tiles (which trusts the stored phash and
+    stays JVM-side); use this one when ingesting untrusted bytes.
+    Returns (image_id, caption, tile, phash_match) — ``phash_match`` is
+    the per-row verification verdict: phash64(decoded) equals the
+    stored hash for lossless formats, and is within
+    ``LOSSY_PHASH_MAX_BITS`` of it for lossy ones; callers filter on
+    it."""
     from .. import cells
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -100,15 +115,7 @@ def decode_tile_assign(images: DataFrame, res: int) -> DataFrame:
                 ph[i] = int(stored)
                 try:
                     px = img.decode(bytes(data), fmt)
-                    if fmt in img.LOSSY_FORMATS:
-                        # lossy contract (input_hint): decoded-pixel PSNR
-                        # ≥ 40 dB on the codec roundtrip; phash equality is
-                        # a lossless-only invariant (quantization may flip
-                        # hash bits)
-                        rt = img.decode(img.encode(px, fmt), fmt)
-                        ok[i] = img.psnr(px, rt) >= 40.0
-                    else:
-                        ok[i] = img.phash64(px) == int(stored)
+                    ok[i] = _phash_verified(img.phash64(px), int(stored), fmt)
                 except (NotImplementedError, ValueError):
                     # undecodable/corrupt bytes: the tile is still derived
                     # from the stored phash below, but the row is flagged
@@ -162,102 +169,6 @@ def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
             yield res
 
     return images.mapInPandas(kernel, images.schema)
-
-
-def sample_video_frames(videos: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame sampling over the GVID container (images.py) — real
-    since r2 (no ffmpeg needed: frames are stored in this engine's own
-    codecs). One input row (video_id, bytes) → one output row per
-    sampled frame (video_id, frame_idx, bytes, w, h), each frame
-    re-encoded standalone so every downstream image operator applies.
-
-    Scale shape: the container's length table gives O(1) frame seeks,
-    so sampling every Nth frame DECODES only the sampled frames —
-    bytes of skipped frames are never touched. Arrow-batched
-    mapInPandas; output fan-out is frames/every_n per row. A corrupt
-    or truncated container surfaces as a single auditable sentinel row
-    (frame_idx=-1, null bytes, w=h=0) instead of killing the job or
-    silently contributing zero frames."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vids, idxs, bts, ws, hs = [], [], [], [], []
-            for vid, data in zip(pdf["video_id"], pdf["bytes"]):
-                data = bytes(data)
-                try:
-                    n, w, h, fmt, offs = img.video_info(data)
-                except ValueError:
-                    vids.append(vid)
-                    idxs.append(-1)
-                    bts.append(None)
-                    ws.append(0)
-                    hs.append(0)
-                    continue
-                for fi in range(0, n, every_n):
-                    o, ln = offs[fi]
-                    vids.append(vid)
-                    idxs.append(fi)
-                    bts.append(data[o : o + ln])
-                    ws.append(w)
-                    hs.append(h)
-            yield pd.DataFrame(
-                {
-                    "video_id": vids,
-                    "frame_idx": np.asarray(idxs, dtype=np.int32),
-                    "bytes": bts,
-                    "w": np.asarray(ws, dtype=np.int32),
-                    "h": np.asarray(hs, dtype=np.int32),
-                }
-            )
-
-    return videos.select("video_id", "bytes").mapInPandas(
-        kernel, "video_id string, frame_idx int, bytes binary, w int, h int"
-    )
-
-
-def extract_audio_features(audio: DataFrame) -> DataFrame:
-    """Audio feature extraction over RIFF/PCM16 WAV bytes — real since
-    r2 (images.decode_wav is a from-scratch RIFF walker; no codec lib).
-    Per row: duration, RMS level, zero-crossing count, and spectral
-    centroid (numpy rfft on the mono mix) — the standard cheap
-    features a training-data pipeline filters on. Arrow-batched.
-    Corrupt/truncated bytes surface as a row with all-null features
-    (filter ``duration_s IS NULL`` to audit) instead of failing the
-    job."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, data in zip(pdf["audio_id"], pdf["bytes"]):
-                try:
-                    s, sr = img.decode_wav(bytes(data))
-                except ValueError:
-                    rows.append((aid, None, None, None, None))
-                    continue
-                mono = s.mean(axis=1)
-                dur = len(mono) / sr
-                rms = float(np.sqrt(np.mean(mono**2))) if len(mono) else 0.0
-                zc = int(np.count_nonzero(np.diff(np.signbit(mono))))
-                if len(mono) > 1 and rms > 1e-12:
-                    spec = np.abs(np.fft.rfft(mono))
-                    freqs = np.fft.rfftfreq(len(mono), d=1.0 / sr)
-                    centroid = float((spec * freqs).sum() / spec.sum())
-                else:
-                    centroid = 0.0
-                rows.append((aid, dur, rms, zc, centroid))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "audio_id", "duration_s", "rms", "zero_crossings",
-                    "spectral_centroid_hz",
-                ],
-            )
-
-    return audio.select("audio_id", "bytes").mapInPandas(
-        kernel,
-        "audio_id string, duration_s double, rms double, zero_crossings long, "
-        "spectral_centroid_hz double",
-    )
 
 
 def color_embedding(images: DataFrame, grid: int = 4) -> DataFrame:

@@ -142,71 +142,6 @@ def test_spatial_image_layout_prunes_and_is_exact(spark, images_df, tmp_path):
         assert hi1 <= lo2
 
 
-def test_sample_video_frames_real(spark):
-    """Video frame sampling is real (r2): every_n-th frames come back
-    pixel-exact for lossless codecs, and only sampled indices appear."""
-    import pandas as pd
-
-    from gtfs_to_geojson_spark.operators import multimodal
-
-    rng = np.random.default_rng(8)
-    vids = []
-    frames_by_vid = {}
-    for v in range(3):
-        frames = [rng.integers(0, 256, (8, 8, 3), dtype=np.uint8) for _ in range(10)]
-        frames_by_vid[f"v{v}"] = frames
-        vids.append((f"v{v}", I.encode_video(frames, "png")))
-    # corrupt container mid-batch: must not kill the job, must surface
-    # as the documented frame_idx=-1 sentinel row
-    good = I.encode_video(frames_by_vid["v0"], "png")
-    vids.append(("v_corrupt", good[: len(good) // 2]))
-    df = spark.createDataFrame(
-        pd.DataFrame(vids, columns=["video_id", "bytes"]),
-        schema="video_id string, bytes binary",
-    )
-    out = multimodal.sample_video_frames(df, every_n=4).collect()
-    sentinel = [r for r in out if r["video_id"] == "v_corrupt"]
-    assert len(sentinel) == 1 and sentinel[0]["frame_idx"] == -1
-    assert sentinel[0]["bytes"] is None and sentinel[0]["w"] == 0
-    out = [r for r in out if r["video_id"] != "v_corrupt"]
-    assert len(out) == 3 * 3  # indices 0, 4, 8 per video
-    for r in out:
-        assert r["frame_idx"] in (0, 4, 8) and (r["w"], r["h"]) == (8, 8)
-        want = frames_by_vid[r["video_id"]][r["frame_idx"]]
-        assert np.array_equal(I.decode(bytes(r["bytes"]), "png"), want)
-
-
-def test_extract_audio_features_real(spark):
-    """Audio features are real (r2): a pure 440 Hz sine must read back
-    its closed-form RMS, zero-crossing count, and spectral centroid."""
-    import pandas as pd
-
-    from gtfs_to_geojson_spark.operators import multimodal
-
-    sr, f0, amp, dur = 8000, 440.0, 0.5, 2.0
-    t = np.arange(int(sr * dur)) / sr
-    rows = [
-        ("sine", I.encode_wav(amp * np.sin(2 * np.pi * f0 * t), sr)),
-        ("silence", I.encode_wav(np.zeros(sr), sr)),
-        # corrupt mid-batch: all-null feature row, job survives
-        ("corrupt", I.encode_wav(np.zeros(sr), sr)[:20]),
-    ]
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["audio_id", "bytes"]),
-        schema="audio_id string, bytes binary",
-    )
-    out = {r["audio_id"]: r for r in multimodal.extract_audio_features(df).collect()}
-    s = out["sine"]
-    assert abs(s["duration_s"] - dur) < 1e-9
-    assert abs(s["rms"] - amp / np.sqrt(2)) < 1e-3
-    assert abs(s["zero_crossings"] - 2 * f0 * dur) <= 2
-    assert abs(s["spectral_centroid_hz"] - f0) < 5.0
-    z = out["silence"]
-    assert z["rms"] == 0.0 and z["spectral_centroid_hz"] == 0.0
-    c = out["corrupt"]
-    assert c["duration_s"] is None and c["rms"] is None
-
-
 def test_phash_near_pairs_from_real_pixels(spark):
     """phash_near_pairs over phashes computed from actual pixels
     (images.phash64), not synthetic bit math: 8 base images whose 8×8

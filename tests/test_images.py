@@ -77,11 +77,11 @@ def test_bottom_up_and_padded_bmp():
 
 
 def test_unknown_format_raises():
-    # jpeg graduated from this list in r3 (from-scratch jfif codec)
-    with pytest.raises(NotImplementedError):
-        I.encode(np.zeros((4, 4, 3), np.uint8), "webp")
-    with pytest.raises(NotImplementedError):
-        I.decode(b"RIFF....WEBP", "webp")
+    for fmt, data in (("webp", b"RIFF....WEBP"), ("jpeg", b"\xff\xd8\xff\xe0")):
+        with pytest.raises(NotImplementedError):
+            I.encode(np.zeros((4, 4, 3), np.uint8), fmt)
+        with pytest.raises(NotImplementedError):
+            I.decode(data, fmt)
 
 
 def test_phash_properties():
@@ -175,32 +175,40 @@ def test_decode_tile_assign_verifies_lossy(spark):
         schema="image_id string, bytes binary, w int, h int, fmt string, caption string, phash long",
     )
     out = multimodal.decode_tile_assign(df, res=12).toPandas()
-    # every row verifies: lossless by hash equality, lossy by PSNR>=40
+    # every row verifies: lossless by hash equality, lossy within
+    # LOSSY_PHASH_MAX_BITS of the stored hash; pixel stats use the same rule
     assert out["phash_match"].all()
+    assert multimodal.decode_pixel_stats(df).toPandas()["phash_match"].all()
     # caption equality invariant carried through untouched
     assert sorted(out["caption"]) == sorted(f"cap {i}" for i in range(12))
 
 
-@pytest.mark.parametrize("ss,dri,hw", [
-    ("444", 1, (24, 24)),
-    ("422", 2, (50, 46)),
-    ("420", 5, (17, 9)),
-    ("420", 2, (8, 8)),
-    ("444", 1, (1, 1)),
-])
-def test_jfif_progressive_baseline_equivalence_matrix(ss, dri, hw):
-    """Progressive and baseline share one quantized-coefficient
-    pipeline, so their decodes must be bit-identical under every
-    combination of subsampling, restart interval and awkward dims
-    (non-MCU-aligned, single-block, single-pixel)."""
-    rng = np.random.default_rng(hash((ss, dri, hw)) % 2**31)
-    px = np.clip(rng.normal(128, 40, hw + (3,)), 0, 255).astype(np.uint8)
-    want = I.decode_jfif(I.encode_jfif(px, 90, ss))
-    for progressive in (False, True):
-        got = I.decode_jfif(
-            I.encode_jfif(px, 90, ss, restart_interval=dri,
-                          progressive=progressive))
-        assert np.array_equal(got, want), (ss, dri, hw, progressive)
+def test_decode_tile_assign_rejects_swapped_lossy_bytes(spark):
+    """A lossy row verifies against its *stored* hash: dctq bytes of
+    image A stored with the phash of image B must not pass. Noise
+    images, because a 64-bit average hash cannot tell two smooth
+    images apart."""
+    import pandas as pd
+
+    from gtfs_to_geojson_spark.operators import multimodal
+
+    rng = np.random.default_rng(11)
+    imgs = [rng.integers(0, 256, (s, s, 3), dtype=np.uint8)
+            for s in (16, 64) for _ in range(6)]
+    rows = []
+    for i, px in enumerate(imgs):
+        data = I.encode(px, "dctq")
+        other = imgs[(i + 1) % len(imgs)]
+        h, w = px.shape[:2]
+        rows.append((f"true_{i}", data, w, h, "dctq", "c", I.phash64(px)))
+        rows.append((f"swap_{i}", data, w, h, "dctq", "c", I.phash64(other)))
+    df = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]),
+        schema="image_id string, bytes binary, w int, h int, fmt string, caption string, phash long",
+    )
+    out = multimodal.decode_tile_assign(df, res=12).toPandas().set_index("image_id")
+    assert out.loc[[f"true_{i}" for i in range(len(imgs))], "phash_match"].all()
+    assert not out.loc[[f"swap_{i}" for i in range(len(imgs))], "phash_match"].any()
 
 
 def test_decode_error_normalization():
@@ -208,7 +216,7 @@ def test_decode_error_normalization():
     auditable error type at the ingest boundary), never a raw
     IndexError/KeyError/struct.error from codec internals."""
     px = np.full((16, 16, 3), 128, np.uint8)
-    for fmt in ("jfif", "png", "bmp", "ppm", "dctq"):
+    for fmt in ("png", "bmp", "ppm", "dctq"):
         good = I.encode(px, fmt)
         for cut in (len(good) // 3, len(good) // 2, len(good) - 5):
             try:
@@ -219,93 +227,73 @@ def test_decode_error_normalization():
                 pass  # acceptable: truncation landed on a feature gate
             # a clean decode of a truncated stream is fine for formats
             # whose payload is over-complete (e.g. trailing padding)
-    # stripped Huffman tables (KeyError internally) -> ValueError
-    good = I.encode_jfif(px, 92)
-    i = good.find(b"\xff\xc4")
-    import struct as _s
-    ln = _s.unpack(">H", good[i + 2:i + 4])[0]
-    with pytest.raises(ValueError, match="corrupt or truncated"):
-        I.decode(good[:i] + good[i + 2 + ln:], "jfif")
+    # a ppm comment that runs to the end of the bytes raises, not loops
+    with pytest.raises(ValueError):
+        I.decode(b"P6\n16 16\n#55\n#" + bytes(10), "ppm")
 
 
 def test_decode_header_validation():
-    """Corrupt header fields that previously escaped the ValueError
-    normalization (review r3): unknown SOS component selector
-    (StopIteration), CMYK component counts (TypeError at color
-    conversion), zero/huge frame dims (executor-killing np.zeros),
-    out-of-range sampling factors."""
-    px = np.full((16, 16, 3), 128, np.uint8)
-    good = bytearray(I.encode_jfif(px, 92))
-    sof = good.index(b"\xff\xc0")
-    sos = good.index(b"\xff\xda")
+    """Corrupt dctq header fields raise ValueError before any pixel
+    buffer is allocated: zero, negative and oversized dims, dims that
+    disagree with the payload length, and a non-finite or zero
+    quantization step."""
+    import struct
 
-    def mutated(at, val):
-        m = bytearray(good)
-        m[at] = val
-        return bytes(m)
+    good = I.encode(np.full((16, 16, 3), 128, np.uint8), "dctq")
 
-    # SOS first component selector -> unknown id
-    with pytest.raises(ValueError, match="unknown component"):
-        I.decode(mutated(sos + 5, 0x77), "jfif")
-    # SOF ncomp=4 (CMYK-shaped) -> auditable NotImplementedError
-    with pytest.raises(NotImplementedError, match="4-component"):
-        I.decode(mutated(sof + 9, 4), "jfif")
-    # SOF height=0
-    m = bytearray(good); m[sof + 5] = 0; m[sof + 6] = 0
-    with pytest.raises(ValueError, match="zero frame"):
-        I.decode(bytes(m), "jfif")
-    # SOF dims past the pixel cap must NOT attempt the allocation
-    m = bytearray(good)
-    m[sof + 5] = m[sof + 6] = m[sof + 7] = m[sof + 8] = 0xFF
-    with pytest.raises(ValueError, match="pixel cap"):
-        I.decode(bytes(m), "jfif")
-    # sampling factor 0 (corrupt nibble)
-    with pytest.raises(ValueError, match="sampling factor"):
-        I.decode(mutated(sof + 11, 0x01 * 16 + 0), "jfif")
+    def with_header(h, w, q=I.DCTQ_Q):
+        return good[:3] + struct.pack("<iid", h, w, q) + good[19:]
 
-    # WAV: zeroed sample-rate bytes -> ValueError, not ZeroDivisionError
-    wav = bytearray(I.encode_wav(np.zeros(100), 8000))
-    srt = wav.index((8000).to_bytes(4, "little"))
-    wav[srt:srt + 4] = b"\x00\x00\x00\x00"
-    with pytest.raises(ValueError, match="sample rate"):
-        I.decode_wav(bytes(wav))
+    assert I.decode(with_header(16, 16), "dctq").shape == (16, 16, 3)
+    for h, w, q in [
+        (0, 16, I.DCTQ_Q), (16, 0, I.DCTQ_Q),                 # zero
+        (-16, 16, I.DCTQ_Q), (16, -1, I.DCTQ_Q),              # negative
+        (0x7F000010, 16, I.DCTQ_Q), (16, 0x7FFFFFFF, I.DCTQ_Q),  # oversized
+        (24, 16, I.DCTQ_Q), (16, 8, I.DCTQ_Q),                # dims/payload
+        (16, 16, 0.0), (16, 16, float("nan")), (16, 16, float("inf")),
+    ]:
+        with pytest.raises(ValueError, match="dctq"):
+            I.decode(with_header(h, w, q), "dctq")
 
 
 def test_decode_fuzz_single_byte_corruption():
     """Every single-byte corruption of a valid stream must either
     decode (harmless bit flip) or raise exactly ValueError /
     NotImplementedError — never IndexError/KeyError/struct.error/
-    RuntimeError/MemoryError. Seeded, deterministic."""
+    RuntimeError/MemoryError. Every dctq header byte is also set to
+    0x7F and 0xFF (a dim byte at 0x7F must not size a ~95 GiB array).
+    Seeded, deterministic."""
     px = np.clip(
         np.random.default_rng(2).normal(128, 40, (16, 16, 3)), 0, 255
     ).astype(np.uint8)
     rng = np.random.default_rng(42)
-    for progressive in (False, True):
-        good = I.encode_jfif(px, 90, "420", restart_interval=2,
-                             progressive=progressive)
-        for _ in range(150):
-            at = int(rng.integers(2, len(good)))
-            val = int(rng.integers(0, 256))
+
+    def survives(data, fmt):
+        try:
+            assert I.decode(data, fmt).dtype == np.uint8
+        except (ValueError, NotImplementedError):
+            pass
+
+    for fmt in ("png", "bmp", "ppm", "dctq"):
+        good = I.encode(px, fmt)
+        mutations = [(int(rng.integers(0, len(good))), int(rng.integers(0, 256)))
+                     for _ in range(150)]
+        if fmt == "dctq":
+            mutations += [(at, val) for at in range(19) for val in (0x7F, 0xFF)]
+        for at, val in mutations:
             m = bytearray(good)
             m[at] = val
-            try:
-                out = I.decode(bytes(m), "jfif")
-                assert out.dtype == np.uint8
-            except (ValueError, NotImplementedError):
-                pass
-        # truncations at every tenth byte
-        for cut in range(2, len(good), max(1, len(good) // 40)):
-            try:
-                I.decode(good[:cut], "jfif")
-            except (ValueError, NotImplementedError):
-                pass
+            survives(bytes(m), fmt)
+        # truncations at every fortieth of the stream
+        for cut in range(0, len(good), max(1, len(good) // 40)):
+            survives(good[:cut], fmt)
 
 
 def test_kernels_survive_corrupt_rows(spark):
     """One bad byte range must not kill the job: every image kernel
-    turns corrupt rows into auditable output (decoded=false /
-    phash_match=false / null bytes / excluded) and processes the rest
-    of the batch normally."""
+    turns corrupt rows and formats without a codec into auditable
+    output (decoded=false / phash_match=false / null bytes / excluded)
+    and processes the rest of the batch normally."""
     import pandas as pd
 
     from gtfs_to_geojson_spark.operators import multimodal
@@ -314,25 +302,27 @@ def test_kernels_survive_corrupt_rows(spark):
     rows = []
     for i in range(8):
         px = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
-        fmt = ("png", "dctq", "jfif", "bmp")[i % 4]
+        fmt = ("png", "dctq", "ppm", "bmp")[i % 4]
         data = I.encode(px, fmt)
         if i in (2, 5):  # corrupt: truncate mid-stream
             data = data[: len(data) // 2]
         rows.append(
             (f"im_{i:03d}", data, 16, 16, fmt, f"cap {i}", I.phash64(px))
         )
+    # a format with no codec here: the same auditable path as corrupt bytes
+    rows.append(("im_008", b"\xff\xd8\xff\xe0" + bytes(60), 16, 16, "jpeg", "cap 8", 0))
     df = spark.createDataFrame(
         pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]),
         schema="image_id string, bytes binary, w int, h int, fmt string, caption string, phash long",
     )
-    bad = {"im_002", "im_005"}
+    bad = {"im_002", "im_005", "im_008"}
 
     stats = multimodal.decode_pixel_stats(df).toPandas().set_index("image_id")
     assert set(stats.index[~stats["decoded"]]) == bad
     assert stats.loc[~stats.index.isin(bad), "decoded"].all()
 
     tiles = multimodal.decode_tile_assign(df, res=12).toPandas().set_index("image_id")
-    assert len(tiles) == 8  # corrupt rows kept (tile from stored phash)
+    assert len(tiles) == 9  # corrupt rows kept (tile from stored phash)
     assert set(tiles.index[~tiles["phash_match"]]) == bad
 
     rs = multimodal.resize_images(df, 8, 8).toPandas().set_index("image_id")
@@ -376,418 +366,3 @@ def test_image_near_dup_across_formats(spark):
     pairs = multimodal.image_near_dup_pairs(df, threshold=0.98).toPandas()
     got = {tuple(sorted(p)) for p in zip(pairs["id_a"], pairs["id_b"])}
     assert got == {("dup_1", "orig_1"), ("dup_4", "orig_4")}
-
-
-# ---------------------------------------------------------------------------
-# GVID video container + WAV codec (r2: the former stubs are now real)
-# ---------------------------------------------------------------------------
-
-
-def test_gvid_roundtrip_and_seek():
-    rng = np.random.default_rng(4)
-    frames = [rng.integers(0, 256, (12, 10, 3), dtype=np.uint8) for _ in range(7)]
-    for fmt in ("png", "ppm", "bmp"):
-        v = I.encode_video(frames, fmt)
-        n, w, h, f2, offs = I.video_info(v)
-        assert (n, w, h, f2) == (7, 10, 12, fmt)
-        for i, f in enumerate(frames):
-            assert np.array_equal(I.decode_video_frame(v, i), f)
-    # lossy fmt: PSNR gate instead of exactness
-    v = I.encode_video(frames, "dctq")
-    for i, f in enumerate(frames):
-        assert I.psnr(I.decode_video_frame(v, i), f) >= 40.0
-
-
-def test_wav_roundtrip_mono_stereo():
-    sr = 8000
-    t = np.arange(sr) / sr
-    mono = 0.5 * np.sin(2 * np.pi * 440 * t)
-    s, sr2 = I.decode_wav(I.encode_wav(mono, sr))
-    assert sr2 == sr and s.shape == (sr, 1)
-    assert np.abs(s[:, 0] - mono).max() < 1e-3
-    stereo = np.stack([mono, -mono], axis=1)
-    s2, _ = I.decode_wav(I.encode_wav(stereo, sr))
-    assert s2.shape == (sr, 2)
-    assert np.abs(s2[:, 1] + mono).max() < 1e-3
-
-
-# ---------------------------------------------------------------------------
-# jfif — from-scratch baseline JPEG (r3: former NotImplementedError seam)
-# ---------------------------------------------------------------------------
-
-
-def _smooth_fixture(h, w, seed=0):
-    """Natural-image-like fixture: gradients + sinusoid + mild noise."""
-    yy, xx = np.mgrid[0:h, 0:w].astype(np.float64)
-    r = 128 + 90 * np.sin(xx / 13.0) * np.cos(yy / 17.0)
-    g = 255.0 * yy / max(h - 1, 1)
-    b = 255.0 * xx / max(w - 1, 1)
-    n = np.random.default_rng(seed).normal(0, 3, (h, w, 3))
-    return np.clip(np.round(np.stack([r, g, b], -1) + n), 0, 255).astype(np.uint8)
-
-
-def _noisy_fixture(h, w, seed=0):
-    """Busier fixture (stronger noise): populates high-frequency AC
-    coefficients so progressive spectral bands / refinement passes all
-    carry real data."""
-    px = _smooth_fixture(h, w, seed).astype(np.float64)
-    n = np.random.default_rng(seed + 1000).normal(0, 12, (h, w, 3))
-    return np.clip(np.round(px + n), 0, 255).astype(np.uint8)
-
-
-def test_jfif_roundtrip_psnr_gate():
-    """Input-hint lossy contract: decoded-pixel PSNR >= 40 dB (at a
-    quality where the bitstream still quantizes — not bit-exact)."""
-    for (h, w) in [(64, 64), (33, 29), (16, 24), (8, 8)]:
-        px = _smooth_fixture(h, w)
-        data = I.encode_jfif(px, quality=97, subsample="444")
-        assert data == I.encode_jfif(px, quality=97, subsample="444")
-        assert data[:2] == b"\xff\xd8" and data[-2:] == b"\xff\xd9"
-        back = I.decode_jfif(data)
-        assert back.shape == px.shape
-        assert I.psnr(px, back) >= 40.0, (h, w)
-    assert not np.array_equal(px, I.decode_jfif(I.encode_jfif(px, quality=97)))
-
-
-def test_jfif_chroma_subsampling_modes():
-    px = _smooth_fixture(64, 48)
-    sizes = {}
-    for ss in ("444", "422", "420"):
-        data = I.encode_jfif(px, quality=92, subsample=ss)
-        back = I.decode_jfif(data)
-        assert back.shape == px.shape
-        assert I.psnr(px, back) >= 30.0, ss
-        sizes[ss] = len(data)
-    # subsampling must actually shrink the stream
-    assert sizes["420"] < sizes["422"] < sizes["444"]
-
-
-def test_jfif_restart_intervals_identical_pixels():
-    """DRI only changes entropy framing: decoded pixels must be
-    byte-identical with and without restart markers."""
-    px = _smooth_fixture(48, 40, seed=5)
-    plain = I.decode_jfif(I.encode_jfif(px, quality=90, subsample="420"))
-    rst = I.encode_jfif(px, quality=90, subsample="420", restart_interval=2)
-    assert b"\xff\xd0" in rst  # RST0 actually emitted
-    assert np.array_equal(I.decode_jfif(rst), plain)
-
-
-def test_jfif_dispatch_aliases_and_lossy_contract():
-    px = _smooth_fixture(32, 32)
-    for fmt in ("jfif", "jpeg", "jpg"):
-        assert fmt in I.LOSSY_FORMATS
-        back = I.decode(I.encode(px, fmt), fmt)
-        assert back.shape == px.shape
-    # decode_tile_assign's lossy verification path: the codec roundtrip
-    # of ALREADY-DECODED pixels is near-idempotent, so it clears 40 dB
-    dec = I.decode(I.encode(px, "jfif"), "jfif")
-    again = I.decode(I.encode(dec, "jfif"), "jfif")
-    assert I.psnr(dec, again) >= 40.0
-
-
-def test_jfif_grayscale_single_component_decode():
-    """Decoder generality: a 1-component stream our encoder never
-    emits — hand-assembled from the module's own primitives."""
-    import struct as _s
-
-    gray = np.clip(
-        np.add.outer(np.arange(16) * 8.0, np.arange(16) * 6.0), 0, 255
-    )
-    qy = I._jpeg_qtab(I._JQ_LUMA, 95)
-    bw = I._JBitWriter()
-    dc_tab = I._huff_encode_table(*I._JH_DC_LUMA)
-    ac_tab = I._huff_encode_table(*I._JH_AC_LUMA)
-    pred = 0
-    for by in range(2):
-        for bx in range(2):
-            block = gray[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8]
-            coefs = I._DCT8 @ (block - 128.0) @ I._DCT8.T
-            zz = np.round(coefs / qy).astype(np.int64).ravel()[I._JZZ]
-            pred = I._jencode_block(bw, zz, dc_tab, ac_tab, pred)
-    bw.byte_align()
-
-    def seg(marker, payload):
-        return bytes([0xFF, marker]) + _s.pack(">H", len(payload) + 2) + payload
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0]) + bytes(int(qy.ravel()[I._JZZ[k]]) for k in range(64)))
-    out += seg(0xC0, bytes([8]) + _s.pack(">HH", 16, 16) + bytes([1, 1, 0x11, 0]))
-    bits, vals = I._JH_DC_LUMA
-    out += seg(0xC4, bytes([0x00]) + bytes(bits) + bytes(vals))
-    bits, vals = I._JH_AC_LUMA
-    out += seg(0xC4, bytes([0x10]) + bytes(bits) + bytes(vals))
-    out += seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    out += bw.out + b"\xff\xd9"
-
-    back = I.decode_jfif(bytes(out))
-    assert back.shape == (16, 16, 3)
-    # grayscale replicated across channels; quantization-close to source
-    assert np.array_equal(back[:, :, 0], back[:, :, 1])
-    assert I.psnr(np.stack([gray] * 3, -1).astype(np.uint8), back) >= 40.0
-
-
-def test_jfif_lane_decoder_max_magnitude_category():
-    """s == 15 magnitudes (T.81 maximum) through the lane decoder:
-    the packed LUT is int16, so an un-widened ``1 << s`` overflows and
-    silently skips EXTEND for m < 16384 (r4 review finding — lanes
-    would emit +m instead of m − 32767 with no fallback). Our encoder
-    never emits s > 11 for 8-bit samples, so the stream is assembled
-    by hand: a DC table carrying categories 0..15, one block per
-    restart interval (16 intervals engages the lane path)."""
-    import struct as _s
-
-    # DC magnitudes covering both EXTEND branches at s in {13,14,15}
-    dcs = [0, -32767, 16384, 32767, -16384, -8192, 8191, -100,
-           100, 3, -3, 0, 1, -1, 5000, -5000]
-    dc_bits = [0] * 16
-    dc_bits[4] = 16  # 16 canonical codes of length 5: symbols 0..15
-    dc_vals = list(range(16))
-    dc_tab = I._huff_encode_table(dc_bits, dc_vals)
-    ac_tab = I._huff_encode_table(*I._JH_AC_LUMA)
-
-    chunks = []
-    for dc in dcs:
-        bw = I._JBitWriter()
-        zz = np.zeros(64, dtype=np.int64)
-        zz[0] = dc
-        I._jencode_block(bw, zz, dc_tab, ac_tab, 0)  # pred resets per RST
-        bw.byte_align()
-        chunks.append(bytes(bw.out))
-    entropy = b"".join(
-        c + (bytes([0xFF, 0xD0 + i % 8]) if i < len(dcs) - 1 else b"")
-        for i, c in enumerate(chunks)
-    )
-
-    def seg(marker, payload):
-        return bytes([0xFF, marker]) + _s.pack(">H", len(payload) + 2) + payload
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0]) + bytes([1] * 64))  # flat quant = 1
-    out += seg(0xC0, bytes([8]) + _s.pack(">HH", 8, 128) + bytes([1, 1, 0x11, 0]))
-    out += seg(0xC4, bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals))
-    bits, vals = I._JH_AC_LUMA
-    out += seg(0xC4, bytes([0x10]) + bytes(bits) + bytes(vals))
-    out += seg(0xDD, _s.pack(">H", 1))  # DRI = 1 MCU per interval
-    out += seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    out += entropy + b"\xff\xd9"
-    data = bytes(out)
-
-    lanes_fn = I._jdecode_scan_seq_lanes
-    engaged = [0]
-
-    def counting(*args):
-        r = lanes_fn(*args)
-        if r is not None:
-            engaged[0] += 1
-        return r
-
-    try:
-        I._jdecode_scan_seq_lanes = counting
-        a = I.decode_jfif(data)
-        assert engaged[0] == 1  # the lane path actually ran
-        I._jdecode_scan_seq_lanes = lambda *ar: None  # force scalar
-        b = I.decode_jfif(data)
-    finally:
-        I._jdecode_scan_seq_lanes = lanes_fn
-    assert np.array_equal(a, b)
-    # saturated blocks pin the EXTEND sign explicitly (DC-only block
-    # decodes to a constant dc/8 + 128, clipped): dc=-32767 -> black,
-    # dc=+16384 -> white; the buggy lane path flipped block 1 to gray
-    # (EXTEND skipped: coefficient 0) and block 4 to white (+16383)
-    assert (a[:, 8:16] == 0).all()      # dc -32767 (s=15, m=0)
-    assert (a[:, 16:24] == 255).all()   # dc +16384 (s=15, no EXTEND)
-    assert (a[:, 32:40] == 0).all()     # dc -16384 (s=15, EXTEND)
-    assert (a[:, 40:48] == 0).all()     # dc -8192  (s=14, EXTEND)
-
-
-def test_jfif_fill_bytes_before_markers():
-    """T.81 B.1.1.2: any number of 0xFF fill bytes may precede a
-    marker; a conformant decoder must skip them (r3 review finding)."""
-    px = _smooth_fixture(24, 24, seed=3)
-    data = I.encode_jfif(px, quality=92)
-    want = I.decode_jfif(data)
-    padded = bytearray(data)
-    # pad every header marker our encoder emits: DQT, SOF0, DHT, SOS
-    for marker in (b"\xff\xdb", b"\xff\xc0", b"\xff\xc4", b"\xff\xda"):
-        idx = padded.find(marker)
-        padded[idx:idx] = b"\xff" * 3
-    assert np.array_equal(I.decode_jfif(bytes(padded)), want)
-
-
-def test_jfif_non_integer_sampling_rejected():
-    """Legal-but-unsupported fractional chroma ratios (e.g. Y=3x1 vs
-    Cb=2x1) must raise NotImplementedError instead of silently
-    mis-scaling the chroma planes (r3 review finding)."""
-    px = _smooth_fixture(16, 16)
-    data = bytearray(I.encode_jfif(px, quality=92, subsample="444"))
-    idx = data.find(b"\xff\xc0")
-    data[idx + 11] = 0x31  # Y:  h=3, v=1
-    data[idx + 14] = 0x21  # Cb: h=2, v=1 -> hmax % h = 3 % 2 != 0
-    with pytest.raises(NotImplementedError, match="sampling"):
-        I.decode_jfif(bytes(data))
-
-
-def test_jfif_arithmetic_and_junk_rejected():
-    px = _smooth_fixture(16, 16)
-    data = bytearray(I.encode_jfif(px))
-    idx = data.find(b"\xff\xc0")
-    # SOF9 (arithmetic-coded sequential) stays a documented seam
-    data[idx + 1] = 0xC9
-    with pytest.raises(NotImplementedError, match="arithmetic"):
-        I.decode_jfif(bytes(data))
-    # SOF2 with a baseline full-band scan header is malformed progressive
-    data[idx + 1] = 0xC2
-    with pytest.raises(ValueError, match="Se=0"):
-        I.decode_jfif(bytes(data))
-    with pytest.raises(ValueError):
-        I.decode_jfif(b"not a jpeg")
-
-
-def test_jfif_progressive_matches_baseline_exactly():
-    """Fully-refined progressive coefficients are the baseline
-    coefficients, so the decoded pixels must be BIT-identical per
-    subsampling mode. 50x46 forces padded MCU grids that are wider
-    than the single-component scan grids (420 luma: 8 vs 7 block
-    columns), exercising the two traversal geometries."""
-    px = _noisy_fixture(50, 46, seed=11)
-    for ss in ("444", "422", "420"):
-        base = I.decode_jfif(I.encode_jfif(px, quality=92, subsample=ss))
-        prog = I.decode_jfif(
-            I.encode_jfif(px, quality=92, subsample=ss, progressive=True))
-        assert np.array_equal(base, prog), ss
-
-
-def test_jfif_progressive_truncation_refines():
-    """A progressive stream cut at any scan boundary (early EOI) must
-    still decode, at monotonically non-degrading quality — the property
-    progressive JPEG exists for."""
-    px = _noisy_fixture(50, 46, seed=11)
-    spans = []
-    data = I.encode_jfif(px, quality=92, subsample="420",
-                         progressive=True, _scan_spans=spans)
-    assert len(spans) == 10  # libjpeg standard script
-    psnrs = []
-    for cut in spans:
-        dec = I.decode_jfif(data[:cut] + b"\xff\xd9")
-        assert dec.shape == px.shape
-        psnrs.append(I.psnr(px, dec))
-    # DC-only pass is already a recognizable image
-    assert psnrs[0] > 15.0
-    # each added scan refines (tiny float slack for DC-refine rounding)
-    assert all(b >= a - 0.05 for a, b in zip(psnrs, psnrs[1:]))
-    # the fully-refined stream equals the untruncated decode
-    assert np.array_equal(I.decode_jfif(data[:spans[-1]] + b"\xff\xd9"),
-                          I.decode_jfif(data))
-
-
-def test_jfif_progressive_restart_intervals_identical_pixels():
-    px = _noisy_fixture(34, 30, seed=5)
-    plain = I.decode_jfif(I.encode_jfif(px, quality=90, subsample="420",
-                                        progressive=True))
-    rst = I.encode_jfif(px, quality=90, subsample="420",
-                        progressive=True, restart_interval=2)
-    assert rst.count(b"\xff\xd0") >= 1  # RST0 actually emitted
-    assert np.array_equal(I.decode_jfif(rst), plain)
-
-
-def test_jfif_progressive_sparse_runs_exact():
-    """Adversarial coefficient layout: a near-flat image with isolated
-    bright dots makes AC bands almost all zero → long EOB runs spanning
-    many blocks (EOBRUN>1 + appended-bit encoding), ZRL symbols inside
-    refinement passes, and buffered correction bits attached to EOB
-    flushes. Any bitstream desync on those paths garbles every later
-    coefficient, so bit-exact equality with the baseline decode is a
-    strong probe."""
-    h, w = 64, 64
-    px = np.full((h, w, 3), 128, dtype=np.uint8)
-    # isolated dots, several blocks apart (long inter-block EOB runs);
-    # in-block position 7,7 maximizes the leading zero run (ZRL paths)
-    for by, bx in [(0, 0), (3, 5), (7, 2), (5, 7)]:
-        px[by * 8 + 7, bx * 8 + 7] = (255, 0, 255)
-        px[by * 8 + 3, bx * 8 + 6] = (0, 255, 30)
-    # one pure-AC(0,1) cosine block: a single strong coefficient and no
-    # ±1 ringing, so at refinement passes the whole block folds into an
-    # EOB run WITH buffered correction bits (the pending-bits path)
-    cos_row = 128 + 60 * np.cos(np.pi * (2 * np.arange(8) + 1) / 16.0)
-    blk = np.clip(np.round(np.tile(cos_row, (8, 1))), 0, 255).astype(np.uint8)
-    px[16:24, 32:40] = blk[:, :, None]
-
-    # instrument the scan encoder to prove the paths actually fire —
-    # a vacuously-passing equality test would be worse than none
-    hits = {"eobrun_gt1": 0, "pending_bits": 0, "zrl": 0}
-    orig_flush = I._JProgACEnc.flush_eobrun
-    orig_sym = I._JProgACEnc._sym
-
-    def flush(self):
-        if self.eobrun > 1:
-            hits["eobrun_gt1"] += 1
-        hits["pending_bits"] += len(self.pending)
-        orig_flush(self)
-
-    def sym(self, rs):
-        if rs == 0xF0:
-            hits["zrl"] += 1
-        orig_sym(self, rs)
-
-    I._JProgACEnc.flush_eobrun = flush
-    I._JProgACEnc._sym = sym
-    try:
-        for q in (75, 92, 97):
-            base = I.decode_jfif(I.encode_jfif(px, quality=q, subsample="420"))
-            prog = I.decode_jfif(
-                I.encode_jfif(px, quality=q, subsample="420", progressive=True))
-            assert np.array_equal(base, prog), q
-    finally:
-        I._JProgACEnc.flush_eobrun = orig_flush
-        I._JProgACEnc._sym = orig_sym
-    assert hits["eobrun_gt1"] > 0      # appended-bit EOBn symbols
-    assert hits["pending_bits"] > 0    # corrections flushed inside EOB runs
-    assert hits["zrl"] > 0             # ZRL symbols (incl. refinement)
-
-
-def test_jfif_progressive_roundtrip_psnr_gate():
-    """The lossy-format contract (BASELINE.json input_hint): PSNR>=40dB
-    at high quality, for the progressive path too."""
-    px = _smooth_fixture(48, 40, seed=9)
-    data = I.encode_jfif(px, quality=97, progressive=True)
-    assert I.psnr(px, I.decode_jfif(data)) >= 40.0
-    # alias dispatch decodes progressive bytes transparently
-    assert np.array_equal(I.decode(data, "jpeg"), I.decode_jfif(data))
-
-
-def test_jfif_lane_decoder_matches_scalar():
-    """The restart-interval-parallel lane decoder (r4) must be
-    bit-exact against the inlined scalar path on every subsampling
-    mode, and must actually ENGAGE (it needs >=8 intervals, which the
-    other jfif tests' tiny fixtures never produce)."""
-    rng = np.random.default_rng(11)
-    y, x = np.mgrid[0:128, 0:128]
-    px = np.stack(
-        [(x + y) % 256, (2 * x) % 256, (3 * y) % 256], axis=-1
-    ).astype(np.uint8)
-    px = np.clip(
-        px.astype(np.int16) + rng.integers(-9, 9, px.shape), 0, 255
-    ).astype(np.uint8)
-    lanes_fn = I._jdecode_scan_seq_lanes
-    engaged = [0]
-
-    def counting(*args):
-        out = lanes_fn(*args)
-        if out is not None:
-            engaged[0] += 1
-        return out
-
-    for ss in ("444", "422", "420"):
-        for dri in (2, 4):
-            data = I.encode_jfif(px, quality=88, subsample=ss,
-                                 restart_interval=dri)
-            try:
-                I._jdecode_scan_seq_lanes = counting
-                engaged[0] = 0
-                a = I.decode_jfif(data)
-                assert engaged[0] == 1, (ss, dri)  # lane path ran
-                I._jdecode_scan_seq_lanes = lambda *ar: None  # force scalar
-                b = I.decode_jfif(data)
-            finally:
-                I._jdecode_scan_seq_lanes = lanes_fn
-            assert np.array_equal(a, b), (ss, dri)

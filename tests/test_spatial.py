@@ -268,19 +268,6 @@ def test_resize_roundtrip(images_df):
         assert px.shape == (8, 8, 3)
 
 
-def test_multimodal_junk_video_bytes_flagged(spark):
-    """r1 asserted junk bytes CRASH the job; since the corrupt-byte
-    hardening they must instead surface as the auditable frame_idx=-1
-    sentinel row (one bad row can't kill a 100-TB job)."""
-    vids = spark.createDataFrame(
-        pd.DataFrame({"video_id": ["v1"], "bytes": [b"xx"]}),
-        schema="video_id string, bytes binary",
-    )
-    out = multimodal.sample_video_frames(vids).collect()
-    assert len(out) == 1
-    assert out[0]["frame_idx"] == -1 and out[0]["bytes"] is None
-
-
 def test_skew_histogram_and_salt(spark, images_df):
     """skew.hot_keys is the tile histogram cut to the hot tiles; the
     fixture's engineered skew makes the hottest tile hot."""
