@@ -341,11 +341,12 @@ def main():
             ).count(),
             best_of=reps,
         )
-        # j8c: the ring (large-target) strategy in ITS regime — 4M
-        # targets, past the grid ceiling, where the auto-selector
-        # actually uses it (r1 benched ring at 200k targets, but that
-        # size now routes to the grid strategy — BENCH/KNN_REGIMES.md).
-        # res=None derives the grid from target density.
+        # j8c: the large-target regime — 4M targets, past the grid's
+        # target-replication ceiling, so auto takes the grid with the
+        # POINTS replicated into the 3×3 neighbourhood. The row keeps
+        # the name it had when the ring search served this regime, so
+        # it lines up with earlier tables. res=None derives the grid
+        # from target density.
         def ring_targets_cache() -> str:
             path = "/tmp/spark_graft_bench_ringtgt_4m.parquet"
             if os.path.exists(path):
@@ -364,11 +365,11 @@ def main():
         def j8c_ring():
             pts = li_points_1x()
             tgt = spark.read.parquet(ring_targets_cache())
-            return spatial.knn_join(pts, tgt, res=None, k=1, strategy="ring").count()
+            return spatial.knn_join(pts, tgt, res=None, k=1, strategy="auto").count()
 
         run("j8c_knn_ring_4m", j8c_ring, best_of=reps)
 
-        # j8d: the grid-cogroup (mid-regime) strategy in ITS regime —
+        # j8d: the grid-cogroup strategy with the targets replicated —
         # 1M targets, too big to broadcast, small enough to ×9-replicate.
         # Strategy-vs-strategy evidence lives in BENCH/KNN_REGIMES.md
         # (tools/knn_regime_bench.py); this row tracks the regime the

@@ -111,8 +111,8 @@ def children(cell: int, child_res: int) -> np.ndarray:
 def kring(cell: int, k: int = 1) -> np.ndarray:
     """All cells within Chebyshev distance k (incl. the cell itself).
 
-    Longitude wraps; latitude clamps at the poles. Used for kNN
-    ring-expansion (J8).
+    Longitude wraps; latitude clamps at the poles. The numpy twin of
+    the grid kNN's 3×3 neighbourhood (J8, k=1).
     """
     res, x, y = decode(np.asarray([cell]))
     r, x0, y0 = int(res[0]), int(x[0]), int(y[0])

@@ -65,7 +65,7 @@ monotone ``xy_col`` both sides (a point's cell always stays inside a
 nearby segment's padded cover — same argument as operators/overlap.py),
 but like the overlay joins this path does NOT wrap the antimeridian: a
 point and segment within ``max_dist`` across lon ±180° will not meet.
-The kNN ring paths (operators/spatial.py) wrap; use those semantics as
+The grid kNN (operators/spatial.py) wraps; use its 3×3 neighbourhood as
 the template if a dataset ever straddles ±180°.
 """
 

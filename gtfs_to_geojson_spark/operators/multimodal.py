@@ -23,7 +23,7 @@ from .. import images as img
 PIXEL_STATS_SCHEMA = (
     "image_id string, fmt string, w int, h int, decoded boolean, "
     "mean_r double, mean_g double, mean_b double, std_gray double, "
-    "phash_match boolean, psnr_roundtrip double"
+    "phash_match boolean"
 )
 
 
@@ -46,9 +46,8 @@ def _phash_verified(got: int, stored: int, fmt: str) -> bool:
 
 def decode_pixel_stats(images: DataFrame) -> DataFrame:
     """Decode every image and emit per-image pixel statistics plus the
-    two per-row invariants (BASELINE.json): ``phash_match`` (the
-    verification rule of decode_tile_assign), and round-trip PSNR (inf
-    for the lossless formats)."""
+    per-row invariant ``phash_match`` (the verification rule of
+    decode_tile_assign)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -63,25 +62,22 @@ def decode_pixel_stats(images: DataFrame) -> DataFrame:
                     # surface as an auditable decoded=false row — one
                     # bad byte range must not kill a 100-TB ingest job
                     rows.append((image_id, fmt, int(w), int(h), False,
-                                 None, None, None, None, None, None))
+                                 None, None, None, None, None))
                     continue
                 gray = 0.299 * px[:, :, 0] + 0.587 * px[:, :, 1] + 0.114 * px[:, :, 2]
-                roundtrip = img.decode(img.encode(px, fmt), fmt)
-                p = img.psnr(px, roundtrip)
                 rows.append(
                     (
                         image_id, fmt, int(w), int(h), True,
                         float(px[:, :, 0].mean()), float(px[:, :, 1].mean()),
                         float(px[:, :, 2].mean()), float(gray.std()),
                         _phash_verified(img.phash64(px), int(ph), fmt),
-                        float(p) if np.isfinite(p) else float("inf"),
                     )
                 )
             yield pd.DataFrame(
                 rows,
                 columns=[
                     "image_id", "fmt", "w", "h", "decoded", "mean_r", "mean_g",
-                    "mean_b", "std_gray", "phash_match", "psnr_roundtrip",
+                    "mean_b", "std_gray", "phash_match",
                 ],
             )
 

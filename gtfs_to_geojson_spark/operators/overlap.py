@@ -109,7 +109,7 @@ def envelope_intersect_join(
     lane-oblivious). The pre-count re-executes the left plan once (map
     + partial agg only) — feed a materialized/cached frame when the
     left side is an expensive derived plan (same guidance as
-    knn_join's auto probe).
+    knn_join's probe query).
 
     ``shuffle_hash=True`` (default) hints the right side into a
     shuffled hash join — measured 1.55× over the sort-merge default

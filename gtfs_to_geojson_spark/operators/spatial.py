@@ -15,6 +15,7 @@ lane — and AQE skew-join stays on as the runtime backstop (session.py).
 
 from __future__ import annotations
 
+import math
 from typing import Iterator
 
 import numpy as np
@@ -219,7 +220,7 @@ def point_in_polygon_join(
 
 
 # ---------------------------------------------------------------------------
-# J8 — kNN join via ring expansion + window top-k
+# J8 — exact kNN join: broadcast, or grid cogroup + in-plan brute-force tail
 # ---------------------------------------------------------------------------
 
 
@@ -232,35 +233,34 @@ KNN_BROADCAST_MAX_TARGETS = 100_000
 # ... but only while the total matmul work is modest: the broadcast
 # kernel's per-point cost scales with n_targets (every point is dotted
 # against the whole broadcast side), so its viability tracks the
-# PRODUCT n_points × n_targets, not either count alone. Measured
-# (BENCH/KNN_REGIMES.md + the r2/r3 scaling runs at 4.8M points ×
-# 1k targets): broadcast wins 1.4× at product 3.0e10 (600k × 50k),
-# wins 4-6× at 4.8e9 (4.8M × 1k — an absolute 1M-point cap first
-# tried in r3 wrongly routed this cell to grid, 26.4 s vs 6.0 s),
-# loses 4× at 1.2e11 (600k × 200k) and 2× at 3.0e11 (6M × 50k).
-# Log-linear crossover of the measured ratios ≈ 4e10.
+# PRODUCT n_points × n_targets, not either count alone. The cutoff
+# was derived against the old checkpointed grid (BENCH/KNN_REGIMES.md,
+# tables before 2026-10-19): broadcast won 1.4× at product 3.0e10
+# (600k × 50k), 4-6× at 4.8e9 (4.8M × 1k), lost 4× at 1.2e11
+# (600k × 200k) and 2× at 3.0e11 (6M × 50k); log-linear crossover
+# ≈ 4e10. It is stale against the lazy grid: the 2026-10-19 tables
+# time 600k × 50k at 31.2 s broadcast vs 9.4 s grid, while 4.8M × 1k
+# still favours broadcast (8.7 vs 19.5 s) — see the CHANGES.md FOUND
+# entry on this rule.
 KNN_BROADCAST_MAX_PRODUCT = 40_000_000_000
 
-# grid-vs-ring is a RATIO decision, not an absolute target count: ring
-# wins only when targets are dense relative to points (the ring search
-# then resolves in one cheap round while grid pays ×9 target
-# replication).  Measured (BENCH/KNN_REGIMES.md, both density rows):
-# at 600k points ring wins 3× at 4M targets (ratio 6.7) and ties at 1M
-# (ratio 1.7); at 6M points grid wins EVERY cell up to 4M targets
-# (ratio 0.67) — the r2 absolute 2M threshold was an artifact of the
-# single 600k-point calibration.  Auto picks grid when
-# n_targets <= max(KNN_GRID_MAX_TARGETS, ratio * n_points).
+# Which side the grid replicates into the 3×3 neighbourhood is a RATIO
+# decision: it copies the points when n_targets > max(grid_threshold,
+# KNN_GRID_TARGET_RATIO × n_points), else the targets. Not simply the
+# smaller side: at 600k × 1M copying the targets, the larger side, won.
+# Measured on the same inputs with each side forced (BENCH/KNN_REGIMES.md,
+# 2026-10-19 tables, local[4], seconds targets ×9 / points ×9): 600k
+# points × 50k 12.4/14.0, × 200k 12.2/13.5, × 1M 10.2/11.7 (ratio 1.7:
+# the targets, the larger side, still win), × 4M 24.7/13.7; 60k × 1M
+# 8.9/4.8 and 300k × 1M 8.3/7.8 (ratios 17 and 3.3); 6M × 4M 44.9/79.3;
+# 4.8M × 1k 23.9/60.0. The rule picks the faster side in every cell.
+# ``grid_threshold`` (default 0) only raises the switch point; the
+# scaled-down benchmark lattices set it.
 KNN_GRID_TARGET_RATIO = 2.0
 
-# absolute floor of the grid regime — the r2 calibration at <=600k
-# points (grid wins 3.4× at 200k targets, ties at 1M, loses 3× at 4M);
-# kept so small point sides against mid-size target sides still take
-# the measured winner.
-KNN_GRID_MAX_TARGETS = 2_000_000
-
-# cap on the point-side limit-probe used by the ratio decision: counts
-# are compared, never fully materialized, so auto never runs an
-# unbounded count() over a 100-TB point table.
+# cap on the point-side count of the one probe query: counts are
+# compared, never fully materialized, so knn_join never runs an
+# unbounded count over a 100-TB point table.
 KNN_POINT_PROBE_CAP = 50_000_000
 
 
@@ -296,6 +296,13 @@ def _topk_by_dots(dots: np.ndarray, tid: np.ndarray, kk: int) -> np.ndarray:
     return j
 
 
+def _unit_vectors(lon: np.ndarray, lat: np.ndarray) -> np.ndarray:
+    rlat, rlon = np.radians(lat), np.radians(lon)
+    return np.stack(
+        [np.cos(rlat) * np.cos(rlon), np.cos(rlat) * np.sin(rlon), np.sin(rlat)], axis=1
+    )
+
+
 def _knn_broadcast(
     points: DataFrame,
     targets: DataFrame,
@@ -314,9 +321,8 @@ def _knn_broadcast(
     want at 10^12 points vs a dimension-sized target table (routes,
     shape vertices): nothing about it grows with the point count.
 
-    Exact, deterministic tie-break on (distance, target_id) — full
-    lexsort per row, so boundary ties at the k-th slot are ordered by
-    id just like the window in the ring path."""
+    Exact, deterministic tie-break on (distance, target_id), the same
+    order as the grid path's merge and tail."""
     tgt = targets.select(target_key, t_lon, t_lat).orderBy(target_key).toPandas()
     schema = T.StructType(
         list(points.schema.fields)
@@ -339,11 +345,7 @@ def _knn_broadcast(
     # central angle), and the (chunk × T) score matrix becomes ONE BLAS
     # matmul instead of a trig expression per pair — ~10× less compute.
     # Exact haversine is then evaluated only for the k selected pairs.
-    trlat, trlon = np.radians(tlat), np.radians(tlon)
-    T3 = np.stack(
-        [np.cos(trlat) * np.cos(trlon), np.cos(trlat) * np.sin(trlon), np.sin(trlat)],
-        axis=1,
-    )
+    T3 = _unit_vectors(tlon, tlat)
     # chunk so the (chunk × n_targets) score matrix stays ~32 MB
     chunk = max(1, 4_000_000 // n_t)
     point_cols = [f.name for f in points.schema.fields]
@@ -355,15 +357,7 @@ def _knn_broadcast(
                 continue
             plon = pdf[lon_col].to_numpy(dtype=np.float64)
             plat = pdf[lat_col].to_numpy(dtype=np.float64)
-            prlat, prlon = np.radians(plat), np.radians(plon)
-            P3 = np.stack(
-                [
-                    np.cos(prlat) * np.cos(prlon),
-                    np.cos(prlat) * np.sin(prlon),
-                    np.sin(prlat),
-                ],
-                axis=1,
-            )
+            P3 = _unit_vectors(plon, plat)
             for s in range(0, n, chunk):
                 e = min(n, s + chunk)
                 dots = P3[s:e] @ T3.T
@@ -387,6 +381,34 @@ def _knn_broadcast(
     return points.mapInPandas(gen, schema)
 
 
+def _knn_grid_res(n_targets: int, x0, x1, y0, y1) -> int:
+    """Density-derived grid resolution: one occupied cell holds about
+    512 targets, so a point's 3×3 neighbourhood sees ~4,600 candidates
+    — enough that the k-th distance is far inside the guarantee."""
+    if not n_targets:
+        return 8
+    span_x = max(float(x1 - x0), 1e-9)
+    span_y = max(float(y1 - y0), 1e-9)
+    n_side = math.sqrt(max(1.0, (n_targets / 512) * (360.0 * 180.0) / (span_x * span_y)))
+    return min(24, max(4, math.ceil(math.log2(max(2.0, n_side)))))
+
+
+# With a caller-fixed res, points the grid leaves unresolved are
+# searched once more on a grid this many levels coarser (cells 16×
+# wider: 76 m → 1.2 km at res 18) before the brute-force tail. A fixed
+# res knows nothing of the target spacing: on synth.make_gtfs_feed feeds
+# of 210k–420k shape vertices, 34–57% of the used stops lie farther than
+# one res-18 cell from every vertex, and at most 0.8% farther than one
+# res-14 cell. Their stop→shape snap (transit_spatial, res 18, 210k
+# vertices, feed read from parquet, local[4]) took 233 s with every
+# straggler in the brute-force tail and 17–28 s with this level (and
+# the points, not the 210k targets, replicated at res 18). A
+# density-derived res sizes cells to about 512 targets and takes no
+# second level: on the knn_shuffle benchmark (res=None) building and
+# running an always-empty second level cost +53% wall in one pair.
+KNN_COARSE_LEVELS = 4
+
+
 def _knn_grid(
     points: DataFrame,
     targets: DataFrame,
@@ -397,247 +419,266 @@ def _knn_grid(
     lat_col: str,
     t_lon: str,
     t_lat: str,
-    res: int | None = None,
-    targets_per_cell: int = 512,
+    res: int,
+    replicate_points: bool,
     max_points_per_task: int = 50_000,
+    escalate: bool = False,
 ) -> DataFrame:
-    """Grid-cogroup kNN — the mid-regime strategy (targets too big to
-    broadcast, small enough to replicate ×9 across neighbor cells).
+    """Grid-cogroup kNN, exact, as one lazy plan.
 
-    Plan shape: points shuffle ONCE to their density-derived grid cell;
-    targets replicate to their 3×3 cell neighborhood (×9 rows — the
-    only data amplification); a cogrouped Arrow kernel computes exact
-    top-k per point with the same chord-dot BLAS matmul as the
-    broadcast kernel — no per-candidate row explosion and no window
-    sort over candidates, which is what makes the ring path's rounds
-    expensive. A point is resolved when its k-th neighbor distance is
-    within the ring-1 guarantee (1 × min cell extent at its latitude:
-    everything unsearched is at least one full cell away); unresolved
-    points (sparse neighborhoods) are emitted with a null target and
-    escalated by the caller to the ring path.
-
-    Skew: a dense-metro point cell would make one cogroup task hot, and
-    AQE cannot split grouped-map groups — so a cell holding more than
-    ``max_points_per_task`` points is salted (``skew``): its points
-    split into ceil(n/max_points_per_task) lanes and its TARGET side
-    fans out to every lane. Exactness is unaffected: every point sees
-    its full 3×3 target set in exactly one lane.
+    ``_knn_cells`` at ``res`` resolves every point whose k-th nearest
+    target lies within its cell-sized guarantee. With ``escalate`` (a
+    caller-fixed ``res``), its stragglers go through ``_knn_cells`` once
+    more at ``res - KNN_COARSE_LEVELS``, with the stragglers replicated
+    and the targets cut to the cells they reach. The points still
+    unresolved take the exact brute-force tail: broadcast × all targets,
+    window top-k. The tail costs (its points) × (targets): with
+    ``escalate`` its points are those farther than one coarse cell
+    (about 1.2 km at res 18) from their k-th target; without it, those
+    farther than one ``res`` cell, which at the density-derived ``res``
+    (about 512 targets a cell) are the points in target-sparse regions.
+    With no stragglers AQE turns the later levels into empty relations.
     """
-    t_stats = targets.agg(
-        F.min(t_lon), F.max(t_lon), F.min(t_lat), F.max(t_lat), F.count(F.lit(1))
-    ).first()
-    n_targets = t_stats[4] or 0
-    if res is None:
-        import math
+    from pyspark.sql import Window
 
-        # density-derived: one occupied cell holds ~targets_per_cell
-        # targets, so the 3×3 kernel sees ~9·targets_per_cell candidates
-        # — enough that the k-th distance is far inside the guarantee.
-        if n_targets:
-            span_x = max(float(t_stats[1] - t_stats[0]), 1e-9)
-            span_y = max(float(t_stats[3] - t_stats[2]), 1e-9)
-            n_side = math.sqrt(
-                max(1.0, (n_targets / targets_per_cell) * (360.0 * 180.0) / (span_x * span_y))
-            )
-            res = min(24, max(4, math.ceil(math.log2(max(2.0, n_side)))))
-        else:
-            res = 8
+    from ..functions.geo import haversine_m
+
+    cols = (k, point_key, target_key, lon_col, lat_col, t_lon, t_lat)
+    found, left = _knn_cells(points, targets, *cols, res, replicate_points, max_points_per_task)
+    if escalate and res > KNN_COARSE_LEVELS:
+        more, left = _knn_cells(
+            left, targets, *cols, res - KNN_COARSE_LEVELS, True, max_points_per_task, near=True
+        )
+        found = found.unionByName(more)
+    cand = (
+        F.broadcast(left)
+        .crossJoin(targets.select(target_key, t_lon, t_lat))
+        .withColumn(
+            "_dist_m", haversine_m(F.col(lat_col), F.col(lon_col), F.col(t_lat), F.col(t_lon))
+        )
+    )
+    w = Window.partitionBy(point_key).orderBy(F.asc("_dist_m"), F.asc(target_key))
+    tail = cand.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k)
+    return found.unionByName(tail.select(*found.columns))
+
+
+def _knn_cells(
+    points: DataFrame,
+    targets: DataFrame,
+    k: int,
+    point_key: str,
+    target_key: str,
+    lon_col: str,
+    lat_col: str,
+    t_lon: str,
+    t_lat: str,
+    res: int,
+    replicate_points: bool,
+    max_points_per_task: int,
+    near: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """One grid level: ``(resolved rows, straggler points)``.
+
+    Both sides are keyed by their grid cell at ``res``, and one side
+    (``replicate_points``, chosen by the caller from the counts) is
+    copied into its 3×3 cell neighbourhood — the only data
+    amplification, the bounded neighbour replication of *Distributed
+    Stream KNN Join* (SIGMOD 2021). With ``near``, targets outside the
+    replicated point cells are dropped before the shuffle (a broadcast
+    of those cells, for a point side known to be small). A cogrouped
+    Arrow kernel, called once per block of 8×8 cells, computes the exact
+    top-k of each point row against its cell's targets with the same
+    chord-dot BLAS matmul as the broadcast kernel; a point row whose
+    cell has no targets gets one null marker row, so no point is lost.
+
+    A ``groupBy(point_key)`` merge keeps each point's top k by
+    (distance, target key) over its partial lists. The point is resolved
+    when it has k neighbours and the k-th lies within the 3×3 guarantee:
+    everything unsearched is at least one cell away — one cell height
+    vertically, and horizontally one cell width at the WORST latitude the
+    searched rows reach (two cell heights poleward of the point, where
+    cos is smallest; clamped at the pole the bound is 0). Resolved rows
+    and stragglers both read the merge's one exchange, so the kernel
+    runs once per action.
+
+    The x index WRAPS modulo n (a point in the first or last column must
+    see metrically-adjacent targets across the antimeridian); rows past
+    a pole are dropped (no wrap over the poles).
+
+    Skew: a dense-metro block would make one cogroup task hot, and AQE
+    cannot split grouped-map groups — so a block holding more than
+    ``max_points_per_task`` point rows is salted (``skew``): its point
+    rows split into lanes and its targets fan out to every lane. Every
+    (point, target) pair of a cell still meets in exactly one lane.
+    """
     n = 1 << res
-    cell_h_m = 180.0 / n * geom.EARTH_M_PER_DEG_LAT
+    cell_h_deg = 180.0 / n
     mask = (1 << 29) - 1
     res_term = F.lit(res).cast("long") * F.lit(1 << 58).cast("long")
+
+    def neighbourhood(df: DataFrame) -> DataFrame:
+        """``df`` with each row copied into the 3×3 cells around its
+        ``_cell``, as literal offsets and codegen arithmetic."""
+        dxs = (-1, 0, 1) if n >= 3 else range(n)  # n < 3: no column twice
+        off = F.explode(
+            F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
+                      for dx in dxs for dy in (-1, 0, 1)])
+        )
+        x = F.shiftright(F.col("_cell"), 29).bitwiseAND(F.lit(mask)) + F.col("_o.dx")
+        y = F.col("_cell").bitwiseAND(F.lit(mask)) + F.col("_o.dy")
+        return (
+            df.withColumn("_o", off)
+            .filter((y >= 0) & (y < n))
+            .withColumn("_cell", res_term + F.pmod(x, F.lit(n)) * F.lit(1 << 29) + y)
+            .drop("_o")
+        )
 
     p = points.select(
         point_key, lon_col, lat_col,
         cells.cell_col(F.col(lat_col), F.col(lon_col), res).alias("_cell"),
     )
-    t0 = targets.select(
+    t = targets.select(
         target_key, t_lon, t_lat,
-        cells.cell_col(F.col(t_lat), F.col(t_lon), res).alias("_tc"),
+        cells.cell_col(F.col(t_lat), F.col(t_lon), res).alias("_cell"),
     )
-    tx = F.shiftright(F.col("_tc"), 29).bitwiseAND(F.lit(mask))
-    ty = F.col("_tc").bitwiseAND(F.lit(mask))
-    # x WRAPS modulo n (ADVICE r2: clamping left points in the first/
-    # last column blind to metrically-adjacent targets across the
-    # antimeridian, falsely "resolving" them); y clamps (no wrap over
-    # poles). array_distinct guards the degenerate n<3 wrap collision.
-    cells9 = F.array_distinct(
-        F.flatten(
-            F.transform(
-                F.sequence(tx - 1, tx + 1),
-                lambda x: F.transform(
-                    F.sequence(F.greatest(ty - 1, F.lit(0)), F.least(ty + 1, F.lit(n - 1))),
-                    lambda y: res_term
-                    + F.pmod(x, F.lit(n)).cast("long") * F.lit(1 << 29).cast("long")
-                    + y,
-                ),
-            )
-        )
-    )
-    t_rep = t0.withColumn("_cell", F.explode(cells9)).drop("_tc")
+    if replicate_points:
+        p = neighbourhood(p)
+        if near:
+            t = t.join(F.broadcast(p.select("_cell").distinct()), "_cell", "left_semi")
+    else:
+        t = neighbourhood(t)
 
-    hot = skew.hot_keys(p, "_cell", max_points_per_task)
-    p2 = skew.salt(p, hot, "_cell", point_key)
-    t2 = skew.fan_out(t_rep, hot, "_cell")
+    # one cogroup call per block of 8×8 cells, not per cell: the
+    # grouped-map call costs milliseconds of its own, which dominated
+    # the run at ~100 rows per cell; the kernel pairs the cells itself
+    block = F.col("_cell").bitwiseAND(F.lit(~((7 << 29) | 7)))
+    p = p.withColumn("_blk", block)
+    t = t.withColumn("_blk", block)
+    hot = skew.hot_keys(p, "_blk", max_points_per_task)
+    p = skew.salt(p, hot, "_blk", point_key)
+    t = skew.fan_out(t, hot, "_blk")
 
-    tgt_field = T.StructField(
-        target_key, targets.schema[target_key].dataType, True
-    )
     schema = T.StructType(
         [
-            T.StructField(point_key, p.schema[point_key].dataType, False),
+            T.StructField(point_key, points.schema[point_key].dataType, False),
             T.StructField(lon_col, T.DoubleType()),
             T.StructField(lat_col, T.DoubleType()),
-            tgt_field,
+            T.StructField(target_key, targets.schema[target_key].dataType, True),
             T.StructField(t_lon, T.DoubleType()),
             T.StructField(t_lat, T.DoubleType()),
             T.StructField("_dist_m", T.DoubleType()),
         ]
     )
 
-    kk = k
-    guar_scale = float(cell_h_m) * 0.999
-    cell_h_deg = 180.0 / n
-
     def kernel(key, pts_pdf: pd.DataFrame, tgt_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pts_pdf) == 0:
-            return pd.DataFrame({f.name: [] for f in schema.fields})
-        pid = pts_pdf[point_key].to_numpy()
+        # both sides sorted by cell, targets by (cell, id): a cell's rows
+        # are one slice, and argmax's first maximum is the smallest id
+        pts_pdf = pts_pdf.sort_values("_cell", kind="stable")
+        tgt_pdf = tgt_pdf.sort_values(["_cell", target_key], kind="stable")
+        pcell = pts_pdf["_cell"].to_numpy()
+        tcell = tgt_pdf["_cell"].to_numpy()
         plon = pts_pdf[lon_col].to_numpy(dtype=np.float64)
         plat = pts_pdf[lat_col].to_numpy(dtype=np.float64)
-        n_p = len(pid)
-        unresolved = pd.DataFrame(
-            {
-                point_key: pid,
-                lon_col: plon,
-                lat_col: plat,
-                target_key: pd.array([None] * n_p, dtype=object),
-                t_lon: np.nan,
-                t_lat: np.nan,
-                "_dist_m": np.nan,
-            }
-        )
-        if len(tgt_pdf) < k:
-            return unresolved
         tid = tgt_pdf[target_key].to_numpy()
         tlon = tgt_pdf[t_lon].to_numpy(dtype=np.float64)
         tlat = tgt_pdf[t_lat].to_numpy(dtype=np.float64)
-        trlat, trlon = np.radians(tlat), np.radians(tlon)
-        T3 = np.stack(
-            [np.cos(trlat) * np.cos(trlon), np.cos(trlat) * np.sin(trlon), np.sin(trlat)],
-            axis=1,
+        P3, T3 = _unit_vectors(plon, plat), _unit_vectors(tlon, tlat)
+        pi, tj = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]  # output rows
+        starts = np.flatnonzero(np.r_[True, pcell[1:] != pcell[:-1]]) if len(pcell) else []
+        for s, e in zip(starts, np.r_[starts[1:], len(pcell)]):
+            lo, hi = np.searchsorted(tcell, pcell[s], "left"), np.searchsorted(tcell, pcell[s], "right")
+            kk = min(k, hi - lo)
+            if kk == 0:  # no target in the cell: one null marker row
+                pi.append(np.arange(s, e))
+                tj.append(np.full(e - s, -1))
+                continue
+            # chunk so the (chunk × targets) score matrix stays ~32 MB
+            chunk = max(1, 4_000_000 // (hi - lo))
+            for c in range(s, e, chunk):
+                ce = min(e, c + chunk)
+                dots = P3[c:ce] @ T3[lo:hi].T
+                j = np.argmax(dots, axis=1)[:, None] if kk == 1 else _topk_by_dots(dots, tid[lo:hi], kk)
+                pi.append(np.repeat(np.arange(c, ce), kk))
+                tj.append(lo + j.ravel())
+        pi, tj = np.concatenate(pi), np.concatenate(tj)
+        miss = tj < 0
+        tj = np.where(miss, 0, tj)
+        if len(tid) == 0:  # every row is a marker
+            tid, tlon, tlat = np.zeros(1, dtype=object), np.full(1, np.nan), np.full(1, np.nan)
+        out_tid = np.where(miss, None, tid[tj]) if miss.any() else tid[tj]
+        olon, olat = np.where(miss, np.nan, tlon[tj]), np.where(miss, np.nan, tlat[tj])
+        out = pd.DataFrame(
+            {
+                point_key: pts_pdf[point_key].to_numpy()[pi],
+                lon_col: plon[pi],
+                lat_col: plat[pi],
+                target_key: out_tid,
+                t_lon: olon,
+                t_lat: olat,
+                "_dist_m": geom.haversine_m(plat[pi], plon[pi], olat, olon),
+            }
         )
-        prlat, prlon = np.radians(plat), np.radians(plon)
-        P3 = np.stack(
-            [np.cos(prlat) * np.cos(prlon), np.cos(prlat) * np.sin(prlon), np.sin(prlat)],
-            axis=1,
-        )
-        outs = []
-        chunk = max(1, 4_000_000 // max(len(tid), 1))
-        for s in range(0, n_p, chunk):
-            e = min(n_p, s + chunk)
-            dots = P3[s:e] @ T3.T
-            # always the explicit (-dot, id) top-k: unlike the broadcast
-            # kernel, per-cell target ids arrive UNSORTED, so argmax's
-            # first-max shortcut would break the smallest-id tie rule
-            j = _topk_by_dots(dots, tid, kk)
-            jf = j.ravel()
-            rep_lat = np.repeat(plat[s:e], kk)
-            rep_lon = np.repeat(plon[s:e], kk)
-            dist = geom.haversine_m(rep_lat, rep_lon, tlat[jf], tlon[jf])
-            kth = dist.reshape(-1, kk)[:, -1]
-            # Guarantee at the WORST reachable latitude (ADVICE r2):
-            # the searched 3×3 rows extend up to 2 cell-heights
-            # poleward of the point, where cos (and so the metric cell
-            # width separating us from unsearched columns) is smaller
-            # than at the point's own latitude. Clamped at the pole the
-            # bound degrades to 0 → the point escalates to the exact
-            # ring fallback instead of resolving wrongly.
-            reach = np.minimum(90.0, np.abs(plat[s:e]) + 2.0 * cell_h_deg)
-            guar = guar_scale * np.minimum(
-                1.0, np.maximum(0.0, 2.0 * np.cos(np.radians(reach)))
-            )
-            ok = kth <= guar
-            okr = np.repeat(ok, kk)
-            outs.append(
-                pd.DataFrame(
-                    {
-                        point_key: np.repeat(pid[s:e], kk)[okr],
-                        lon_col: rep_lon[okr],
-                        lat_col: rep_lat[okr],
-                        target_key: tid[jf][okr],
-                        t_lon: tlon[jf][okr],
-                        t_lat: tlat[jf][okr],
-                        "_dist_m": dist[okr],
-                    }
-                )
-            )
-            if not ok.all():
-                bad = ~ok
-                outs.append(unresolved.iloc[s:e][np.asarray(bad)])
-        return pd.concat(outs, ignore_index=True)
+        # a replicated point meets most of its 3×3 cells in this call:
+        # keep its top k here, so the merge shuffles ~k rows per point
+        out = out.sort_values([point_key, "_dist_m", target_key], kind="stable")
+        return out.groupby(point_key, sort=False).head(k)
 
-    grouped = p2.groupBy("_cell", "_salt").cogroup(t2.groupBy("_cell", "_salt"))
-    # localCheckpoint: the caller splits resolved/unresolved and counts —
-    # without it the cogroup kernel would run once per downstream action
-    return grouped.applyInPandas(kernel, schema).localCheckpoint()
+    partial = p.groupBy("_blk", "_salt").cogroup(t.groupBy("_blk", "_salt")).applyInPandas(
+        kernel, schema
+    )
+    # struct order (distance, target key) is the tie-break order;
+    # collect_list drops the null markers
+    nb = F.struct("_dist_m", target_key, t_lon, t_lat)
+    merged = partial.groupBy(point_key, lon_col, lat_col).agg(
+        F.slice(
+            F.sort_array(F.collect_list(F.when(F.col(target_key).isNotNull(), nb))), 1, k
+        ).alias("_nn")
+    )
+    reach = F.least(F.lit(90.0), F.abs(F.col(lat_col)) + F.lit(2.0 * cell_h_deg))
+    guarantee = F.lit(0.999 * cell_h_deg * geom.EARTH_M_PER_DEG_LAT) * F.least(
+        F.lit(1.0), F.greatest(F.lit(0.0), F.lit(2.0) * F.cos(F.radians(reach)))
+    )
+    ok = (F.size("_nn") >= k) & (F.array_max(F.col("_nn._dist_m")) <= guarantee)
+    cols = [f.name for f in schema.fields]
+    resolved = merged.filter(ok).select(point_key, lon_col, lat_col, F.inline("_nn")).select(*cols)
+    return resolved, merged.filter(~ok).select(point_key, lon_col, lat_col)
 
 
 def _knn_auto_strategy(
-    points: DataFrame,
-    targets: DataFrame,
+    n_points: int,
+    n_targets: int,
     broadcast_threshold: int = KNN_BROADCAST_MAX_TARGETS,
-    grid_threshold: int = KNN_GRID_MAX_TARGETS,
-    n_points: int | None = None,
-    n_targets: int | None = None,
+    grid_threshold: int = 0,
 ) -> str:
-    """Density-aware physical-strategy choice for knn_join's ``auto``
-    mode. Probes EACH side with exactly ONE bounded limit+count — never
-    a full count over a 100-TB side, and never a second pass over a
-    possibly-expensive upstream plan. The rules and their measured
-    crossovers live in the KNN_* constant comments; the two-density
-    sweep in BENCH/KNN_REGIMES.md is the evidence.
-
-    The probes DO execute each side's upstream plan once (bounded by
-    the limit) before the chosen join executes it again (ADVICE r3) —
-    callers with expensive derived inputs should either cache/
-    localCheckpoint them first or pass exact/approximate row counts
-    via ``n_points``/``n_targets``, which skip the probes entirely
-    (counts above the caps are clamped, so a conservative upper bound
-    is a safe hint)."""
-    n_points_probe = (
-        min(n_points, KNN_POINT_PROBE_CAP + 1)
-        if n_points is not None
-        else points.limit(KNN_POINT_PROBE_CAP + 1).count()
-    )
-    # One target probe serves both comparisons (broadcast cutoff and
-    # the density-ratio grid cutoff). When the point probe caps, the
-    # ratio cutoff is clamped to the cap — by then the join itself
-    # dwarfs the probe, and ring never materializes targets anyway.
-    eff_threshold = max(
-        grid_threshold, int(KNN_GRID_TARGET_RATIO * n_points_probe)
-    )
-    probe_cap = max(broadcast_threshold, eff_threshold)
-    n_targets_probe = (
-        min(n_targets, probe_cap + 1)
-        if n_targets is not None
-        else targets.limit(probe_cap + 1).count()
-    )
+    """The physical plan for ``n_points`` × ``n_targets``: ``"broadcast"``,
+    ``"grid"`` (replicate the targets) or ``"grid_points"`` (replicate
+    the points). The rules and their measured crossovers live in the
+    KNN_* constant comments; BENCH/KNN_REGIMES.md is the evidence. A
+    point count above KNN_POINT_PROBE_CAP is a lower bound, so its true
+    product with the targets is unknown: it never broadcasts (grid won
+    every huge-point cell)."""
     if (
-        n_targets_probe <= broadcast_threshold
-        # a saturated point probe means the true product is UNKNOWN
-        # beyond >= (cap+1) x targets — never commit an unbounded
-        # matmul to broadcast on a lower bound (review r3: the capped
-        # count silently passed the product test for any >=50M-point
-        # side with <=800 targets); grid won every huge-point sweep
-        # cell, so it is the safe fall-through
-        and n_points_probe <= KNN_POINT_PROBE_CAP
-        and n_points_probe * n_targets_probe <= KNN_BROADCAST_MAX_PRODUCT
+        n_targets <= broadcast_threshold
+        and n_points <= KNN_POINT_PROBE_CAP
+        and n_points * n_targets <= KNN_BROADCAST_MAX_PRODUCT
     ):
         return "broadcast"
-    if n_targets_probe <= eff_threshold:
-        return "grid"  # includes tiny-targets/huge-points: grid beats broadcast
-    return "ring"
+    if n_targets > max(grid_threshold, KNN_GRID_TARGET_RATIO * n_points):
+        return "grid_points"
+    return "grid"
+
+
+def _knn_probe(points: DataFrame, targets: DataFrame, t_lon: str, t_lat: str):
+    """One query: the point count capped at KNN_POINT_PROBE_CAP + 1
+    (``n_p``), the target count (``n_t``) and the target bbox
+    (``x0``, ``x1``, ``y0``, ``y1``)."""
+    n_p = points.limit(KNN_POINT_PROBE_CAP + 1).agg(F.count(F.lit(1)).alias("n_p"))
+    t = targets.agg(
+        F.count(F.lit(1)).alias("n_t"),
+        F.min(t_lon).alias("x0"), F.max(t_lon).alias("x1"),
+        F.min(t_lat).alias("y0"), F.max(t_lat).alias("y1"),
+    )
+    return n_p.crossJoin(t).first()
 
 
 def knn_join(
@@ -651,288 +692,70 @@ def knn_join(
     lat_col: str = "lat",
     t_lon: str = "t_lon",
     t_lat: str = "t_lat",
-    max_rounds: int = 6,
     strategy: str = "auto",
     broadcast_threshold: int = KNN_BROADCAST_MAX_TARGETS,
-    grid_threshold: int = KNN_GRID_MAX_TARGETS,
+    grid_threshold: int = 0,
     n_points: int | None = None,
     n_targets: int | None = None,
 ) -> DataFrame:
     """J8 — k nearest targets per point, exact.
 
-    Physical strategy selection (like Catalyst's broadcast-vs-shuffle
-    join choice), three tiers probed with cheap bounded limit+counts on
-    BOTH sides under ``strategy='auto'`` (density-aware since r3 — the
-    two-density sweep in BENCH/KNN_REGIMES.md is the evidence; the
-    probes re-execute expensive derived inputs once — cache them or
-    pass ``n_points``/``n_targets`` hints to skip the probes):
+    Two physical strategies (like Catalyst's broadcast-vs-shuffle join
+    choice), picked by ``_knn_auto_strategy`` under ``strategy='auto'``:
 
     * ``broadcast`` (≤ 100k targets AND points × targets ≤ 4e10):
       target side shipped whole, one shuffle-free map pass over the
       points (_knn_broadcast); its per-point cost scales with the
       target count, so viability tracks the matmul PRODUCT — tiny
       target sides broadcast even against multi-million-point sides;
-    * ``grid`` (targets ≤ max(2M, 2 × points)): points co-partitioned
-      with ×9-replicated targets by density-derived cell, local
-      chord-matmul top-k per cogroup, ring-1 guarantee, stragglers
-      escalate to ring (_knn_grid);
-    * ``ring`` (targets dense relative to points): the distributed
-      ring-expansion search below, which never materializes the target
-      side anywhere and resolves in ~one round when every point cell
-      is saturated with targets.
+    * ``grid``: cell-keyed cogroup with one side replicated into the
+      3×3 neighbourhood — the points when targets > 2 × points, else
+      the targets (KNN_GRID_TARGET_RATIO) — a merge with the 3×3
+      guarantee, with a caller-fixed ``res`` a second level 16× coarser
+      for its stragglers, and an exact brute-force tail for the rest,
+      all in one plan (_knn_grid).
 
-    Ring-expansion candidate search: round r joins each unresolved
-    point's cell k-ring (radius 2^r − 1 cells, built with a JVM-side
-    sequence cross — no UDF) against target cells. A point is resolved
-    once its k-th candidate distance is ≤ the ring's guarantee radius
-    (ring_cells · cell_min_extent_m) — no closer target can live
-    outside the searched ring. Stragglers (sparse regions) escalate;
-    the final round is an exact brute-force for whatever remains
-    (empty-ring escalation, SURVEY.md §7 hard part 3).
+    ``n_points``/``n_targets`` are row-count hints (upper bounds are
+    safe: the result is exact either way, only the plan changes).
+    Without both hints, or with ``res=None`` on the grid path, one probe
+    query counts the points (capped at KNN_POINT_PROBE_CAP + 1) and the
+    targets and takes the target bbox; ``res=None`` derives the grid
+    from that density (one cell ≈ 512 targets). The probe executes each
+    side's upstream plan once more — pass the hints for expensive
+    derived inputs. With both hints and ``res``, the grid path launches
+    no Spark job until its result is consumed; broadcast collects the
+    target side, which is its build.
 
-    Distances: haversine meters (functions.geo.haversine_m, JVM-side).
-    Deterministic tie-break on (distance, target_id). ``res=None``
-    lets the ring path derive the grid resolution from the target
-    side's measured density (one cell ≈ k targets).
+    Distances: haversine meters. Deterministic tie-break on
+    (distance, target_id).
 
     Contract: ``point_key`` must be unique per input row (kNN is a
     keyed join — k output rows per point). With duplicate keys the
-    ring path's per-key window would collapse duplicates while the
-    broadcast path emits per input row; uniqueness makes every
-    strategy agree.
+    grid path's per-key merge would collapse duplicates while the
+    broadcast path emits per input row; uniqueness makes both
+    strategies agree.
     """
-    if strategy not in ("auto", "broadcast", "grid", "ring"):
+    if strategy not in ("auto", "broadcast", "grid"):
         raise ValueError(f"unknown kNN strategy {strategy!r}")
-    if strategy == "auto":
-        strategy = _knn_auto_strategy(
-            points, targets, broadcast_threshold, grid_threshold,
-            n_points=n_points, n_targets=n_targets,
-        )
-    if strategy == "broadcast":
-        return _knn_broadcast(
-            points.select(point_key, lon_col, lat_col),
-            targets,
-            k,
-            target_key,
-            lon_col,
-            lat_col,
-            t_lon,
-            t_lat,
-        )
-    if strategy == "grid":
-        grid_out = _knn_grid(
-            points.select(point_key, lon_col, lat_col),
-            targets, k, point_key, target_key, lon_col, lat_col, t_lon, t_lat,
-            res=res,
-        )
-        resolved = grid_out.filter(F.col(target_key).isNotNull())
-        unres = grid_out.filter(F.col(target_key).isNull()).select(
-            point_key, lon_col, lat_col
-        )
-        if unres.limit(1).isEmpty():
-            return resolved
-        # sparse-neighborhood stragglers escalate to the ring search,
-        # which carries its own guarantee + brute-force tail
-        fb = knn_join(
-            unres, targets, None, k, point_key, target_key,
-            lon_col, lat_col, t_lon, t_lat, max_rounds, strategy="ring",
-        )
-        return resolved.unionByName(fb.select(*resolved.columns))
-
-    from ..functions.geo import haversine_m
-
-    # One cheap agg over the target side drives BOTH adaptive knobs
-    # below (auto resolution + initial ring).
-    t_stats = targets.agg(
-        F.min(t_lon), F.max(t_lon), F.min(t_lat), F.max(t_lat), F.count(F.lit(1))
-    ).first()
-    n_targets = t_stats[4] or 0
-
+    pts = points.select(point_key, lon_col, lat_col)
+    probe = None
+    if strategy != "broadcast" and (n_points is None or n_targets is None):
+        probe = _knn_probe(pts, targets, t_lon, t_lat)
+        n_points = probe["n_p"] if n_points is None else n_points
+        n_targets = probe["n_t"] if n_targets is None else n_targets
+    plan = strategy if strategy == "broadcast" else _knn_auto_strategy(
+        n_points, n_targets, broadcast_threshold if strategy == "auto" else -1, grid_threshold
+    )
+    if plan == "broadcast":
+        return _knn_broadcast(pts, targets, k, target_key, lon_col, lat_col, t_lon, t_lat)
+    escalate = res is not None
     if res is None:
-        # Density-adaptive resolution: pick the grid where an occupied
-        # cell holds ~k targets, so a ring-1 probe sees ~9k candidates —
-        # enough to resolve most points in one round without drowning
-        # the join in candidates. A fixed res that's too coarse for a
-        # dense target side costs 100×+ in candidate rows (measured:
-        # 200k targets at res 16 → ~1.1k candidates/point).
-        import math
-
-        if n_targets:
-            span_x = max(float(t_stats[1] - t_stats[0]), 1e-9)
-            span_y = max(float(t_stats[3] - t_stats[2]), 1e-9)
-            n_side = math.sqrt(
-                max(1.0, (n_targets / max(1, k)) * (360.0 * 180.0) / (span_x * span_y))
-            )
-            res = min(24, max(6, math.ceil(math.log2(max(2.0, n_side)))))
-        else:
-            res = 12
-
-    n = 1 << res
-    # conservative per-cell metric extents at the point's latitude
-    cell_h_m = 180.0 / n * geom.EARTH_M_PER_DEG_LAT
-
-    t = targets.select(
-        F.col(target_key),
-        F.col(t_lon),
-        F.col(t_lat),
-        cells.cell_col(F.col(t_lat), F.col(t_lon), res).alias("_tcell"),
+        probe = probe or _knn_probe(pts, targets, t_lon, t_lat)
+        res = _knn_grid_res(probe["n_t"], probe["x0"], probe["x1"], probe["y0"], probe["y1"])
+    return _knn_grid(
+        pts, targets, k, point_key, target_key, lon_col, lat_col, t_lon, t_lat,
+        res=res, replicate_points=plan == "grid_points", escalate=escalate,
     )
-    p0 = points.select(
-        F.col(point_key),
-        F.col(lon_col),
-        F.col(lat_col),
-        cells.cell_col(F.col(lat_col), F.col(lon_col), res).alias("_pcell"),
-    )
-
-    from pyspark.sql import Window
-
-    # Eager localCheckpoint, not persist(): each round's working set is
-    # materialized as RDD blocks with TRUNCATED lineage. The persist()
-    # formulation routed every round through AQE TableCacheQueryStage,
-    # whose cache-materialization interleaves with broadcast builds and
-    # (observed, local mode under concurrent stages) fails the
-    # broadcast's execution-memory acquisition — "Not enough memory to
-    # build and broadcast" with 99% of the heap free. Checkpointed
-    # rounds also stop the plan from growing round-over-round.
-    unresolved = p0.localCheckpoint()
-    n_unresolved = unresolved.count()
-    results: list[DataFrame] = []
-
-    # Density-adaptive initial ring: starting at ring 1 when targets
-    # are sparse burns 2-3 full join+window rounds before the
-    # guarantee radius reaches the typical NN distance. Using the same
-    # target stats, pick the smallest ring with (2r+1)^2 * d >= 8k so
-    # the k-th candidate is well inside the guarantee radius for most
-    # points. Exactness is unaffected — the ring only seeds the
-    # escalation loop.
-    ring = 1
-    if n_targets:
-        cell_w_deg = 360.0 / n   # n x n grid: columns span 360/n degrees
-        cell_h_deg = 180.0 / n
-        span_x = max(float(t_stats[1] - t_stats[0]), cell_w_deg)
-        span_y = max(float(t_stats[3] - t_stats[2]), cell_h_deg)
-        occ_cells = max(1.0, (span_x / cell_w_deg) * (span_y / cell_h_deg))
-        d = n_targets / occ_cells
-        import math
-
-        ring = max(1, math.ceil((math.sqrt(8.0 * k / d) - 1.0) / 2.0))
-        # never start wider than the occupied region itself
-        ring = min(ring, max(1, int(math.sqrt(occ_cells))))
-
-    for round_i in range(max_rounds):
-        if n_unresolved == 0:
-            break
-        # Per-point candidate-cell budget: a sparse target side (small
-        # k/d ratio) can derive a ring hundreds of cells wide, and the
-        # ×4 escalation then asks for multi-million-element cell arrays
-        # per point — at which point materializing the fan-out costs
-        # more than the exact brute-force tail below (and auto-selection
-        # only routes here for DENSE target sides, where rings stay
-        # single-digit; a huge ring means a forced strategy or a
-        # pathological density, both better served by the tail).
-        ring_x = min(ring, n // 2)   # wrap covers every column at n//2
-        ring_y = min(ring, n - 1)    # y clamps at the poles
-        if (2 * ring_x + 1) * (2 * ring_y + 1) > 16384:
-            break
-        # candidate cells: square k-ring of radius `ring` (JVM sequence cross)
-        px = F.shiftright(F.col("_pcell"), 29).bitwiseAND(F.lit((1 << 29) - 1))
-        py = F.col("_pcell").bitwiseAND(F.lit((1 << 29) - 1))
-        res_term = F.lit(res).cast("long") * F.lit(1 << 58).cast("long")
-        # x wraps modulo n (antimeridian adjacency — ADVICE r2), y
-        # clamps; array_distinct collapses the wrap overlap when
-        # 2·ring+1 > n so the candidate set never exceeds the grid.
-        cand_cells = F.array_distinct(
-            F.flatten(
-                F.transform(
-                    F.sequence(px - ring_x, px + ring_x),
-                    lambda x: F.transform(
-                        F.sequence(F.greatest(py - ring_y, F.lit(0)), F.least(py + ring_y, F.lit(n - 1))),
-                        lambda y: res_term
-                        + F.pmod(x, F.lit(n)).cast("long") * F.lit(1 << 29).cast("long")
-                        + y,
-                    ),
-                )
-            )
-        )
-        probe = unresolved.withColumn("_tcell", F.explode(cand_cells))
-        # shuffle_hash hint on the target side: this path exists for
-        # target tables too big to materialize on one node, so letting
-        # the local planner broadcast t whenever it LOOKS small would be
-        # the wrong plan at scale — and empirically the driver-side
-        # build of a ~150k-row broadcast OOMs under concurrent AQE
-        # stages (Spark 4.1 local mode). Cell-equi shuffle join keeps
-        # both sides distributed, skew handled by AQE.
-        cand = probe.join(t.hint("shuffle_hash"), "_tcell").withColumn(
-            "_dist_m", haversine_m(F.col(lat_col), F.col(lon_col), F.col(t_lat), F.col(t_lon))
-        )
-        w = Window.partitionBy(point_key).orderBy(F.asc("_dist_m"), F.asc(target_key))
-        topk = (
-            cand.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .drop("_tcell")
-        )
-        # guarantee: the k-th neighbor must be closer than any unsearched
-        # cell can be. Vertical: unsearched rows are ≥ ring_y·cell_h away
-        # (meridian distance, latitude-free). Horizontal: unsearched
-        # columns are ≥ ring_x·cell_w away, with cell_w = 2·cell_h·cos
-        # evaluated at the WORST latitude reachable by searched rows —
-        # (ring_y+1) cell-heights poleward of the point (ADVICE r2: the
-        # point's own cos overstates the bound near poles; clamped at
-        # the pole it degrades to 0 and the point keeps escalating,
-        # ending in the exact brute-force tail). When the wrap already
-        # covers every column there are no unsearched columns, and when
-        # the whole grid is searched the top-k is exact by construction.
-        x_cover_all = (2 * ring_x + 1) >= n
-        y_cover_all = ring_y >= n - 1
-        vert_m = F.lit(float(ring_y * cell_h_m))
-        if x_cover_all:
-            guarantee_m = vert_m * F.lit(0.999)
-        else:
-            reach_deg = F.least(
-                F.lit(90.0),
-                F.abs(F.col(lat_col)) + F.lit(float((ring_y + 1) * 180.0 / n)),
-            )
-            horiz_m = F.lit(float(ring_x * 2 * cell_h_m)) * F.greatest(
-                F.lit(0.0), F.cos(F.radians(reach_deg))
-            )
-            guarantee_m = F.least(vert_m, horiz_m) * F.lit(0.999)
-        has_k = F.count(F.lit(1)).over(Window.partitionBy(point_key)) >= k
-        if x_cover_all and y_cover_all:
-            guarantee = has_k
-        else:
-            guarantee = (
-                F.max(F.col("_dist_m")).over(Window.partitionBy(point_key))
-                <= guarantee_m
-            ) & has_k
-        resolved = (
-            topk.withColumn("_ok", guarantee)
-            .filter(F.col("_ok"))
-            .drop("_ok", "_rn")
-            .localCheckpoint()
-        )
-        results.append(resolved)
-        done_keys = resolved.select(point_key).distinct()
-        unresolved = unresolved.join(done_keys, point_key, "left_anti").localCheckpoint()
-        n_unresolved = unresolved.count()
-        ring *= 4  # 1 → 4 → 16 cells: three density regimes, then brute force
-
-    if n_unresolved > 0:
-        # exact brute-force for stragglers — rare, bounded; broadcast
-        # the STRAGGLER side (small by construction), never the targets
-        cand = F.broadcast(unresolved.drop("_pcell")).crossJoin(t.drop("_tcell")).withColumn(
-            "_dist_m", haversine_m(F.col(lat_col), F.col(lon_col), F.col(t_lat), F.col(t_lon))
-        )
-        w = Window.partitionBy(point_key).orderBy(F.asc("_dist_m"), F.asc(target_key))
-        results.append(
-            cand.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k).drop("_rn")
-        )
-
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r.drop("_pcell"), allowMissingColumns=True)
-    # intermediate checkpoint blocks are released when their RDDs are
-    # garbage-collected; the returned frame carries only its own blocks
-    return out.drop("_pcell").localCheckpoint()
 
 
 # ---------------------------------------------------------------------------

@@ -55,9 +55,8 @@ def snap_stops_to_shapes(
 ) -> DataFrame:
     """J8 at the transit level: nearest shape *vertex* per used stop
     (stop→shape snapping). Exact kNN through ``knn_join``'s auto
-    strategy (broadcast, grid or ring, picked from the row-count
-    hints); distance is haversine meters; ties break on shape point
-    identity.
+    strategy (broadcast or grid, picked from the row-count hints);
+    distance is haversine meters; ties break on shape point identity.
 
     ``n_points``/``n_targets`` are row-count hints for ``knn_join``'s
     strategy choice: upper bounds on the used stops and the shape
@@ -81,7 +80,7 @@ def snap_stops_to_shapes(
     )
     # auto-strategy row hints: the derived sides (semi-join-filtered
     # stops, semi-joined shape vertices) would be double-executed by
-    # knn_join's bounded probes. Counts of the BASE tables are upper
+    # knn_join's probe query. Counts of the BASE tables are upper
     # bounds (filters and semi-joins only shrink a side), which the
     # auto mode documents as safe hints. Each count is a Spark job that
     # scans its table (the feed is CSV or in-memory, with no row-count

@@ -526,7 +526,7 @@ def j6_point_in_envelope(spark, sf_dir):
     return joined.select(F.col("c_custkey").alias("custkey"), F.col("s_suppkey").alias("suppkey"))
 
 
-# ---- J8: kNN join (ring expansion vs brute-force oracle) ----
+# ---- J8: kNN join (knn_join vs brute-force oracle) ----
 @q(
     "j8_knn",
     f"""

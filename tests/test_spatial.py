@@ -111,13 +111,19 @@ def test_knn_matches_bruteforce(spark, points_df):
         d = g.haversine_m(p.lat, p.lon, tgt_pd.t_lat.to_numpy(), tgt_pd.t_lon.to_numpy())
         j = int(np.lexsort((tgt_pd.target_id.to_numpy(), d))[0])
         want.add((int(p.point_id), int(tgt_pd.target_id[j])))
-    # both physical strategies must produce the identical exact answer
-    for strategy in ("broadcast", "grid", "ring"):
-        got = {
-            (r["point_id"], r["target_id"])
-            for r in spatial.knn_join(pdf_s, tgt, res=14, k=1, strategy=strategy).collect()
-        }
-        assert got == want, strategy
+    # both physical strategies must produce the identical exact answer;
+    # the 12-point side (under half the targets) runs the grid with the
+    # points replicated
+    for few in (False, True):
+        pts = pdf_s.filter(F.col("point_id") < 12) if few else pdf_s
+        for strategy in ("broadcast", "grid"):
+            got = {
+                (r["point_id"], r["target_id"])
+                for r in spatial.knn_join(
+                    pts, tgt, res=14, k=1, strategy=strategy
+                ).collect()
+            }
+            assert got == {w for w in want if not few or w[0] < 12}, (strategy, few)
 
 
 def test_knn_antimeridian_and_high_latitude(spark):
@@ -167,8 +173,9 @@ def test_knn_antimeridian_and_high_latitude(spark):
         order = np.lexsort((tgt_pd.target_id.to_numpy(), d))
         for j in order[:2]:
             want.add((int(p.point_id), int(tgt_pd.target_id[j])))
+    few = pdf_s.filter(F.col("point_id") < 24)  # points-replicated grid
     for res in (4, 10, None):
-        for strategy in ("broadcast", "grid", "ring"):
+        for strategy in ("broadcast", "grid"):
             got = {
                 (r["point_id"], r["target_id"])
                 for r in spatial.knn_join(
@@ -176,19 +183,33 @@ def test_knn_antimeridian_and_high_latitude(spark):
                 ).collect()
             }
             assert got == want, (strategy, res)
+        got = {
+            (r["point_id"], r["target_id"])
+            for r in spatial.knn_join(
+                few, tgt, res=res, k=2, strategy="grid"
+            ).collect()
+        }
+        assert got == {w for w in want if w[0] < 24}, ("grid_points", res)
 
 
 def test_knn_k3_and_sparse_targets(spark, points_df):
     (pdf_s, pdf) = points_df
-    # only 2 targets → every point must still resolve (brute-force tail
-    # of the ring strategy; forced so auto-selection can't hide it)
+    # only 2 targets → every point must still resolve: at res 18 the
+    # fine level resolves none, the res-14 level some, and the rest go
+    # to the brute-force tail (forced grid, so auto can't hide it)
     tgt_pd = pd.DataFrame(
         {"target_id": [0, 1], "t_lon": [-122.50, -122.36], "t_lat": [37.71, 37.83]}
     )
     tgt = spark.createDataFrame(tgt_pd)
-    out = spatial.knn_join(pdf_s, tgt, res=14, k=2, strategy="ring").toPandas()
+    out = spatial.knn_join(pdf_s, tgt, res=18, k=2, strategy="grid").toPandas()
     assert len(out) == 2 * len(pdf)
     assert set(out["point_id"]) == set(pdf["point_id"])
+    bc = spatial.knn_join(pdf_s, tgt, res=18, k=2, strategy="broadcast").toPandas()
+    key = ["point_id", "target_id"]
+    pd.testing.assert_frame_equal(
+        out[key].sort_values(key).reset_index(drop=True),
+        bc[key].sort_values(key).reset_index(drop=True),
+    )
 
 
 def test_knn_strategies_agree_k3(spark, points_df):
@@ -203,23 +224,29 @@ def test_knn_strategies_agree_k3(spark, points_df):
         }
     )
     tgt = spark.createDataFrame(tgt_pd)
+    few = pdf_s.filter(F.col("point_id") < 10)  # points-replicated grid
+    runs = {
+        "broadcast": (pdf_s, "broadcast"),
+        "grid": (pdf_s, "grid"),
+        "few_broadcast": (few, "broadcast"),
+        "few_grid": (few, "grid"),
+    }
     frames = {
-        s: spatial.knn_join(pdf_s, tgt, res=14, k=3, strategy=s)
+        name: spatial.knn_join(pts, tgt, res=14, k=3, strategy=s)
         .select("point_id", "target_id", "_dist_m")
         .toPandas()
         .sort_values(["point_id", "_dist_m", "target_id"])
         .reset_index(drop=True)
-        for s in ("broadcast", "grid", "ring")
+        for name, (pts, s) in runs.items()
     }
     assert len(frames["broadcast"]) == 3 * len(pdf)
-    for other in ("grid", "ring"):
+    assert len(frames["few_broadcast"]) == 3 * 10
+    for base, other in (("broadcast", "grid"), ("few_broadcast", "few_grid")):
         pd.testing.assert_frame_equal(
-            frames["broadcast"][["point_id", "target_id"]],
+            frames[base][["point_id", "target_id"]],
             frames[other][["point_id", "target_id"]],
         )
-        np.testing.assert_allclose(
-            frames["broadcast"]["_dist_m"], frames[other]["_dist_m"], rtol=1e-9
-        )
+        np.testing.assert_allclose(frames[base]["_dist_m"], frames[other]["_dist_m"], rtol=1e-9)
 
 
 def test_image_tile_assignment_and_caption_equality(spark, images_df, images_pd):
@@ -256,7 +283,7 @@ def test_decode_pixel_stats_invariants(images_df):
     stats = multimodal.decode_pixel_stats(images_df).toPandas()
     assert stats["decoded"].all()
     assert stats["phash_match"].all()
-    assert np.isinf(stats["psnr_roundtrip"]).all()  # lossless whitelist
+    assert "psnr_roundtrip" not in stats.columns
 
 
 def test_resize_roundtrip(images_df):
@@ -321,8 +348,8 @@ def test_decode_tile_assign_matches_trusted_path(spark, images_df, images_pd):
 
 
 def test_knn_ring_auto_res_agrees(spark, points_df):
-    """res=None derives the grid from target density; result identical
-    to the broadcast strategy."""
+    """res=None derives the grid from target density; the grid result
+    is identical to the broadcast strategy's."""
     (pdf_s, pdf) = points_df
     rng = np.random.default_rng(41)
     nt = 500  # dense enough that a fixed coarse res would over-candidate
@@ -334,57 +361,68 @@ def test_knn_ring_auto_res_agrees(spark, points_df):
         }
     )
     tgt = spark.createDataFrame(tgt_pd)
-    ring = {
+    grid = {
         (r["point_id"], r["target_id"])
-        for r in spatial.knn_join(pdf_s, tgt, res=None, k=1, strategy="ring").collect()
+        for r in spatial.knn_join(pdf_s, tgt, res=None, k=1, strategy="grid").collect()
     }
     bc = {
         (r["point_id"], r["target_id"])
         for r in spatial.knn_join(pdf_s, tgt, res=None, k=1, strategy="broadcast").collect()
     }
-    assert ring == bc and len(ring) == len(pdf)
+    assert grid == bc and len(grid) == len(pdf)
 
 
-def test_knn_auto_strategy_density_aware(spark):
+def test_knn_auto_strategy_density_aware():
     """The auto rule must reproduce the measured winner of every cell
-    of the two-density sweep in BENCH/KNN_REGIMES.md (r3): broadcast
-    only when BOTH sides are small, grid whenever points dominate,
-    ring only when targets are dense relative to points. Uses lazy
-    spark.range frames — the probes are bounded limit+counts, so no
-    full materialization happens."""
-
-    def frame(n):
-        return spark.range(n)  # schema irrelevant: only counted
-
+    of the two-density sweep in BENCH/KNN_REGIMES.md: broadcast only
+    when BOTH sides are small, target-replicating grid whenever points
+    dominate, point-replicating grid when targets are dense relative to
+    points. A pure function of the counts: no Spark."""
     pick = spatial._knn_auto_strategy
     # sweep row: 600k pts / 50k tgt → broadcast won (13.6s vs grid 18.5)
-    assert pick(frame(600_000), frame(50_000)) == "broadcast"
+    # against the old checkpointed grid; stale since the lazy grid
+    # (2026-10-19 KNN_REGIMES: 31.2s broadcast vs 9.4s grid), kept as
+    # the rule's current answer until the cutoff is re-derived
+    assert pick(600_000, 50_000) == "broadcast"
     # sweep row: 6M pts / 50k tgt → broadcast LOST 2× to grid
-    assert pick(frame(6_000_000), frame(50_000)) == "grid"
+    assert pick(6_000_000, 50_000) == "grid"
     # scaling-run cell: 4.8M pts / 1k tgt → broadcast won 4-6× over
-    # grid (r2 6.0s vs r3 26.4s at local[4]) — the broadcast cap is a
+    # grid (6.0s vs 26.4s at local[4]) — the broadcast cap is a
     # points×targets PRODUCT, not an absolute point count
-    assert pick(frame(4_800_000), frame(1_000)) == "broadcast"
+    assert pick(4_800_000, 1_000) == "broadcast"
     # sweep rows: 200k targets → grid at both densities
-    assert pick(frame(600_000), frame(200_000)) == "grid"
-    assert pick(frame(6_000_000), frame(200_000)) == "grid"
-    # sweep row: 600k pts / 4M tgt (ratio 6.7) → ring won 3×
-    assert pick(frame(600_000), frame(4_000_000)) == "ring"
-    # sweep row: 6M pts / 4M tgt (ratio 0.67) → grid won (30.4 vs 41.8)
-    assert pick(frame(6_000_000), frame(4_000_000)) == "grid"
+    assert pick(600_000, 200_000) == "grid"
+    assert pick(6_000_000, 200_000) == "grid"
+    # both grid sides forced, 2026-10-19 (targets ×9 / points ×9, s):
+    # 600k pts / 4M tgt (ratio 6.7) 24.7 / 13.7 → target replication
+    # lost 1.8×, so the grid replicates the points
+    assert pick(600_000, 4_000_000) == "grid_points"
+    # 6M pts / 4M tgt (ratio 0.67) 44.9 / 79.3 → replicate the targets
+    assert pick(6_000_000, 4_000_000) == "grid"
     # saturated point probe (> KNN_POINT_PROBE_CAP): the true product
     # is unknown beyond a lower bound — must NOT broadcast even though
-    # the capped product would pass (review r3 finding)
-    assert pick(frame(spatial.KNN_POINT_PROBE_CAP + 2), frame(500)) == "grid"
-    # absolute grid floor retained below the ratio regime
-    assert pick(frame(600_000), frame(1_000_000)) == "grid"
+    # the capped product would pass
+    assert pick(spatial.KNN_POINT_PROBE_CAP + 1, 500) == "grid"
+    # 600k pts / 1M tgt (ratio 1.7) 10.2 / 11.7: the larger side is
+    # still the cheaper one to replicate — not a smaller-side rule
+    assert pick(600_000, 1_000_000) == "grid"
+    # 60k / 1M 8.9 / 4.8 and 300k / 1M 8.3 / 7.8: no absolute target
+    # floor below the ratio
+    assert pick(60_000, 1_000_000) == "grid_points"
+    assert pick(300_000, 1_000_000) == "grid_points"
+    # grid_threshold raises the replication-side switch; a negative
+    # broadcast threshold (forced grid) never broadcasts
+    assert pick(100, 1_000) == "broadcast"
+    assert pick(100, 1_000, -1) == "grid_points"
+    assert pick(100, 1_000, -1, grid_threshold=1_000) == "grid"
 
 
 def test_knn_grid_salted_hot_cell_and_escalation(spark):
-    """Grid strategy internals: (a) a hot point cell far above
-    max_points_per_task splits into salted subgroups with the pair
-    results unchanged; (b) points whose 3x3 neighborhood is empty
-    escalate and still resolve exactly (via knn_join's ring tail)."""
+    """Grid strategy internals, on both replication sides: (a) a hot
+    point cell far above max_points_per_task splits into salted lanes
+    with the pair results unchanged; (b) a point whose 3x3
+    neighbourhood is empty resolves exactly through the in-plan
+    brute-force tail."""
     rng = np.random.default_rng(3)
     n_p, n_t = 3000, 400
     # all points in one tight cluster (one grid cell at most res) plus
@@ -411,29 +449,56 @@ def test_knn_grid_salted_hot_cell_and_escalation(spark):
         order = np.lexsort((tgt_pd.target_id.to_numpy(), d))[:2]
         want[int(p.point_id)] = [int(tgt_pd.target_id[j]) for j in order]
 
-    # force tiny salting buckets so the hot cluster cell splits
-    out = spatial._knn_grid(
-        pts, tgt, 2, "point_id", "target_id", "lon", "lat", "t_lon", "t_lat",
-        max_points_per_task=200,
-    )
-    resolved = out.filter(F.col("target_id").isNotNull()).toPandas()
-    unres = out.filter(F.col("target_id").isNull()).toPandas()
-    assert int(unres["point_id"].iloc[0]) == n_p if len(unres) else True
-    for pid, grp in resolved.groupby("point_id"):
-        got = list(grp.sort_values(["_dist_m", "target_id"])["target_id"].astype(int))
-        assert got == want[int(pid)], pid
+    def check(out):
+        full = out.select("point_id", "target_id", "_dist_m").toPandas()
+        assert len(full) == 2 * (n_p + 1)
+        for pid, grp in full.groupby("point_id"):
+            got = list(grp.sort_values(["_dist_m", "target_id"])["target_id"].astype(int))
+            assert got == want[int(pid)], pid
 
+    # res 12 puts the whole cluster in a few cells; tiny salting lanes
+    # split them (the point-replicated side has 9 rows per point)
+    for replicate_points in (False, True):
+        check(
+            spatial._knn_grid(
+                pts, tgt, 2, "point_id", "target_id", "lon", "lat", "t_lon", "t_lat",
+                res=12, replicate_points=replicate_points, max_points_per_task=200,
+            )
+        )
     # full knn_join with forced grid strategy resolves EVERY point,
-    # including the escalated straggler
-    full = (
-        spatial.knn_join(pts, tgt, None, k=2, strategy="grid")
-        .select("point_id", "target_id", "_dist_m")
-        .toPandas()
+    # including the straggler
+    check(spatial.knn_join(pts, tgt, None, k=2, strategy="grid"))
+
+
+def test_knn_grid_plan_runs_no_job_until_consumed(spark, points_df):
+    """With both row-count hints and ``res``, the grid path is one lazy
+    plan on either replication side: building it submits no Spark job,
+    and the first job runs at ``collect()``."""
+    (pdf_s, pdf) = points_df
+    rng = np.random.default_rng(5)
+    tgt = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "target_id": np.arange(40),
+                "t_lon": rng.uniform(-122.52, -122.35, 40),
+                "t_lat": rng.uniform(37.70, 37.84, 40),
+            }
+        )
     )
-    assert len(full) == 2 * (n_p + 1)
-    for pid, grp in full.groupby("point_id"):
-        got = list(grp.sort_values(["_dist_m", "target_id"])["target_id"].astype(int))
-        assert got == want[int(pid)], pid
+    sc = spark.sparkContext
+    for n_targets in (40, 1_000):  # targets, then points replicated
+        group = f"knn-lazy-{n_targets}"
+        sc.setJobGroup(group, "kNN plan construction")
+        try:
+            out = spatial.knn_join(
+                pdf_s, tgt, res=14, k=1, strategy="grid",
+                n_points=len(pdf), n_targets=n_targets,
+            )
+            assert sc.statusTracker().getJobIdsForGroup(group) == [], n_targets
+            assert len(out.collect()) == len(pdf)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(group), n_targets
 
 
 def test_topk_by_dots_matches_full_lexsort():
