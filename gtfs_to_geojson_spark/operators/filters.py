@@ -6,11 +6,13 @@ direction_id, shape_id}`` through every table read
 small composition of ``filter`` + broadcast left-semi joins built once
 and reused — Catalyst pushes the equality predicates into the scans.
 
-Route and shape output write one file per group. A group is a row of a
-small group table: ``GROUP`` (its index) plus the equality keys of its
-``BaseQuery.with_eq``. ``query_trips`` joins trips to that table by the
-same rule, and every operator that takes ``groups`` carries ``GROUP``
-through its keys, so one plan computes every group at once.
+Every run writes one file per group. A group is a row of a small group
+table: ``GROUP`` (its index) plus the equality keys of its
+``BaseQuery.with_eq``; a run without per-group keys has one group
+(``one_group``). ``trip_facts`` joins trips to that table by the same
+rule and to stop_times once; every GTFS operator and format reads its
+``TripFacts`` and carries ``GROUP`` through its keys, so one plan
+computes every group at once.
 """
 
 from __future__ import annotations
@@ -83,20 +85,13 @@ def one_group(spark: SparkSession) -> DataFrame:
     return group_table(spark, [(0,)], f"{GROUP} int")
 
 
-def group_keys(groups: DataFrame | None) -> list[str]:
-    """Key columns that operators add when called with ``groups``."""
-    return [] if groups is None else [GROUP]
-
-
-def query_trips(trips: DataFrame, q: BaseQuery, groups: DataFrame | None = None) -> DataFrame:
+def query_trips(trips: DataFrame, q: BaseQuery, groups: DataFrame) -> DataFrame:
     """``apply_query`` on trips, then each trip tagged with the ``GROUP``
     of every group it belongs to. A group's null key matches every
     value, as ``with_eq`` drops None keys, so a trip with a null
     ``direction_id`` and a trip of direction 0 both belong to the
     route's null-direction group. Non-nullable keys stay equi-join keys."""
     t = apply_query(trips, q)
-    if groups is None:
-        return t
     keys = [f for f in groups.schema.fields if f.name != GROUP]
     g = broadcast(groups.select(GROUP, *[F.col(f.name).alias("_g_" + f.name) for f in keys]))
     if not keys:
@@ -110,34 +105,59 @@ def query_trips(trips: DataFrame, q: BaseQuery, groups: DataFrame | None = None)
     return t.join(g, cond).drop(*["_g_" + f.name for f in keys])
 
 
-def used_stop_ids(
-    stop_times: DataFrame, trips: DataFrame, q: BaseQuery, groups: DataFrame | None = None
-) -> DataFrame:
+@dataclass(frozen=True)
+class TripFacts:
+    """Which trips go to which output group, and what they touch — the
+    one derivation every GTFS operator and format reads.
+
+    * ``trips``: ``GROUP, trip_id, route_id, direction_id, shape_id``
+    * ``stop_rows``: ``trips`` joined to stop_times, adding ``stop_id,
+      stop_sequence``
+    * ``pairs``: distinct ``GROUP, shape_id, route_id`` of the trips
+      with a shape (J2, A4 DISTINCT)
+    * ``shaped``: the ``GROUP`` of every group whose trips reach a shape
+      in the shapes TABLE. The other groups get stop-derived lines: the
+      reference's early exit (geojson-utils.ts:212-215), decided per
+      group. A feed whose shapes file is missing or excluded at import
+      (README.md:161-169) still carries shape_ids on trips, and falls
+      back.
+    """
+
+    trips: DataFrame
+    stop_rows: DataFrame
+    pairs: DataFrame
+    shaped: DataFrame
+
+    def shapeless_stop_rows(self) -> DataFrame:
+        """The stop rows that stop-derived lines are built from: trips
+        without a shape_id, in the groups without shapes."""
+        return self.stop_rows.where(F.col("shape_id").isNull()).join(self.shaped, GROUP, "left_anti")
+
+
+def trip_facts(feed: dict[str, DataFrame], q: BaseQuery, groups: DataFrame) -> TripFacts:
+    """The trips of every group under ``q`` (``query_trips``) and their
+    stop rows. Ungrouped callers pass ``one_group`` and drop ``GROUP``."""
+    trips = query_trips(feed["trips"], q, groups).select(
+        GROUP, "trip_id", "route_id", "direction_id", "shape_id"
+    )
+    stop_rows = feed["stop_times"].select("trip_id", "stop_id", "stop_sequence").join(trips, "trip_id")
+    pairs = trips.where(F.col("shape_id").isNotNull()).select(GROUP, "shape_id", "route_id").distinct()
+    shaped = pairs.join(feed["shapes"], "shape_id", "left_semi").select(GROUP)
+    return TripFacts(trips, stop_rows, pairs, shaped)
+
+
+def filter_used_stops(stops: DataFrame, facts: TripFacts) -> DataFrame:
     """F4 — "Only stops which are used in one or more routes will be
-    output" (README.md:231; CHANGELOG v3.4.0). Distinct stop_ids of
-    stop_times whose trips survive the query, per group when grouped."""
-    keys = group_keys(groups)
-    t = query_trips(trips, q, groups).select("trip_id", *keys)
-    return stop_times.join(t, "trip_id").select(*keys, "stop_id").distinct()
-
-
-def filter_used_stops(
-    stops: DataFrame,
-    stop_times: DataFrame,
-    trips: DataFrame,
-    q: BaseQuery,
-    groups: DataFrame | None = None,
-) -> DataFrame:
-    """Stops restricted to used ones (F4), keeping parent stations whose
-    children are used (observed in examples/stops.geojson: parent
-    stations appear with empty routes). Grouped: per group, with
-    ``GROUP`` appended to the stop columns."""
-    keys = group_keys(groups)
-    cols = [*stops.columns, *keys]
-    direct = stops.join(used_stop_ids(stop_times, trips, q, groups), "stop_id").select(*cols)
+    output" (README.md:231; CHANGELOG v3.4.0): the stops of each group's
+    stop rows, with ``GROUP`` appended to the stop columns, plus the
+    parent stations whose children are used (observed in
+    examples/stops.geojson: parent stations appear with empty routes)."""
+    cols = [*stops.columns, GROUP]
+    used = facts.stop_rows.select(GROUP, "stop_id").distinct()
+    direct = stops.join(used, "stop_id").select(*cols)
     parents = (
         stops.join(
-            direct.select(*keys, F.col("parent_station").alias("stop_id"))
+            direct.select(GROUP, F.col("parent_station").alias("stop_id"))
             .where(F.col("stop_id").isNotNull())
             .distinct(),
             "stop_id",
@@ -145,4 +165,4 @@ def filter_used_stops(
         .filter(F.col("location_type") == 1)
         .select(*cols)
     )
-    return direct.unionByName(parents).dropDuplicates([*keys, "stop_id"])
+    return direct.unionByName(parents).dropDuplicates([GROUP, "stop_id"])

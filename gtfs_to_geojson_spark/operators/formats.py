@@ -6,9 +6,10 @@ dissolved formats, ``geoagg.dissolve_polygons``' bbox aggregation.
 
 ``groups`` says which files the features are for: its table has one
 row per file — ``GROUP`` plus the ``with_eq`` keys that select the
-file's trips (``filters.query_trips``). Without it, the call is the
-one-group case: every trip under ``q`` belongs to group 0, the same
-code with a one-row table.
+file's trips. Without it, the call is the one-group case: every trip
+under ``q`` belongs to group 0, the same code with a one-row table.
+Each format builds one ``filters.trip_facts`` and derives every
+relational input from it.
 
 Dispatch mirrors the reference's static format table
 (src/lib/gtfs-to-geojson.ts:73-113). Every format returns features as
@@ -28,7 +29,7 @@ from pyspark.sql import functions as F
 from .. import sinks
 from ..functions import geo
 from . import geoagg, relational
-from .filters import GROUP, BaseQuery, filter_used_stops, one_group, query_trips
+from .filters import GROUP, BaseQuery, TripFacts, filter_used_stops, one_group, trip_facts
 
 
 def feature_json(props: Column, geom_type: str, coords: Column) -> Column:
@@ -74,10 +75,8 @@ def _agency(g: Groups) -> Column:
     return F.lit(g.agency_name).alias("agency_name")
 
 
-def _stop_features(feed, cfg, q: BaseQuery, g: Groups) -> DataFrame:
-    sw = relational.stops_with_routes(
-        feed["stops"], feed["stop_times"], feed["trips"], feed["routes"], q, g.table
-    )
+def _stop_features(feed, cfg, facts: TripFacts, g: Groups) -> DataFrame:
+    sw = relational.stops_with_routes(feed["stops"], feed["routes"], facts)
     coords = geo.round_coords_point(
         F.array("stop_lon", "stop_lat"), cfg.coordinate_precision
     )
@@ -85,64 +84,41 @@ def _stop_features(feed, cfg, q: BaseQuery, g: Groups) -> DataFrame:
     return sw.select(GROUP, feature_json(props, "Point", coords))
 
 
-def _unshaped(feed, q: BaseQuery, groups: DataFrame) -> DataFrame:
-    """The groups that get stop-derived lines: those whose trips reach
-    no shape in the shapes table — the reference's early exit
-    (geojson-utils.ts:212-215: if the shapes query yields anything,
-    stop-derived lines are skipped), decided per group inside the plan.
-    It probes the shapes TABLE, not just trips.shape_id — a feed whose
-    shapes file is missing or excluded at import (README.md:161-169)
-    still carries shape_ids on trips, and must fall back."""
-    shaped = (
-        relational.route_shape_pairs(feed["trips"], q, groups)
-        .join(feed["shapes"], "shape_id", "left_semi")
-        .select(GROUP)
-    )
-    return groups.join(shaped, GROUP, "left_anti")
-
-
-def _route_lines(feed, q: BaseQuery, groups: DataFrame) -> tuple[DataFrame, DataFrame]:
+def _route_lines(feed, facts: TripFacts) -> tuple[DataFrame, DataFrame]:
     """Route geometry per group: MultiLineStrings from shapes, and
     stop-derived LineStrings per (route, direction) for the groups
     without shapes."""
-    ml = relational.route_multilinestrings(
-        feed["shapes"], feed["trips"], feed["routes"], feed.get("route_attributes"), q, groups
-    )
-    sd = relational.stop_derived_linestrings(
-        feed["stops"], feed["stop_times"], feed["trips"], feed["routes"],
-        feed.get("route_attributes"), q, _unshaped(feed, q, groups),
-    )
+    ra = feed.get("route_attributes")
+    ml = relational.route_multilinestrings(feed["shapes"], feed["routes"], ra, facts)
+    sd = relational.stop_derived_linestrings(feed["stops"], feed["routes"], ra, facts)
     return ml, sd
 
 
-def _route_points(feed, q: BaseQuery, groups: DataFrame) -> DataFrame:
+def _route_points(feed, facts: TripFacts) -> DataFrame:
     """(GROUP, lon, lat) of every vertex of the groups' route lines —
     the point set of ``_route_lines`` without assembling the lines:
     the shape points of the route's shapes, or the stops the
     stop-derived lines pass through. As there, only routes present in
     the routes table count."""
     routes = feed["routes"].select("route_id")
-    pairs = relational.route_shape_pairs(feed["trips"], q, groups).join(routes, "route_id", "left_semi")
+    pairs = relational.route_shape_pairs(facts).join(routes, "route_id", "left_semi")
     shape_pts = feed["shapes"].join(pairs, "shape_id").select(
         GROUP, F.col("shape_pt_lon").alias("lon"), F.col("shape_pt_lat").alias("lat")
     )
-    trips = (
-        query_trips(feed["trips"], q, _unshaped(feed, q, groups))
-        .filter(F.col("shape_id").isNull())
+    stop_pts = (
+        facts.shapeless_stop_rows()
         .join(routes, "route_id", "left_semi")
-        .select("trip_id", GROUP)
-    )
-    stop_pts = feed["stop_times"].join(trips, "trip_id").join(feed["stops"], "stop_id").select(
-        GROUP, F.col("stop_lon").alias("lon"), F.col("stop_lat").alias("lat")
+        .join(feed["stops"], "stop_id")
+        .select(GROUP, F.col("stop_lon").alias("lon"), F.col("stop_lat").alias("lat"))
     )
     return shape_pts.unionByName(stop_pts)
 
 
-def route_line_rows(feed, q: BaseQuery, groups: DataFrame) -> DataFrame:
+def route_line_rows(feed, facts: TripFacts) -> DataFrame:
     """Per-route LineString rows of every group (shape MultiLineStrings
     exploded, or stop-derived) — input to lines-buffer /
     lines-dissolved."""
-    ml, sd = _route_lines(feed, q, groups)
+    ml, sd = _route_lines(feed, facts)
     exploded = ml.select(
         *[c for c in ml.columns if c != "coordinates"],
         F.explode("coordinates").alias("coordinates"),
@@ -150,11 +126,11 @@ def route_line_rows(feed, q: BaseQuery, groups: DataFrame) -> DataFrame:
     return exploded.unionByName(sd, allowMissingColumns=True)
 
 
-def _line_features(feed, cfg, q: BaseQuery, g: Groups) -> DataFrame:
+def _line_features(feed, cfg, facts: TripFacts, g: Groups) -> DataFrame:
     """Lines: MultiLineString per route from shapes; per-group fallback
     to stop-derived LineStrings when the group's trips have no shapes."""
     simp = geoagg.simplify_lines_udf(cfg.coordinate_precision)
-    ml, sd = _route_lines(feed, q, g.table)
+    ml, sd = _route_lines(feed, facts)
     if simp is not None:
         # simplify each member line (pandas UDF is per-LineString):
         # posexplode → RDP → re-collect in position order
@@ -182,12 +158,17 @@ def _line_features(feed, cfg, q: BaseQuery, g: Groups) -> DataFrame:
     )
 
 
+def _facts(feed, q: BaseQuery, groups: Groups | None) -> tuple[TripFacts, Groups]:
+    g = groups or Groups.single(feed)
+    return trip_facts(feed, q, g.table), g
+
+
 def fmt_stops(feed, cfg, q: BaseQuery, groups: Groups | None = None) -> DataFrame:
-    return _stop_features(feed, cfg, q, groups or Groups.single(feed))
+    return _stop_features(feed, cfg, *_facts(feed, q, groups))
 
 
 def fmt_lines(feed, cfg, q: BaseQuery, groups: Groups | None = None) -> DataFrame:
-    return _line_features(feed, cfg, q, groups or Groups.single(feed))
+    return _line_features(feed, cfg, *_facts(feed, q, groups))
 
 
 def fmt_lines_and_stops(feed, cfg, q: BaseQuery, groups: Groups | None = None) -> DataFrame:
@@ -195,9 +176,9 @@ def fmt_lines_and_stops(feed, cfg, q: BaseQuery, groups: Groups | None = None) -
     formats/lines-and-stops.ts:16-17 via mergeGeojson,
     geojson-utils.ts:112-114): union-all of line + stop features, lines
     first in each file."""
-    g = groups or Groups.single(feed)
-    lines = _line_features(feed, cfg, q, g).withColumn(sinks.ORDER, F.lit(0))
-    stops = _stop_features(feed, cfg, q, g).withColumn(sinks.ORDER, F.lit(1))
+    facts, g = _facts(feed, q, groups)
+    lines = _line_features(feed, cfg, facts, g).withColumn(sinks.ORDER, F.lit(0))
+    stops = _stop_features(feed, cfg, facts, g).withColumn(sinks.ORDER, F.lit(1))
     return lines.unionByName(stops)
 
 
@@ -206,8 +187,8 @@ def fmt_envelope(feed, cfg, q: BaseQuery, groups: Groups | None = None) -> DataF
     ``{agency_name}`` only (reference formats/envelope.ts;
     examples/envelope.geojson). The bbox is taken over the lines'
     vertices directly."""
-    g = groups or Groups.single(feed)
-    b = geoagg.envelope_bounds(_route_points(feed, q, g.table), keys=[GROUP])
+    facts, g = _facts(feed, q, groups)
+    b = geoagg.envelope_bounds(_route_points(feed, facts), keys=[GROUP])
     p = cfg.coordinate_precision
     rnd = (lambda c: F.round(c, p)) if p is not None else (lambda c: c)
     coords = geoagg.bbox_polygon_col(
@@ -222,8 +203,8 @@ def fmt_convex(feed, cfg, q: BaseQuery, groups: Groups | None = None) -> DataFra
     """A2 — convex hull Polygon over used stops; no feature when
     degenerate (<3 distinct points — reference warns and emits null,
     formats/convex.ts:13-22)."""
-    g = groups or Groups.single(feed)
-    used = filter_used_stops(feed["stops"], feed["stop_times"], feed["trips"], q, g.table)
+    facts, g = _facts(feed, q, groups)
+    used = filter_used_stops(feed["stops"], facts)
     hulls = geoagg.convex_hulls(used, keys=[GROUP])
     coords = geo.round_coords_polygon(F.array("ring"), cfg.coordinate_precision)
     return hulls.select(GROUP, feature_json(F.struct(_agency(g)), "Polygon", coords))
@@ -233,10 +214,8 @@ def fmt_stops_buffer(feed, cfg, q: BaseQuery, groups: Groups | None = None) -> D
     """G3 — Polygon per used stop, radius bufferSizeMeters (default 400,
     reference src/lib/gtfs-to-geojson.ts:34; formats/stops-buffer.ts:9).
     Ring construction is a pure Column expression — stays in codegen."""
-    g = groups or Groups.single(feed)
-    sw = relational.stops_with_routes(
-        feed["stops"], feed["stop_times"], feed["trips"], feed["routes"], q, g.table
-    )
+    facts, g = _facts(feed, q, groups)
+    sw = relational.stops_with_routes(feed["stops"], feed["routes"], facts)
     ring = geoagg.stop_buffer_ring_col(
         F.col("stop_lat"), F.col("stop_lon"), cfg.buffer_size_meters
     )
@@ -245,8 +224,8 @@ def fmt_stops_buffer(feed, cfg, q: BaseQuery, groups: Groups | None = None) -> D
     return sw.select(GROUP, feature_json(props, "Polygon", coords))
 
 
-def _line_buffers(feed, cfg, q: BaseQuery, g: Groups) -> DataFrame:
-    lines = route_line_rows(feed, q, g.table)
+def _line_buffers(feed, cfg, facts: TripFacts) -> DataFrame:
+    lines = route_line_rows(feed, facts)
     keys = [c for c in lines.columns if c != "coordinates"]
     return geoagg.line_buffer_polygons(lines, cfg.buffer_size_meters, keys)
 
@@ -254,8 +233,8 @@ def _line_buffers(feed, cfg, q: BaseQuery, g: Groups) -> DataFrame:
 def fmt_lines_buffer(feed, cfg, q: BaseQuery, groups: Groups | None = None) -> DataFrame:
     """G3 — Polygon per route buffering its line
     (reference formats/lines-buffer.ts:12)."""
-    g = groups or Groups.single(feed)
-    buf = _line_buffers(feed, cfg, q, g)
+    facts, g = _facts(feed, q, groups)
+    buf = _line_buffers(feed, cfg, facts)
     coords = geo.round_coords_polygon(F.col("polygon"), cfg.coordinate_precision)
     prop_cols = [c for c in ROUTE_PROP_COLS if c in buf.columns]
     props = F.struct(*[F.col(c) for c in prop_cols], _agency(g))
@@ -274,8 +253,8 @@ def _dissolved_features(cfg, polys: DataFrame, g: Groups) -> DataFrame:
 def fmt_stops_dissolved(feed, cfg, q: BaseQuery, groups: Groups | None = None) -> DataFrame:
     """A3 — union of all stop buffers (reference
     formats/stops-dissolved.ts:12-14 via unionGeojson)."""
-    g = groups or Groups.single(feed)
-    used = filter_used_stops(feed["stops"], feed["stop_times"], feed["trips"], q, g.table)
+    facts, g = _facts(feed, q, groups)
+    used = filter_used_stops(feed["stops"], facts)
     ring = geoagg.stop_buffer_ring_col(F.col("stop_lat"), F.col("stop_lon"), cfg.buffer_size_meters)
     return _dissolved_features(cfg, used.select(GROUP, F.array(ring).alias("polygon")), g)
 
@@ -283,8 +262,8 @@ def fmt_stops_dissolved(feed, cfg, q: BaseQuery, groups: Groups | None = None) -
 def fmt_lines_dissolved(feed, cfg, q: BaseQuery, groups: Groups | None = None) -> DataFrame:
     """A3 — union of all route-line buffers (reference
     formats/lines-dissolved.ts:16-22: buffer → simplify → union)."""
-    g = groups or Groups.single(feed)
-    return _dissolved_features(cfg, _line_buffers(feed, cfg, q, g).select(GROUP, "polygon"), g)
+    facts, g = _facts(feed, q, groups)
+    return _dissolved_features(cfg, _line_buffers(feed, cfg, facts).select(GROUP, "polygon"), g)
 
 
 FORMATS = {

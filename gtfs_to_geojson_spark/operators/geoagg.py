@@ -269,13 +269,18 @@ def dissolve_polygons(
         return pd.DataFrame({**{k: [v] for k, v in zip(keys, key)}, "cell": [key[len(keys)]],
                              poly_col: [_union_pdf(pdf)]})
 
+    def merge_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        outs, holes = _merge_parts(sorted(pdf[poly_col], key=_poly_order))
+        return pd.DataFrame({**{k: [v] for k, v in zip(keys, key)}, "cell": [key[len(keys)]],
+                             poly_col: [[r.tolist() for r in outs + holes]]})
+
     cell_schema = ", ".join([*key_types, "cell long", poly_t])
     # grouped-map skew (SURVEY §7 hard part 4): the union kernel is
     # superlinear in rings-per-group, so one mega-city cell dominates
     # the stage. When any cell exceeds the salt target, partial unions
     # run per (key, cell, salt) first — union is associative, so salted
     # partials + per-cell merge + final merge is exact.
-    cell_groups = with_cell.groupBy(*keys, "cell")
+    cell_groups, kernel = with_cell.groupBy(*keys, "cell"), cell_kernel
     if salt_target_rows is not None and max(r.n for r in stats) > salt_target_rows:
         # one struct key, so that null key values still join
         kcell = with_cell.withColumn("_kcell", F.struct(*keys, "cell"))
@@ -286,21 +291,12 @@ def dissolve_polygons(
                 salted.groupBy(*keys, "cell", "_salt").applyInPandas(cell_kernel, cell_schema)
                 .groupBy(*keys, "cell")
             )
-    cell_results = cell_groups.applyInPandas(cell_kernel, cell_schema)
+            kernel = merge_kernel
+    cell_results = cell_groups.applyInPandas(kernel, cell_schema)
 
     def final_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
         # one entry per cell, tiny; cell order makes the merge deterministic
-        per_cell = [[_ring_array(ring) for ring in poly] for poly in pdf.sort_values("cell")[poly_col] if len(poly)]
-        outers = [r for rings in per_cell for r in rings if geom.signed_area(r) >= 0]
-        merged: list[np.ndarray] = []
-        for comp in geom.connected_components(outers):
-            part, _ok = geom.union_or_parts([outers[i] for i in comp])
-            merged.extend(part)
-        outs = [r for r in merged if geom.signed_area(r) >= 0] or merged
-        holes = [r for r in merged if geom.signed_area(r) < 0]
-        for r in _open_holes(per_cell):
-            (outs if geom.signed_area(r) >= 0 else holes).append(r)
-        parts = _group_holes(outs, holes)
+        parts = _group_holes(*_merge_parts(pdf.sort_values("cell")[poly_col]))
         return pd.DataFrame(
             {**{k: [v] * len(parts) for k, v in zip(keys, key)}, poly_col: pd.Series(parts, dtype=object)}
         )
@@ -308,25 +304,52 @@ def dissolve_polygons(
     return cell_results.groupBy(*keys).applyInPandas(final_kernel, ", ".join([*key_types, poly_t]))
 
 
-def _open_holes(per_cell: list[list[np.ndarray]]) -> list[np.ndarray]:
-    """What stays open of each cell's holes once all cells merge. A
-    cell's union sees only its own rings, so another cell's polygons
-    may cover part or all of a hole it encloses, and the cross-cell
-    union of outer rings cannot see holes at all. Each hole loses what
-    the other cells' polygons cover; the rest comes back as CW hole
-    rings, plus a CCW ring for each island of cover left inside one. A
-    hole whose difference cannot be traced is dropped, so the merge
+def _merge_parts(polys) -> tuple[list[np.ndarray], list[np.ndarray]]:
+    """(outer rings, hole rings) of the union of partial unions, each a
+    flat ring list (outers CCW, holes CW): the salted partials of one
+    cell, or the cells of one key. The outer rings are unioned; holes
+    come back from ``_open_holes``, as no union of outer rings sees them."""
+    per_part = [[_ring_array(ring) for ring in poly] for poly in polys if len(poly)]
+    outers = [r for rings in per_part for r in rings if geom.signed_area(r) >= 0]
+    merged: list[np.ndarray] = []
+    for comp in geom.connected_components(outers):
+        part, _ok = geom.union_or_parts([outers[i] for i in comp])
+        merged.extend(part)
+    outs = [r for r in merged if geom.signed_area(r) >= 0] or merged
+    holes = [r for r in merged if geom.signed_area(r) < 0]
+    for r in _open_holes(per_part):
+        (outs if geom.signed_area(r) >= 0 else holes).append(r)
+    return outs, holes
+
+
+def _open_holes(per_part: list[list[np.ndarray]]) -> list[np.ndarray]:
+    """What stays open of each part's holes once all parts merge. A
+    part's union sees only its own rings, so another part's polygons
+    may cover part or all of a hole it encloses, and the union of outer
+    rings cannot see holes at all (it also swallows a part's islands,
+    its outer rings inside its own holes). Each hole loses what the
+    other parts' polygons and its own islands cover; the rest comes back
+    as CW hole rings, plus a CCW ring for each island of cover left
+    inside one. A region open in several parts sits in a hole of each,
+    so it is kept once, for the first part whose outer rings enclose it:
+    a later part's hole also loses the earlier parts' whole outer area.
+    A hole whose difference cannot be traced is dropped, so the merge
     errs toward covering too much, never toward a hole over a buffer."""
-    boxes = [geom.bbox(np.vstack(rings)) for rings in per_cell]
+    boxes = [geom.bbox(np.vstack(rings)) for rings in per_part]
     out: list[np.ndarray] = []
-    for i, rings in enumerate(per_cell):
+    for i, rings in enumerate(per_part):
+        own_outers = [r for r in rings if geom.signed_area(r) >= 0]
         for hole in (r for r in rings if geom.signed_area(r) < 0):
             hx0, hy0, hx1, hy1 = geom.bbox(hole)
+            islands = [r for r in own_outers if geom.points_in_ring(r[:1, 0], r[:1, 1], hole)[0]]
             left = [hole[::-1]]
             try:
+                if islands:
+                    left = geom.polygon_difference(left, islands)
                 for j, (x0, y0, x1, y1) in enumerate(boxes):
                     if left and j != i and x0 <= hx1 and hx0 <= x1 and y0 <= hy1 and hy0 <= y1:
-                        left = geom.polygon_difference(left, per_cell[j])
+                        cover = per_part[j] if j > i else [r for r in per_part[j] if geom.signed_area(r) >= 0]
+                        left = geom.polygon_difference(left, cover)
             except geom.UnionError:
                 continue
             out.extend(r[::-1] for r in left)

@@ -5,9 +5,9 @@ All ordering-sensitive reference semantics (uniqBy first-wins, maxBy,
 stoptimes order, toposort fallback) are made explicitly deterministic —
 never dependent on Spark row order (SURVEY.md §7 hard part 2).
 
-The trip-driven operators take an optional group table (see
-``filters.query_trips``); with it, ``GROUP`` joins every key they
-group, join or deduplicate on.
+The trip-driven operators read one ``filters.TripFacts`` (the grouped
+trips and their stop rows); ``GROUP`` joins every key they group, join
+or deduplicate on.
 """
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from .filters import BaseQuery, apply_query, filter_used_stops, group_keys, query_trips
+from .filters import GROUP, TripFacts, filter_used_stops
 
 
 def route_props(routes: DataFrame, route_attributes: DataFrame | None) -> DataFrame:
@@ -47,40 +47,19 @@ ROUTE_STRUCT_COLS = [
 ]
 
 
-def stop_route_links(
-    stop_times: DataFrame, trips: DataFrame, q: BaseQuery, groups: DataFrame | None = None
-) -> DataFrame:
-    """Distinct (stop_id, route_id) pairs under the query (the J1 core)."""
-    keys = group_keys(groups)
-    t = query_trips(trips, q, groups).select("trip_id", "route_id", *keys)
-    return (
-        stop_times.join(t, "trip_id")
-        .select(*keys, "stop_id", "route_id")
-        .distinct()
-    )
-
-
-def stops_with_routes(
-    stops: DataFrame,
-    stop_times: DataFrame,
-    trips: DataFrame,
-    routes: DataFrame,
-    q: BaseQuery,
-    groups: DataFrame | None = None,
-) -> DataFrame:
+def stops_with_routes(stops: DataFrame, routes: DataFrame, facts: TripFacts) -> DataFrame:
     """J1 + A10 — used stops, each with a sorted array of serving-route
     structs (examples/stops.geojson: per-stop ``routes`` array; parent
     stations carry an empty one). Route dimension is broadcast."""
-    keys = group_keys(groups)
-    links = stop_route_links(stop_times, trips, q, groups)
+    links = facts.stop_rows.select(GROUP, "stop_id", "route_id").distinct()
     rp = route_props(routes, None).select(*ROUTE_STRUCT_COLS)
     stop_routes = (
         links.join(broadcast(rp), "route_id")
-        .groupBy(*keys, "stop_id")
+        .groupBy(GROUP, "stop_id")
         .agg(F.sort_array(F.collect_set(F.struct(*ROUTE_STRUCT_COLS))).alias("routes"))
     )
-    used = filter_used_stops(stops, stop_times, trips, q, groups)
-    return used.join(stop_routes, [*keys, "stop_id"], "left").withColumn(
+    used = filter_used_stops(stops, facts)
+    return used.join(stop_routes, [GROUP, "stop_id"], "left").withColumn(
         "routes", F.coalesce(F.col("routes"), F.array().cast(stop_routes.schema["routes"].dataType))
     )
 
@@ -110,33 +89,24 @@ def shape_linestrings(shapes: DataFrame) -> DataFrame:
     )
 
 
-def route_shape_pairs(trips: DataFrame, q: BaseQuery, groups: DataFrame | None = None) -> DataFrame:
-    """J2 — distinct shape→route pairs under the query (A4 DISTINCT)."""
-    return (
-        query_trips(trips, q, groups)
-        .where(F.col("shape_id").isNotNull())
-        .select(*group_keys(groups), "shape_id", "route_id")
-        .distinct()
-    )
+def route_shape_pairs(facts: TripFacts) -> DataFrame:
+    """J2 — distinct ``GROUP, shape_id, route_id`` under the query (A4
+    DISTINCT)."""
+    return facts.pairs
 
 
 def route_multilinestrings(
-    shapes: DataFrame,
-    trips: DataFrame,
-    routes: DataFrame,
-    route_attributes: DataFrame | None,
-    q: BaseQuery,
-    groups: DataFrame | None = None,
+    shapes: DataFrame, routes: DataFrame, route_attributes: DataFrame | None, facts: TripFacts
 ) -> DataFrame:
     """J2 + A9 — one MultiLineString per route: every shape LineString
     of the route collected (sorted by shape_id for determinism), route
     props + optional attributes attached (examples/lines.geojson).
     Each shape is assembled once, however many groups use it."""
-    pairs = route_shape_pairs(trips, q, groups)
+    pairs = route_shape_pairs(facts)
     ls = shape_linestrings(shapes.join(pairs.select("shape_id").distinct(), "shape_id", "left_semi"))
     per_route = (
         ls.join(pairs, "shape_id")
-        .groupBy(*group_keys(groups), "route_id")
+        .groupBy(GROUP, "route_id")
         .agg(
             F.transform(
                 F.array_sort(
@@ -159,37 +129,6 @@ def headsign_dedup(trips_proj: DataFrame) -> DataFrame:
         trips_proj.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
-    )
-
-
-def longest_trip_per_route(stop_times: DataFrame, trips: DataFrame, q: BaseQuery) -> DataFrame:
-    """A6/O3 — argmax: the trip with the most stoptimes per
-    (route_id, direction_id) (reference maxBy fallback,
-    geojson-utils.ts:204-206); ties broken by trip_id."""
-    t = apply_query(trips, q).select("trip_id", "route_id", "direction_id")
-    counts = (
-        stop_times.join(t, "trip_id")
-        .groupBy("route_id", "direction_id", "trip_id")
-        .agg(F.count("*").alias("n_stoptimes"))
-    )
-    w = Window.partitionBy("route_id", "direction_id").orderBy(
-        F.desc("n_stoptimes"), F.asc("trip_id")
-    )
-    return (
-        counts.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-    )
-
-
-def ordered_stops_per_trip(stop_times: DataFrame) -> DataFrame:
-    """A7/O1 — per-trip stop_ids ordered by stop_sequence, collected
-    without a wide sort (sort_array over struct)."""
-    return stop_times.groupBy("trip_id").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("stop_sequence").alias("seq"), F.col("stop_id").alias("sid")))
-            ),
-            lambda x: x["sid"],
-        ).alias("stop_ids")
     )
 
 
@@ -244,23 +183,16 @@ def _toposort_stop_order(pdf: pd.DataFrame) -> list[str]:
 
 
 def stop_derived_linestrings(
-    stops: DataFrame,
-    stop_times: DataFrame,
-    trips: DataFrame,
-    routes: DataFrame,
-    route_attributes: DataFrame | None,
-    q: BaseQuery,
-    groups: DataFrame | None = None,
+    stops: DataFrame, routes: DataFrame, route_attributes: DataFrame | None, facts: TripFacts
 ) -> DataFrame:
-    """Stop-derived LineString per (route_id, direction_id) for routes
-    without shapes (reference geojson-utils.ts:209-253: toposorted stop
-    graph, cycle → longest trip, then position-preserving stop lookup
-    J4). Grouped-map kernel per route — each group's graph is tiny, so
-    imperative logic is appropriate here and nowhere else."""
-    keys = [*group_keys(groups), "route_id", "direction_id"]
-    t = query_trips(trips, q, groups).filter(F.col("shape_id").isNull()).select("trip_id", *keys)
+    """Stop-derived LineString per (route_id, direction_id) of the
+    groups without shapes (reference geojson-utils.ts:209-253:
+    toposorted stop graph, cycle → longest trip, then position-preserving
+    stop lookup J4). Grouped-map kernel per route — each group's graph
+    is tiny, so imperative logic is appropriate here and nowhere else."""
+    keys = [GROUP, "route_id", "direction_id"]
     st = (
-        stop_times.join(t, "trip_id")
+        facts.shapeless_stop_rows()
         .join(stops.select("stop_id", "stop_lat", "stop_lon"), "stop_id")
         .select(*keys, "trip_id", "stop_sequence", "stop_id", "stop_lat", "stop_lon")
     )

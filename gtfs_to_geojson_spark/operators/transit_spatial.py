@@ -15,14 +15,23 @@ from pyspark.sql import functions as F
 
 from .. import cells
 from . import geoagg, relational, spatial
-from .filters import BaseQuery, filter_used_stops, one_group
+from .filters import GROUP, BaseQuery, TripFacts, filter_used_stops, one_group, trip_facts
+
+
+def _facts(feed, q: BaseQuery | None) -> TripFacts:
+    """The run's trip facts as one group (``GROUP`` is 0 everywhere)."""
+    return trip_facts(feed, q or BaseQuery(), one_group(feed["trips"].sparkSession))
+
+
+def _used_stops(feed, facts: TripFacts) -> DataFrame:
+    return filter_used_stops(feed["stops"], facts).drop(GROUP)
 
 
 def route_envelopes(feed, q: BaseQuery) -> DataFrame:
     """Per-route bbox (the envelope format's geometry, per route
     instead of per agency): min/max over every shape point of the
     route — one map-side agg, no UDF."""
-    pairs = relational.route_shape_pairs(feed["trips"], q)
+    pairs = relational.route_shape_pairs(_facts(feed, q)).drop(GROUP)
     pts = feed["shapes"].join(pairs, "shape_id")
     return pts.groupBy("route_id").agg(
         F.min("shape_pt_lon").alias("min_lon"),
@@ -36,8 +45,7 @@ def stops_in_route_envelopes(feed, q: BaseQuery | None = None, res: int = 15) ->
     """J6 at the transit level: every (stop, route) pair where the
     used stop falls inside the route's envelope — the headline join of
     BASELINE.json, on real GTFS geometry."""
-    q = q or BaseQuery()
-    stops = filter_used_stops(feed["stops"], feed["stop_times"], feed["trips"], q).select(
+    stops = _used_stops(feed, _facts(feed, q)).select(
         "stop_id", F.col("stop_lon").alias("lon"), F.col("stop_lat").alias("lat")
     )
     env = route_envelopes(feed, q)
@@ -62,13 +70,13 @@ def snap_stops_to_shapes(
     strategy choice: upper bounds on the used stops and the shape
     vertices. A caller that knows its feed sizes passes them; a missing
     hint is counted here from the whole stops / shapes table."""
-    q = q or BaseQuery()
-    stops = filter_used_stops(feed["stops"], feed["stop_times"], feed["trips"], q).select(
+    facts = _facts(feed, q)
+    stops = _used_stops(feed, facts).select(
         F.col("stop_id").alias("point_id"),
         F.col("stop_lon").alias("lon"),
         F.col("stop_lat").alias("lat"),
     )
-    pairs = relational.route_shape_pairs(feed["trips"], q)
+    pairs = relational.route_shape_pairs(facts)
     vertices = (
         feed["shapes"]
         .join(pairs.select("shape_id").distinct(), "shape_id", "left_semi")
@@ -152,8 +160,7 @@ def route_buffer_polygons(feed, q: BaseQuery | None = None, meters: float = 400.
     a join-ready (route_id, polygon) frame."""
     from .formats import route_line_rows
 
-    q = q or BaseQuery()
-    lines = route_line_rows(feed, q, one_group(feed["trips"].sparkSession))
+    lines = route_line_rows(feed, _facts(feed, q))
     buf = geoagg.line_buffer_polygons(lines, meters, ["route_id"])
     return buf.select("route_id", "polygon")
 

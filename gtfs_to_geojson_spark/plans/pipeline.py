@@ -12,7 +12,7 @@ builds a group table, one row per output file:
 
 File names are assigned on the driver in sorted key order (S7, with the
 duplicate index). The format then computes every group's features in
-one DataFrame with the group index as a column (``operators/filters``
+one DataFrame with the group index as a column (``filters.trip_facts``
 joins trips to groups), and one driver-side sink streams it into the
 files. The job count of a run does not grow with the number of groups.
 """
@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .. import sinks
 from ..operators import formats as fmt_mod
 from ..operators import relational
-from ..operators.filters import GROUP, BaseQuery, apply_query, group_table, one_group, service_window
+from ..operators.filters import GROUP, BaseQuery, apply_query, group_table, one_group, service_window, trip_facts
 from .run_spec import RunSpec
 
 
@@ -83,7 +83,7 @@ def _groups(spark, feed, cfg: RunSpec, q: BaseQuery, agency: str | None) -> tupl
     if cfg.output_type == "shape":
         # DISTINCT shape_ids (A4; reference ts:132), one file per shape
         shape_ids = sorted(
-            r[0] for r in relational.route_shape_pairs(feed["trips"], q)
+            r[0] for r in relational.route_shape_pairs(trip_facts(feed, q, one_group(spark)))
             .select("shape_id").distinct().collect()
         )
         rows = list(enumerate(shape_ids))

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import _sink
+
 IMAGE_SCHEMA = (
     "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long"
 )
@@ -89,17 +91,9 @@ def run_windowed_counts_to_parquet(
     """Append-mode windowed sink: only watermark-closed windows are
     emitted; restart resumes from the checkpoint's state store."""
     counts = stream_windowed_tile_counts(spark, input_dir, res)
-    q = (
-        counts.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _sink.start(
+        counts.writeStream.format("parquet").option("path", output_dir), checkpoint_dir, timeout_s
     )
-    if timeout_s is not None:
-        q.awaitTermination(timeout_s)
-    return q
 
 
 def run_stream_to_parquet(
@@ -116,17 +110,9 @@ def run_stream_to_parquet(
     the processed-files log, so a restart resumes without recompute).
     Returns the StreamingQuery (caller stops it / awaits timeout)."""
     assigned = stream_tile_assignments(spark, input_dir, res, max_files_per_trigger)
-    q = (
-        assigned.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _sink.start(
+        assigned.writeStream.format("parquet").option("path", output_dir), checkpoint_dir, timeout_s
     )
-    if timeout_s is not None:
-        q.awaitTermination(timeout_s)
-    return q
 
 
 def stream_decode_tile_assignments(
@@ -162,17 +148,9 @@ def run_decode_stream_to_parquet(
     assigned = stream_decode_tile_assignments(
         spark, input_dir, res, max_files_per_trigger
     )
-    q = (
-        assigned.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _sink.start(
+        assigned.writeStream.format("parquet").option("path", output_dir), checkpoint_dir, timeout_s
     )
-    if timeout_s is not None:
-        q.awaitTermination(timeout_s)
-    return q
 
 
 def stream_dedup_first_seen(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -229,17 +207,9 @@ def run_stream_dedup_to_parquet(
     """Append sink for the stateful dedup; the checkpoint's state store
     carries seen-phash state across restarts (exactly-once emission)."""
     deduped = stream_dedup_first_seen(spark, input_dir)
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _sink.start(
+        deduped.writeStream.format("parquet").option("path", output_dir), checkpoint_dir, timeout_s
     )
-    if timeout_s is not None:
-        q.awaitTermination(timeout_s)
-    return q
 
 
 BOX_SCHEMA = "bid long, min_lon double, min_lat double, max_lon double, max_lat double"
@@ -284,17 +254,9 @@ def run_envelope_stream_to_parquet(
     """Append-mode overlay sink; availableNow drains the backlog and
     the checkpoint makes a second invocation process ONLY new drops."""
     out = stream_envelope_assignments(spark, input_dir, zones, res)
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _sink.start(
+        out.writeStream.format("parquet").option("path", output_dir), checkpoint_dir, timeout_s
     )
-    if timeout_s is not None:
-        q.awaitTermination(timeout_s)
-    return q
 
 
 POINT_SCHEMA = "point_id long, lon double, lat double"
@@ -347,14 +309,10 @@ def run_rasterize_stream_to_memory(
     counts = stream_rasterize_counts(
         spark, input_dir, tile_res, px_bits, max_files_per_trigger
     )
-    q = (
+    return _sink.start(
         counts.writeStream.format("memory")
         .queryName(table_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
+        checkpoint_dir,
+        timeout_s,
     )
-    if timeout_s is not None:
-        q.awaitTermination(timeout_s)
-    return q

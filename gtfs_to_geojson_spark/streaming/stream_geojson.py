@@ -23,6 +23,7 @@ from ..operators.filters import BaseQuery
 from ..operators.formats import fmt_stops
 from ..plans.run_spec import RunSpec
 from ..sinks import write_geojson_groups
+from . import _sink
 
 
 def stream_stops(spark: SparkSession, input_dir: str, stops_schema):
@@ -59,12 +60,4 @@ def run_stream_stops_geojson(
             feats, [os.path.join(out_dir, f"stops_batch_{batch_id:06d}.geojson")]
         )
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if timeout_s is not None:
-        q.awaitTermination(timeout_s)
-    return q
+    return _sink.start(stream.writeStream.foreachBatch(handle), checkpoint_dir, timeout_s)

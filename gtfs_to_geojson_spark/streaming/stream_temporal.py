@@ -19,6 +19,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from . import _sink
+
 EVENT_SCHEMA = "event_id long, t_us long, user_id long, event_type string"
 
 
@@ -78,15 +80,10 @@ def run_stream_asof_to_parquet(
     checkpoint_dir: str,
     timeout_s: float | None = None,
 ):
-    q = (
+    return _sink.start(
         stream_asof_enrich(spark, input_dir)
         .writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .option("path", output_dir),
+        checkpoint_dir,
+        timeout_s,
     )
-    if timeout_s is not None:
-        q.awaitTermination(timeout_s)
-    return q

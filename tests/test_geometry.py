@@ -145,26 +145,50 @@ def test_bbox_polygon_shape():
     assert g.signed_area(p) > 0
 
 
-def test_dissolve_salted_matches_unsalted(spark):
-    """Salted partial unions (grouped-map skew path) must cover the
-    same region as the single-level union — row-set semantics, checked
-    by point containment over a sample grid."""
-    import numpy as np
-    import pandas as pd
+def _annulus_with_island():
+    """400 buffers of 300 m on a 1.5 km circle around (-122.40, 37.75)
+    enclose an open disc; one more buffer 700 m east of the centre is an
+    island inside it. Every salted partial of the ring encloses the disc
+    too. Returns (centres, grid bounds, a point that must stay open, a
+    point that must stay covered)."""
+    cx, cy = -122.40, 37.75
+    dlat = 1500.0 / 111_320.0
+    dlon = dlat / np.cos(np.radians(cy))
+    th = np.linspace(0, 2 * np.pi, 400, endpoint=False)
+    island = (cx + dlon * 700 / 1500, cy)
+    ring = np.column_stack([cx + dlon * np.cos(th), cy + dlat * np.sin(th)])
+    return np.vstack([ring, [island]]), (cx - 0.03, cy - 0.02, cx + 0.03, cy + 0.02), (cx, cy), island
 
-    from gtfs_to_geojson_spark import geometry as geom
-    from gtfs_to_geojson_spark.operators import geoagg
 
+def _blob():
+    """One dense blob (hot cell) plus a few scattered buffers."""
     rng = np.random.default_rng(7)
-    # one dense blob (hot cell) + a few scattered buffers
-    centers = np.concatenate(
+    return np.concatenate(
         [
             np.column_stack(
                 [rng.uniform(-122.30, -122.28, 120), rng.uniform(37.78, 37.80, 120)]
             ),
             np.column_stack([rng.uniform(-122.5, -122.4, 10), rng.uniform(37.70, 37.75, 10)]),
         ]
-    )
+    ), (-122.52, 37.69, -122.26, 37.81), None, None
+
+
+@pytest.mark.parametrize(
+    "fixture,salts", [("blob", [30]), ("annulus", [300, 100])], ids=["blob", "annulus"]
+)
+def test_dissolve_salted_matches_unsalted(spark, fixture, salts):
+    """Salted partial unions (grouped-map skew path) must cover the
+    same region as the single-level union — row-set semantics, checked
+    by point containment over a sample grid — with the same rings: a
+    hole that every partial encloses stays open, once, and an island
+    inside it stays covered."""
+    import numpy as np
+    import pandas as pd
+
+    from gtfs_to_geojson_spark import geometry as geom
+    from gtfs_to_geojson_spark.operators import geoagg
+
+    centers, (x0, y0, x1, y1), open_pt, covered_pt = {"blob": _blob, "annulus": _annulus_with_island}[fixture]()
     polys_list = [
         [geom.buffer_point(lat, lon, 300.0, steps=12).tolist()] for lon, lat in centers
     ]
@@ -173,23 +197,33 @@ def test_dissolve_salted_matches_unsalted(spark):
         schema="polygon array<array<array<double>>>",
     )
     unsalted = [r["polygon"] for r in geoagg.dissolve_polygons(polys, cell_res=8, salt_target_rows=None).collect()]
-    salted = [r["polygon"] for r in geoagg.dissolve_polygons(polys, cell_res=8, salt_target_rows=30).collect()]
-    assert unsalted and salted
+    assert unsalted
 
-    gx, gy = np.meshgrid(
-        np.linspace(-122.52, -122.26, 60), np.linspace(37.69, 37.81, 60)
-    )
+    gx, gy = np.meshgrid(np.linspace(x0, x1, 60), np.linspace(y0, y1, 60))
     px, py = gx.ravel(), gy.ravel()
 
-    def contains(parts):
+    def contains(parts, x=px, y=py):
         return geom.points_in_multipolygon(
-            px, py, [[np.asarray(r) for r in poly] for poly in parts]
+            np.atleast_1d(x), np.atleast_1d(y), [[np.asarray(r) for r in poly] for poly in parts]
         )
 
-    a, b = contains(unsalted), contains(salted)
-    # identical coverage away from ring boundaries (vertex order may
-    # differ between association orders; allow a tiny epsilon band)
-    assert (a == b).mean() > 0.995
+    def ring_counts(parts):
+        return sorted(len(poly) for poly in parts)
+
+    if open_pt is not None:
+        assert not contains(unsalted, *open_pt)[0]
+        assert contains(unsalted, *covered_pt)[0]
+    for salt in salts:
+        salted = [r["polygon"] for r in geoagg.dissolve_polygons(polys, cell_res=8, salt_target_rows=salt).collect()]
+        assert salted
+        a, b = contains(unsalted), contains(salted)
+        # identical coverage away from ring boundaries (vertex order may
+        # differ between association orders; allow a tiny epsilon band)
+        assert (a == b).mean() > 0.995
+        if open_pt is not None:
+            assert ring_counts(salted) == ring_counts(unsalted), salt
+            assert not contains(salted, *open_pt)[0], salt
+            assert contains(salted, *covered_pt)[0], salt
 
 
 @pytest.mark.parametrize("cell_res", [None, 12])
@@ -200,13 +234,13 @@ def test_dissolve_keeps_no_hole_another_cell_fills(spark, cell_res):
     a neighbouring cell's buffer covers (vertex 25 of SH001_1)."""
     from gtfs_to_geojson_spark import synth
     from gtfs_to_geojson_spark.operators import formats, geoagg
-    from gtfs_to_geojson_spark.operators.filters import BaseQuery
+    from gtfs_to_geojson_spark.operators.filters import BaseQuery, one_group, trip_facts
     from gtfs_to_geojson_spark.plans.run_spec import RunSpec
     from gtfs_to_geojson_spark.sources.gtfs import feed_from_pandas
 
     pdf = synth.make_gtfs_feed(seed=1008, n_routes=3, n_stops=40, trips_per_route=4, stops_per_trip=8, shape_pts=16)
     feed = feed_from_pandas(spark, pdf)
-    buffers = formats._line_buffers(feed, RunSpec(), BaseQuery(), formats.Groups.single(feed)).select("polygon")
+    buffers = formats._line_buffers(feed, RunSpec(), trip_facts(feed, BaseQuery(), one_group(spark))).select("polygon")
     parts = [[np.asarray(r) for r in row["polygon"]] for row in geoagg.dissolve_polygons(buffers, cell_res=cell_res).collect()]
     assert any(len(p) > 1 for p in parts)  # the union has holes to check against
     used = pdf["shapes"][pdf["shapes"]["shape_id"].isin(pdf["trips"]["shape_id"])]

@@ -9,8 +9,15 @@ from gtfs_to_geojson_spark.operators.filters import (
     BaseQuery,
     apply_query,
     filter_used_stops,
+    group_table,
+    one_group,
     service_window,
+    trip_facts,
 )
+
+
+def _facts(feed):
+    return trip_facts(feed, BaseQuery(), one_group(feed["trips"].sparkSession))
 
 
 def test_service_window_overlap_semantics(feed):
@@ -35,7 +42,7 @@ def test_apply_query_eq_and_semi(feed):
 
 
 def test_used_stops_excludes_orphans(feed, feed_pd):
-    used = filter_used_stops(feed["stops"], feed["stop_times"], feed["trips"], BaseQuery())
+    used = filter_used_stops(feed["stops"], _facts(feed))
     got = {r["stop_id"] for r in used.select("stop_id").collect()}
     really_used = set(feed_pd["stop_times"]["stop_id"])
     non_parent = {
@@ -46,7 +53,7 @@ def test_used_stops_excludes_orphans(feed, feed_pd):
 
 
 def test_stops_with_routes_nested(feed):
-    sw = R.stops_with_routes(feed["stops"], feed["stop_times"], feed["trips"], feed["routes"], BaseQuery())
+    sw = R.stops_with_routes(feed["stops"], feed["routes"], _facts(feed))
     row = sw.filter(F.size("routes") > 0).first()
     r0 = row["routes"][0]
     assert r0["route_id"] is not None
@@ -79,12 +86,6 @@ def test_headsign_dedup_first_wins(spark):
     assert set(out["trip_id"]) == {"T1", "T2"}  # min trip_id wins
 
 
-def test_longest_trip_argmax(feed):
-    lt = R.longest_trip_per_route(feed["stop_times"], feed["trips"], BaseQuery()).toPandas()
-    # one winner per (route, direction)
-    assert lt.groupby(["route_id", "direction_id"], dropna=False).size().max() == 1
-
-
 def test_toposort_linear_and_cycle():
     # linear chain across two trips sharing a prefix
     pdf = pd.DataFrame(
@@ -106,11 +107,14 @@ def test_toposort_linear_and_cycle():
     assert R._toposort_stop_order(pdf2) == ["s1", "s2", "s5"]
 
 
-def test_stop_derived_linestrings(feed):
+def test_stop_derived_linestrings(spark, feed, feed_pd):
+    # one group per route: only the groups without shapes get lines,
+    # the no-shape routes (ri % 4 == 3): R003, R007, R011
+    rows = list(enumerate(sorted(feed_pd["routes"]["route_id"])))
+    groups = group_table(spark, rows, "_group int, route_id string not null")
     out = R.stop_derived_linestrings(
-        feed["stops"], feed["stop_times"], feed["trips"], feed["routes"], None, BaseQuery()
+        feed["stops"], feed["routes"], None, trip_facts(feed, BaseQuery(), groups)
     ).toPandas()
-    # only the no-shape routes (ri % 4 == 3): R003, R007, R011
     assert set(out["route_id"]) == {"R003", "R007", "R011"}
     for coords in out["coordinates"]:
         assert len(coords) >= 2
